@@ -24,8 +24,11 @@ import uuid
 from dataclasses import dataclass, field
 from typing import NamedTuple
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from eventsgateway_spark.operators import transforms
 from eventsgateway_spark.schemas import WIRE_EVENT_SCHEMA
@@ -51,6 +54,24 @@ class IngestResult(NamedTuple):
                 reason = row["reject_reason"]
                 out[reason] = out.get(reason, 0) + int(row["count"])
         return out
+
+
+def local_frame(
+    spark: SparkSession, rows: list[tuple], schema: T.StructType
+) -> DataFrame:
+    """Driver-side row tuples (in ``schema``'s field order) as a JVM
+    frame, shipped through Arrow: the frame is a local relation, so
+    no action on it runs a Python worker task. (``createDataFrame`` of
+    a list parallelizes pickled rows instead, and every action re-runs
+    their ``toInternal`` map in a Python task per partition.) A null
+    in a non-nullable field raises here, before any action."""
+    arrow_schema = to_arrow_schema(schema)
+    columns = zip(*rows) if rows else ([] for _ in schema.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(list(col), type=f.type) for col, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 @dataclass
@@ -86,7 +107,7 @@ class Gateway:
 
     #: Hard ceiling on a single flush. The buffer is a PRODUCER-LIBRARY
     #: analog (the reference client is also a driver-side buffer,
-    #: client/client.go): createDataFrame ships every row through the
+    #: client/client.go): local_frame ships every row through the
     #: driver, which is per-RPC granularity, not a data path. Bulk
     #: backfill belongs on the file/Kafka source path
     #: (sources/kafka.py / sources/lakehouse.py), where executors read
@@ -107,9 +128,9 @@ class Gateway:
                 "read it in parallel"
             )
         # build the frame BEFORE clearing: a schema-verification error
-        # in createDataFrame must leave the buffer intact (clearing
-        # first would destroy every buffered event, valid ones included)
-        df = self.spark.createDataFrame(self._buffer, WIRE_EVENT_SCHEMA)
+        # in local_frame must leave the buffer intact (clearing first
+        # would destroy every buffered event, valid ones included)
+        df = local_frame(self.spark, self._buffer, WIRE_EVENT_SCHEMA)
         self._buffer = []
         return df
 
@@ -122,7 +143,7 @@ class Gateway:
         micro-batches (generator of IngestResults) — the recovery path
         when a producer loop legitimately outran the single-flush
         ceiling (e.g. a long load test): each wave is a bounded
-        createDataFrame, so the driver never ships the whole backlog
+        local_frame, so the driver never ships the whole backlog
         as one row set. The buffer shrinks as waves are consumed; an
         abandoned generator leaves the remainder buffered."""
         while self._buffer:
@@ -131,11 +152,26 @@ class Gateway:
             # the wave from the buffer once its frame verified
             res = ingest(
                 self.spark,
-                self.spark.createDataFrame(rows, WIRE_EVENT_SCHEMA),
+                local_frame(self.spark, rows, WIRE_EVENT_SCHEMA),
                 max_message_bytes=self.max_message_bytes,
             )
             self._buffer = self._buffer[len(rows):]
             yield res
+
+
+def encode(spark: SparkSession, wire_df: DataFrame) -> transforms.ValidationSplit:
+    """validate (P1) → enrich (P5) → route (P6) → Avro-encode (S5):
+    ``valid`` carries the wire columns plus ``serverTimestamp``,
+    ``clientTimestamp``, ``sink_topic`` and the encoded ``value``;
+    ``quarantine`` the invalid envelopes with ``reject_reason``. The
+    one definition of the pipeline up to the size check, shared by
+    ``ingest`` and the serving path (ingest_http.ingest_events)."""
+    valid, quarantine = transforms.validate(wire_df)
+    enriched = transforms.route_topic(transforms.enrich(valid))
+    return transforms.ValidationSplit(
+        valid=enriched.withColumn("value", to_avro_col(spark)),
+        quarantine=quarantine,
+    )
 
 
 def ingest(
@@ -145,14 +181,12 @@ def ingest(
 ) -> IngestResult:
     """The server pipeline as one logical plan:
 
-    validate (P1) → enrich (P5) → route (P6) → Avro-encode (S5) →
-    size-limit (P2) → Kafka-shaped payload (sink_topic, key, value).
+    ``encode`` (validate → enrich → route → Avro) → size-limit (P2) →
+    Kafka-shaped payload (sink_topic, key, value).
 
     Works identically on batch and streaming DataFrames.
     """
-    valid, quarantine = transforms.validate(wire_df)
-    enriched = transforms.route_topic(transforms.enrich(valid))
-    encoded = enriched.withColumn("value", to_avro_col(spark))
+    encoded, quarantine = encode(spark, wire_df)
     kept, oversized = transforms.size_limit(encoded, "value", max_message_bytes)
     payloads = kept.select(
         F.col("sink_topic").alias("topic"),

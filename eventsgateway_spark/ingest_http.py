@@ -25,10 +25,10 @@ under test):
 
 Failure-index mechanics: the request index rides the pipeline as an
 extra ``_idx`` column (every stage is a filter/withColumn, so it flows
-untouched into the quarantine and oversized side-outputs) and the
-response indexes are read back from those side-outputs — the verdict
-comes from the SAME plan that produced the payloads, never from
-re-implemented driver-side validation.
+untouched into the quarantine and the encoded rows) and the response
+indexes are read back from one collected outcome frame — the verdict
+and the published payloads come from the SAME evaluation of the plan,
+never from re-implemented driver-side validation.
 
 Scale posture: one request = one micro-batch = a handful of driver-side
 rows, exactly the reference's per-RPC granularity; bulk backfill goes
@@ -44,11 +44,13 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from eventsgateway_spark.gateway import IngestResult, ingest
+from eventsgateway_spark.gateway import encode, local_frame
 from eventsgateway_spark.operators import transforms
 from eventsgateway_spark.schemas import WIRE_EVENT_SCHEMA
+from eventsgateway_spark.sources.kafka import PAYLOAD_SCHEMA
 
 #: Wire envelope + the request-index passthrough column — DERIVED from
 #: the canonical wire schema (fields forced nullable so validation,
@@ -120,35 +122,49 @@ def ingest_events(
 
     The index list is sorted and unique, matching the semantics (not
     the goroutine-append ordering) of the reference's FailureIndexes.
-    Serving-path job count: the two side-outputs are read in ONE
-    unioned collect, so a request costs two Spark jobs (verdict +
-    sink), not three."""
+
+    Per-request shape: two Spark jobs and one Python-worker task. The
+    verdict job collects ONE tagged outcome frame — the quarantine
+    rows unioned with the encoded valid rows, the size verdict a
+    column — so the Avro encode runs once (the only Python task, and
+    none with native ``to_avro``). The sink job publishes the collected
+    bytes of the accepted rows, in request order, from a local
+    relation: the published payloads are the bytes the size check saw,
+    and no encode or ``current_timestamp()`` is re-run for them."""
     if not events:
         return [], {}
     rows, reasons = _wire_rows(events)
-    if rows:
-        # ONE partition per request: the default createDataFrame slices
-        # a request's handful of rows across defaultParallelism (32
-        # locally), so every serving action schedules 32 tasks — each
-        # with a Python-worker round for the Avro encode — and the bus
-        # write commits 32 part files. A single explicit slice makes
-        # each request one task and one part file end-to-end (measured
-        # 4.1-6.7 s -> 1.6-1.9 s per 50-event RPC on an idle local[32];
-        # coalesce(1) is NOT equivalent — its unioned parent locality
-        # preferences stall task placement on spark.locality.wait,
-        # measured ~5 s/action). Backfill stays on the partitioned
-        # file/Kafka source path (module docstring), never this one.
-        wire = spark.createDataFrame(
-            spark.sparkContext.parallelize(rows, 1), _HTTP_WIRE_SCHEMA
+    if not rows:
+        return sorted(reasons), reasons
+    # one partition per request, so each job is one task per union
+    # branch and the bus write commits one part file; both frames are
+    # local relations with no locality preference to wait on
+    wire = local_frame(spark, rows, _HTTP_WIRE_SCHEMA).coalesce(1)
+    encoded, quarantine = encode(spark, wire)
+    fits = transforms.size_condition("value", max_message_bytes)
+    outcome = quarantine.select(
+        "_idx",
+        "reject_reason",
+        F.lit(None).cast("string").alias("topic"),
+        F.lit(None).cast("binary").alias("value"),
+    ).unionByName(
+        encoded.select(
+            "_idx",
+            F.when(~fits, F.lit(transforms.TOO_LARGE)).alias("reject_reason"),
+            F.col("sink_topic").alias("topic"),
+            F.when(fits, F.col("value")).alias("value"),
         )
-        res: IngestResult = ingest(spark, wire, max_message_bytes=max_message_bytes)
-        side = res.quarantine.select("_idx", "reject_reason").unionByName(
-            res.oversized.select("_idx", "reject_reason")
-        )
-        for row in side.collect():
+    )
+    accepted = []
+    for row in outcome.collect():
+        if row["reject_reason"] is None:
+            accepted.append((row["_idx"], row["topic"], row["value"]))
+        else:
             reasons[int(row["_idx"])] = row["reject_reason"]
-        if sink is not None:
-            sink(res.payloads)
+    if sink is not None:
+        accepted.sort()
+        payloads = [(topic, None, value) for _, topic, value in accepted]
+        sink(local_frame(spark, payloads, PAYLOAD_SCHEMA).coalesce(1))
     return sorted(reasons), reasons
 
 

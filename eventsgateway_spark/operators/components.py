@@ -138,24 +138,30 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> CCResult:
                 edges=e,
             )
         iterations = 0
-        while iterations < max_iter:
-            e_next, sig_next = _checkpoint_with_signature(
-                _small_star(_large_star(e))
-            )
-            # the new checkpoint is materialized, so the previous
-            # round's blocks are dead weight — free them now instead
-            # of at driver GC (r16: repeated CC runs in one session
-            # otherwise accumulate every round's blocks)
+        try:
+            while iterations < max_iter:
+                e_next, sig_next = _checkpoint_with_signature(
+                    _small_star(_large_star(e))
+                )
+                # the new checkpoint is materialized, so the previous
+                # round's blocks are dead weight — free them now instead
+                # of at driver GC (repeated CC runs in one session
+                # otherwise accumulate every round's blocks)
+                prev, e = e, e_next
+                release_frame(prev)
+                iterations += 1
+                if sig_next == sig:
+                    break
+                sig = sig_next
+            else:
+                raise RuntimeError(
+                    f"star contraction did not converge in {max_iter} rounds"
+                )
+        except BaseException:
+            # no caller ever sees the current round's checkpoint on a
+            # raise (non-convergence or a failed round): free it here
             release_frame(e)
-            e = e_next
-            iterations += 1
-            if sig_next == sig:
-                break
-            sig = sig_next
-        else:
-            raise RuntimeError(
-                f"star contraction did not converge in {max_iter} rounds"
-            )
+            raise
     finally:
         spark.conf.set(_CP, prev_cp)
     # Converged edge set is a forest of stars (child → component-min

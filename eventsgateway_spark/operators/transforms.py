@@ -110,14 +110,24 @@ def to_storage(df: DataFrame) -> DataFrame:
     return df.select("id", "name", "props", "serverTimestamp", "clientTimestamp")
 
 
+#: reject_reason of a payload that fails size_condition().
+TOO_LARGE = "too_large"
+
+
+def size_condition(payload_col: str, max_bytes: int = DEFAULT_MAX_MESSAGE_BYTES) -> F.Column:
+    """P2 — true when the encoded payload fits: strictly shorter than
+    max_bytes (server/sender/kafka.go:76-82). Applied after encoding,
+    on the binary column, like the reference checks len(Avro bytes)."""
+    return F.length(F.col(payload_col)) < F.lit(max_bytes)
+
+
 def size_limit(df: DataFrame, payload_col: str, max_bytes: int = DEFAULT_MAX_MESSAGE_BYTES) -> ValidationSplit:
-    """P2 — drop events whose encoded payload is ≥ max_bytes
-    (server/sender/kafka.go:76-82). Applied after encoding, on the
-    binary column, like the reference checks len(Avro bytes)."""
-    cond = F.length(F.col(payload_col)) < F.lit(max_bytes)
+    """P2 — split off events whose encoded payload fails
+    size_condition() as ``too_large``."""
+    cond = size_condition(payload_col, max_bytes)
     return ValidationSplit(
         valid=df.filter(cond),
-        quarantine=df.filter(~cond).withColumn("reject_reason", F.lit("too_large")),
+        quarantine=df.filter(~cond).withColumn("reject_reason", F.lit(TOO_LARGE)),
     )
 
 

@@ -127,3 +127,23 @@ def test_q13_tolerates_malformed_client_json(spark, tmp_path):
            for r in QUERIES["q13_props_json_extract"](spark, str(tmp_path)).collect()}
     # valid k=12 -> bucket 1; dirty + missing -> the sentinel bucket
     assert out == {1: 1, -2147483648: 2}
+
+
+def test_non_convergence_raise_releases_checkpoints(spark):
+    """The non-convergence raise must not strand the last round's
+    checkpoint: a 64-node chain needs several rounds, so max_iter=1
+    raises, and no RDD holds stored blocks that did not before the
+    call. (Ids, not a count: earlier tests' asynchronous releases may
+    still shrink the census meanwhile.)"""
+    import pytest
+
+    def stored_rdds() -> set[int]:
+        return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+    df = spark.createDataFrame(
+        [(i, i + 1) for i in range(63)], "u bigint, v bigint"
+    )
+    before = stored_rdds()
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+        connected_components(df, max_iter=1)
+    assert stored_rdds() <= before

@@ -2187,12 +2187,15 @@ def test_unpin_all_evicts_session_caches(spark):
     sf01 = "/root/testdata/sf0.1"
     if not os.path.exists(os.path.join(sf01, "documents.parquet")):
         pytest.skip("sf0.1 fixture absent")
-    assert u.doc_tokens_frame(spark, sf01) is not None
-    assert es.norm_frame(spark, sf01) is not None
-    assert u._DOCTOK_CACHE and es._NORM_CACHE
-    u.unpin_all()
-    for cache in u._SESSION_CACHES:
-        assert not cache, "unpin_all left a session cache populated"
+    try:
+        assert u.doc_tokens_frame(spark, sf01) is not None
+        assert es.norm_frame(spark, sf01) is not None
+        assert u._DOCTOK_CACHE and es._NORM_CACHE
+        u.unpin_all()
+        for cache in u._SESSION_CACHES:
+            assert not cache, "unpin_all left a session cache populated"
+    finally:
+        u.unpin_all()  # a failed assert must not leave the caches pinned
 
 
 def test_media_batch_kernels_match_scalar_law():

@@ -294,3 +294,127 @@ def test_null_prop_value_quarantined_not_crash(spark):
     q = {r["name"]: r["reject_reason"] for r in res.quarantine.collect()}
     assert q == {"bad": "null_prop_value"}
     assert res.payloads.count() == 1
+
+
+def _group_counts(spark, group: str) -> tuple[int, int]:
+    """(jobs, tasks) Spark ran under job group ``group``."""
+    tracker = spark.sparkContext.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    tasks = sum(
+        tracker.getStageInfo(stage).numTasks
+        for job in jobs
+        for stage in tracker.getJobInfo(job).stageIds
+    )
+    return len(jobs), tasks
+
+
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_ingest_events_request_shape(spark, tmp_path, monkeypatch):
+    """One 50-event request is two Spark jobs and one Python-worker
+    task: a verdict job of one task per union branch (quarantine rows,
+    encoded rows) whose plan evaluates the Avro encode once, and a
+    publish job of one task and one part file that reads a local
+    relation (no RDD scan, no Python UDF). Counts, not timings, so the
+    shape holds on any host."""
+    import os
+
+    from eventsgateway_spark.sources.avro_codec import native_avro_available
+
+    sc = spark.sparkContext
+    bus = FileBus(spark, str(tmp_path / "bus"))
+    events = [
+        {**GOOD, "id": f"s-{i}", "timestamp": GOOD["timestamp"] + i}
+        for i in range(50)
+    ]
+    events[7] = {**events[7], "id": ""}  # one quarantine row
+    assert ingest_events(spark, events, bus.produce)[0] == [7]  # warm-up
+
+    collected, published = [], []
+    frame_cls = type(spark.range(1))  # the classic DataFrame subclass
+    collect = frame_cls.collect
+
+    def spy(df):
+        collected.append(df)
+        return collect(df)
+
+    def sink(payloads):
+        published.append(payloads)
+        sc.setJobGroup("shape-publish", "publish")
+        bus.produce(payloads)
+
+    monkeypatch.setattr(frame_cls, "collect", spy)
+    before = set(os.listdir(bus.root))
+    sc.setJobGroup("shape-verdict", "verdict")
+    try:
+        fail, _ = ingest_events(spark, events, sink)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert fail == [7]
+
+    assert _group_counts(spark, "shape-verdict") == (1, 2)
+    assert _group_counts(spark, "shape-publish") == (1, 1)
+    (new_batch,) = set(os.listdir(bus.root)) - before
+    parts = [f for f in os.listdir(os.path.join(bus.root, new_batch))
+             if f.endswith(".parquet")]
+    assert len(parts) == 1
+
+    (outcome,) = collected
+    python_evals = 0 if native_avro_available(spark) else 1
+    assert _executed_plan(outcome).count("EvalPython") == python_evals
+    (payloads,) = published
+    sink_plan = _executed_plan(payloads)
+    for marker in ("ExistingRDD", "PythonRDD", "EvalPython", "PythonUDF"):
+        assert marker not in sink_plan, sink_plan
+
+
+def test_verdict_and_publish_from_one_evaluation(spark, tmp_path):
+    """The published bytes are the bytes the size check saw: accepted
+    records decode to the request's fields in request order, with one
+    serverTimestamp stamped inside the call; the size boundary is
+    strict (encoded length max-1 is accepted, max is rejected); a
+    request whose every event is rejected publishes no rows."""
+    import time
+
+    from eventsgateway_spark.sources.avro_codec import encode_event
+
+    bus = FileBus(spark, str(tmp_path / "bus"))
+    events = [
+        {**GOOD, "id": f"o-{i:02d}", "props": {"k": f"v{i}", "n": str(i)},
+         "timestamp": GOOD["timestamp"] + 1000 * i}
+        for i in range(12)
+    ]
+    events[3] = {**events[3], "timestamp": 0}  # missing_timestamp
+    # indexes 10 and 11 encode one byte apart at the size boundary
+    events[10]["props"] = {"big": "x" * 200}
+    events[11]["props"] = {"big": "x" * 201}
+    fits = len(encode_event(events[10]["id"], GOOD["name"], events[10]["props"],
+                            int(time.time() * 1000), events[10]["timestamp"]))
+    max_bytes = fits + 1
+
+    t0 = int(time.time() * 1000)
+    fail, reasons = ingest_events(spark, events, bus.produce, max_bytes)
+    t1 = int(time.time() * 1000) + 1
+    assert fail == [3, 11]
+    assert reasons == {3: "missing_timestamp", 11: "too_large"}
+
+    rows = bus.consume_batch().collect()
+    recs = [decode_event(bytes(r["value"])) for r in rows]
+    accepted = [ev for i, ev in enumerate(events) if i not in (3, 11)]
+    assert [r["id"] for r in recs] == [ev["id"] for ev in accepted]
+    assert [r["props"] for r in recs] == [ev["props"] for ev in accepted]
+    assert [r["clientTimestamp"] for r in recs] == [
+        ev["timestamp"] for ev in accepted]
+    (server_ts,) = {r["serverTimestamp"] for r in recs}
+    assert t0 <= server_ts <= t1
+    assert {r["topic"] for r in rows} == {"sv-uploads-sometopic"}
+    assert len(rows[-1]["value"]) == max_bytes - 1  # index 10, accepted
+
+    fail, reasons = ingest_events(
+        spark, [{**GOOD, "id": ""}, {**GOOD, "name": ""}], bus.produce
+    )
+    assert fail == [0, 1]
+    assert reasons == {0: "missing_id", 1: "missing_name"}
+    assert bus.consume_batch().count() == len(rows)

@@ -304,29 +304,49 @@ def unpin_all() -> None:
 # escape both scaleprobe and the bench eviction). Modules register
 # their cache dict at definition time via ``session_cache({})``; both
 # ``unpin_all()`` and scaleprobe's growth sweep clear THE SAME list,
-# so no cache can ride a timed measurement. Cache values are
-# ``(fingerprint, DataFrame)`` or ``(fingerprint, tuple[DataFrame])``.
+# so no cache can ride a timed measurement.
 # ---------------------------------------------------------------------------
 _SESSION_CACHES: list[dict] = []
 
 
 def session_cache(cache: dict) -> dict:
     """Register (and return) a session-scoped lineage cache so that
-    ``clear_session_caches()`` / ``unpin_all()`` can evict it."""
+    ``clear_session_caches()`` / ``unpin_all()`` can evict it.
+
+    Value contract: every value is a 2-tuple ``(fingerprint, frames)``
+    where ``frames`` is a ``DataFrame`` or a ``tuple[DataFrame, ...]``;
+    those frames are what eviction releases."""
     _SESSION_CACHES.append(cache)
     return cache
 
 
 def clear_session_caches() -> None:
-    """Release and empty every registered session cache."""
+    """Release and empty every registered session cache.
+
+    Each entry is released on its own, so a value that breaks the
+    ``session_cache()`` contract cannot keep the others pinned: it is
+    dropped with its cache, and once every cache is empty a
+    ``TypeError`` names it."""
+    malformed = []
     for cache in _SESSION_CACHES:
-        for entry in cache.values():
-            frames = entry[1]
+        for key, entry in cache.items():
+            frames = entry[1] if isinstance(entry, tuple) and len(entry) == 2 else None
             if isinstance(frames, DataFrame):
                 frames = (frames,)
+            if not (
+                isinstance(frames, tuple)
+                and all(isinstance(df, DataFrame) for df in frames)
+            ):
+                malformed.append(key)
+                continue
             for df in frames:
                 release_frame(df)
         cache.clear()
+    if malformed:
+        raise TypeError(
+            "session cache values must be (fingerprint, DataFrame | "
+            f"tuple[DataFrame]); dropped malformed entries {malformed!r}"
+        )
 
 
 # Session-scoped cache of THE tokenized-documents lineage (r15, guide

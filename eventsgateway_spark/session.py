@@ -30,9 +30,19 @@ _DEFAULT_CONFS = {
     # Columnar snappy parquet at rest mirrors the reference's snappy-on-Kafka
     # + ORC/Delta-at-rest posture (server/forwarder/kafka.go:42, Makefile:23).
     "spark.sql.parquet.compression.codec": "snappy",
-    # 128 MiB scan splits — the sweet spot for large parquet scans; small
-    # local test files produce one split regardless.
+    # File-scan splits follow bytes only. Spark sizes a split as
+    #   min(maxPartitionBytes, max(openCostInBytes, totalBytes / minPartitionNum))
+    # where totalBytes charges every file its length plus the 4 MiB
+    # open cost, and minPartitionNum defaults to the core count. With
+    # that default a scan of k small files (a bus micro-batch is k
+    # ~40 KB RPC files) becomes min(k, cores) tasks, each paying a
+    # Python-worker decode and a parquet writer per day directory it
+    # touches — a fixed per-task cost that grows with the cluster.
+    # minPartitionNum = 1 packs such a scan into ceil(totalBytes / 128 MiB)
+    # splits (one at micro-batch size); the 128 MiB cap still splits a
+    # large input to full width, so the rule is a floor, never a cap.
     "spark.sql.files.maxPartitionBytes": "134217728",
+    "spark.sql.files.minPartitionNum": "1",
     "spark.ui.enabled": "false",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
 }

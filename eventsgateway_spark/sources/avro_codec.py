@@ -279,7 +279,11 @@ def to_avro_col(spark: SparkSession) -> Column:
     from eventsgateway_spark.shipping import ship_package
 
     ship_package(spark)  # fallback codec pickles by module reference
-    enc = F.pandas_udf(_pandas_encode, "binary")
+    # Nondeterministic only to the optimizer: it then neither pushes a
+    # filter on the encoded bytes (size_limit) through the projection
+    # that computes them nor collapses that projection into its
+    # consumers, either of which would run this Python UDF twice.
+    enc = F.pandas_udf(_pandas_encode, "binary").asNondeterministic()
     return enc("id", "name", props, "serverTimestamp", "clientTimestamp")
 
 

@@ -6,11 +6,16 @@ has no Delta jars, so the engine writes snappy parquet with the same
 layout; on a Delta-enabled cluster, pass ``fmt="delta"``.
 
 Scale notes (100 TB): partitioning by event-time date keeps partition
-pruning effective for the dominant time-ranged queries; within a
-partition, files are sized by ``spark.sql.files.maxPartitionBytes``-
-friendly target (~128 MB). A second-level clustering key (e.g. name)
-would be a Z-order candidate on Delta; with plain parquet we sort
-within partitions instead (``sort_within``).
+pruning effective for the dominant time-ranged queries. Within a
+partition, file size follows the scan split: the session packs an
+input into ~128 MiB (``spark.sql.files.maxPartitionBytes``) splits
+regardless of core count (session.py), and each split's task writes
+one file per day directory it touches — so a streaming micro-batch
+of small bus files lands one file per day directory per ~128 MiB
+split, and ``compact_partition`` merges a day's accumulated
+micro-batch files into ~128 MiB files. A second-level clustering key
+(e.g. name) would be a Z-order candidate on Delta; with plain parquet
+we sort within partitions instead (``sort_within``).
 """
 
 from __future__ import annotations
@@ -133,8 +138,9 @@ def compact_partition(
     """Rewrite ONE date partition into ~``target_bytes`` files — the
     plain-parquet analog of Delta OPTIMIZE for the streaming sink's
     small-file problem (each micro-batch commit lands one file per
-    task; a day of 1-minute triggers is ~1440+ tiny files, which
-    degrades scan planning and shuffle-free reads at scale).
+    day directory per ~128 MiB scan split; a day of 1-minute triggers
+    is still ~1440+ small files, which degrades scan planning and
+    shuffle-free reads at scale).
 
     Reads just the target partition (directory-pruned), coalesces to
     ``ceil(bytes/target)`` files, re-sorts the cluster column, and

@@ -8,6 +8,13 @@ partitioned table. End-to-end delivery is at-least-once from the
 producer (duplicates possible — README.md:11-17) and exactly-once from
 bus to table (checkpoint + transactional file commit), so semantic
 dedup stays a downstream operator (streaming/dedup.py).
+
+Per-micro-batch shape: the session's byte-derived scan splits
+(session.py) pack a batch's bus files into ceil(bytes / 128 MiB)
+tasks — one for a batch of RPC-sized files, whatever the core count.
+Each task runs the Avro decode once (one Python-worker task on the
+fallback codec) and writes one file per year/month/day directory its
+events touch, so a small batch adds one file per day directory.
 """
 
 from __future__ import annotations

@@ -2198,6 +2198,36 @@ def test_unpin_all_evicts_session_caches(spark):
         u.unpin_all()  # a failed assert must not leave the caches pinned
 
 
+def test_clear_session_caches_survives_malformed_entry(spark):
+    """One cache value that breaks the ``(fingerprint, DataFrame |
+    tuple[DataFrame])`` contract must not stop the rest from being
+    released: every well-formed frame — in later caches and later in
+    the same cache — is unpersisted, every cache is emptied, and the
+    malformed entry is still reported."""
+    import eventsgateway_spark.queries._util as u
+
+    frames = [spark.range(3).persist() for _ in range(3)]
+    for df in frames:
+        df.count()
+    bad_cache = {"bad": "not-a-pair", "ok": ("fp", frames[0])}
+    good_cache = {"one": ("fp", frames[1]), "many": ("fp", (frames[2],))}
+    u._SESSION_CACHES.insert(0, bad_cache)
+    u._SESSION_CACHES.append(good_cache)
+    try:
+        with pytest.raises(TypeError, match="'bad'"):
+            u.clear_session_caches()
+        assert not bad_cache and not good_cache
+        assert not any(df.is_cached for df in frames)
+    finally:
+        # by identity: list.remove() compares by value and would take
+        # out the first registered cache that is also empty
+        u._SESSION_CACHES[:] = [
+            c for c in u._SESSION_CACHES if c is not bad_cache and c is not good_cache
+        ]
+        for df in frames:
+            df.unpersist()
+
+
 def test_media_batch_kernels_match_scalar_law():
     """r16 vectorization (guide §4.2): the batched dhash/afp kernels
     and the fast WAV chunk walk must reproduce the scalar law bit for

@@ -19,6 +19,7 @@ from eventsgateway_spark.streaming.pipeline import run_etl
 from eventsgateway_spark.streaming import windows as SW
 from eventsgateway_spark.streaming.dedup import dedup_by_id
 from tests.conftest import SF_ORACLE
+from tests.test_ingest_http import _group_counts
 
 T0 = 1704067200000  # 2024-01-01 00:00:00 UTC
 
@@ -53,6 +54,91 @@ def test_end_to_end_ingest_etl_query(spark, tmp_path):
     assert got == {"m1", "m2", "m3"}
     # topic was consumed for routing and dropped from storage (S5 semantics)
     assert "topic" not in out.columns
+
+
+def _publish_rpcs(spark, bus: FileBus, k: int) -> int:
+    """Publish ``k`` 50-event SendEvents requests to ``bus`` (one part
+    file each, as the serving path writes them); event i of every
+    request lands on day i % 25. Returns the number of events."""
+    from eventsgateway_spark.ingest_http import ingest_events
+
+    for r in range(k):
+        events = [
+            {"id": f"r{r}-{i}", "name": "match_started", "topic": "t",
+             "props": {"i": str(i)}, "timestamp": T0 + (i % 25) * 86_400_000 + i}
+            for i in range(50)
+        ]
+        assert ingest_events(spark, events, bus.produce)[0] == []
+    return 50 * k
+
+
+def _part_files(root: str) -> list[str]:
+    return [
+        os.path.join(dp, f)
+        for dp, _, files in os.walk(root)
+        for f in files
+        if f.startswith("part-") and f.endswith(".parquet")
+    ]
+
+
+def test_small_bus_files_read_as_one_split(spark, tmp_path):
+    """File-scan splits follow bytes, not cores: the bus files of four
+    RPCs (~10 KB each, far under the 128 MiB split) are one task,
+    whatever local[N] the session runs."""
+    bus = FileBus(spark, str(tmp_path / "bus"))
+    _publish_rpcs(spark, bus, 4)
+    assert len(_part_files(bus.root)) == 4
+    assert bus.consume_batch().rdd.getNumPartitions() == 1
+
+
+def test_split_rule_is_a_floor_not_a_cap(spark, tmp_path):
+    """Packing small files into one split must not cap the width of a
+    large input: with a 64 KiB split target and no open cost, files
+    totalling more than N targets read as at least N partitions."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    target = 64 << 10
+    src = tmp_path / "wide"
+    src.mkdir()
+    for f in range(4):  # ~100 KiB of incompressible bytes per file
+        blobs = pa.table({"b": [os.urandom(1024) for _ in range(100)]})
+        pq.write_table(blobs, str(src / f"part-{f}.parquet"), compression="none")
+    total = sum(os.path.getsize(p) for p in _part_files(str(src)))
+
+    session = spark.newSession()
+    assert session.conf.get("spark.sql.files.minPartitionNum") == "1"
+    session.conf.set("spark.sql.files.maxPartitionBytes", str(target))
+    session.conf.set("spark.sql.files.openCostInBytes", "0")
+    n = total // target
+    assert n >= 6
+    assert session.read.parquet(str(src)).rdd.getNumPartitions() >= n
+
+
+def test_etl_micro_batch_is_one_task_one_file_per_day(spark, tmp_path):
+    """A micro-batch of four RPC files is one Spark task: the Avro
+    decode runs in one Python task and each year/month/day directory
+    gets one part file, not one per bus file."""
+    bus = FileBus(spark, str(tmp_path / "bus"))
+    n_events = _publish_rpcs(spark, bus, 4)
+    table = str(tmp_path / "events_table")
+    q = run_etl(
+        spark,
+        bus.consume_stream(max_files_per_trigger=4),
+        table,
+        str(tmp_path / "ckpt"),
+    )
+    q.awaitTermination(120)
+
+    assert [p["numInputRows"] for p in q.recentProgress if p["numInputRows"]] == [
+        n_events
+    ]
+    _, tasks = _group_counts(spark, str(q.runId))  # the stream's job group
+    assert tasks == 1
+    day_dirs = {os.path.dirname(p) for p in _part_files(table)}
+    assert len(day_dirs) == 25
+    assert len(_part_files(table)) == len(day_dirs)
+    assert read_events_table(spark, table).count() == n_events
 
 
 def test_tumbling_window_counts_batch_streaming_parity(spark, tmp_path):

@@ -206,27 +206,6 @@ def _broadcast_words(spark: SparkSession, bf: BloomFilter):
     return bc
 
 
-def drop_broadcast(spark: SparkSession, bf: BloomFilter) -> None:
-    """Evict ``bf``'s broadcast (if cached) and unpersist it — for
-    callers that hold their own filter cache above this one and want
-    eviction to actually release executor/driver copies (unpersist,
-    not destroy: a still-pinned frame can lazily re-fetch)."""
-    import hashlib
-
-    key = (
-        spark.sparkContext.applicationId,
-        hashlib.sha1(bf.words.tobytes()).hexdigest(),
-        bf.m_bits,
-        bf.k,
-    )
-    bc = _BCAST_CACHE.pop(key, None)
-    if bc is not None:
-        try:
-            bc.unpersist()
-        except Exception:
-            pass  # stopped context
-
-
 def bloom_probe_count_udf(spark: SparkSession, bf: BloomFilter):
     """Arrow-batched pandas UDF ``array<bigint> -> bigint``: how many of
     a row's element hashes probe positive. The bitset rides one

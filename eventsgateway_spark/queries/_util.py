@@ -68,11 +68,15 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 # Leaf-input size below which a frame is "fixture-scale": per-task
-# scheduling and materialization overhead dominate real work, so the
-# scale helpers (spread / pin) become identity. 256 KB splits the
-# driver's oracle fixtures (sf0.01 documents ≈ 65 KB) from the bench
-# scale (sf0.1 documents ≈ 580 KB) and is 3 orders of magnitude below
-# anything a real cluster would scan.
+# scheduling and materialization overhead dominate real work, so pin()
+# and spread() become identity (the q38/q85 LSH-geometry and q70/q94
+# Arrow-kernel selections in ext_similarity read the same rule).
+# Every other part
+# of a query's lineage is the same at every scale, so the DuckDB
+# oracle checks the plan the bench times up to those two helpers.
+# 256 KB splits the driver's oracle fixtures (sf0.01 documents
+# ≈ 65 KB) from the bench scale (sf0.1 documents ≈ 580 KB) and is 3
+# orders of magnitude below anything a real cluster would scan.
 FIXTURE_INPUT_BYTES = 256 << 10
 
 
@@ -152,19 +156,17 @@ def pin(df: DataFrame, mode: str = "checkpoint") -> DataFrame:
       and the consumers' exchanges are canonically identical (measured
       3.7× faster than checkpoint on q31's band self-join at sf0.1).
 
-    ``SPARK_GRAFT_PIN_MODE`` overrides every call site for A/B runs.
     At fixture scale any materialization job costs more than the
-    recompute it saves, so the frame is returned untouched. 100 TB
-    posture: a long-lived pinned frame should graduate to a
-    persisted/bucketed table (SCALE.md)."""
-    if is_fixture_scale(df):
-        return df
-    mode = os.environ.get("SPARK_GRAFT_PIN_MODE", mode)
+    recompute it saves, so the frame is returned untouched. A persist
+    pin lives until ``unpin_all()`` or the next registry query's
+    ``unpin_others`` releases it; checkpoint blocks are left to
+    Spark's ContextCleaner. 100 TB posture: a long-lived pinned frame
+    should graduate to a persisted/bucketed table (SCALE.md)."""
     if mode not in ("off", "persist", "checkpoint"):
-        # a typo'd env override silently benchmarking the WRONG
-        # strategy would corrupt the A/B conclusions above
+        # checked at every scale: a typo'd mode must fail in the
+        # fixture-scale tests, not first in a bench run
         raise ValueError(f"unknown pin mode {mode!r} (off|persist|checkpoint)")
-    if mode == "off":
+    if mode == "off" or is_fixture_scale(df):
         return df
     if mode == "persist":
         # LAZY persist (r15, guide §1.2/§5): the old eager `df.count()`
@@ -278,154 +280,32 @@ def unpin_others(current: str) -> None:
 
 
 def unpin_all() -> None:
-    """Release every frame the current query left behind: pin() frames
-    AND the session-scoped derived-lineage caches (called between
-    bench.py / scaleprobe iterations).
-
-    Round 16 (VERDICT r15 #1): the r15 session caches were deliberately
-    held outside ``_PINNED`` so that bench.py's between-query cleanup
-    would not evict them — which moved their build cost out of the
-    timed region instead of removing it. The bench's isolation contract
-    is that ``unpin_all()`` returns the session to a cold state, so the
-    caches are now evicted here too: every timed sample pays the full
-    cost of whatever lineages the query builds, and the caches only
-    dedup RE-USE WITHIN one query execution (q91 consuming both media
-    pair frames, q33 consuming norm_frame on both join sides) plus
-    long-lived sessions that never call unpin_all (notebooks)."""
+    """Release every persist pin (called between bench.py / qprof /
+    scaleprobe samples). Queries keep no other state between
+    executions: each builds its whole lineage on every call."""
     while _PINNED:
         _release(_PINNED.pop()[1])
-    clear_session_caches()
 
 
-# ---------------------------------------------------------------------------
-# Central registry of every session-scoped derived-lineage cache
-# (VERDICT r15 #4: the only enumeration used to live in scaleprobe's
-# clear-list, importing module privates — a new cache could silently
-# escape both scaleprobe and the bench eviction). Modules register
-# their cache dict at definition time via ``session_cache({})``; both
-# ``unpin_all()`` and scaleprobe's growth sweep clear THE SAME list,
-# so no cache can ride a timed measurement.
-# ---------------------------------------------------------------------------
-_SESSION_CACHES: list[dict] = []
-
-
-def session_cache(cache: dict) -> dict:
-    """Register (and return) a session-scoped lineage cache so that
-    ``clear_session_caches()`` / ``unpin_all()`` can evict it.
-
-    Value contract: every value is a 2-tuple ``(fingerprint, frames)``
-    where ``frames`` is a ``DataFrame`` or a ``tuple[DataFrame, ...]``;
-    those frames are what eviction releases."""
-    _SESSION_CACHES.append(cache)
-    return cache
-
-
-def clear_session_caches() -> None:
-    """Release and empty every registered session cache.
-
-    Each entry is released on its own, so a value that breaks the
-    ``session_cache()`` contract cannot keep the others pinned: it is
-    dropped with its cache, and once every cache is empty a
-    ``TypeError`` names it."""
-    malformed = []
-    for cache in _SESSION_CACHES:
-        for key, entry in cache.items():
-            frames = entry[1] if isinstance(entry, tuple) and len(entry) == 2 else None
-            if isinstance(frames, DataFrame):
-                frames = (frames,)
-            if not (
-                isinstance(frames, tuple)
-                and all(isinstance(df, DataFrame) for df in frames)
-            ):
-                malformed.append(key)
-                continue
-            for df in frames:
-                release_frame(df)
-        cache.clear()
-    if malformed:
-        raise TypeError(
-            "session cache values must be (fingerprint, DataFrame | "
-            f"tuple[DataFrame]); dropped malformed entries {malformed!r}"
-        )
-
-
-# Session-scoped cache of THE tokenized-documents lineage (r15, guide
-# §2.4 "remove shuffles outright" / §1.2 "don't compute things twice"):
-# ~14 text-family queries each open the bench/notebook session by
-# re-scanning documents and re-running tokens(text) — the single most
-# repeated subtree in the registry. One localCheckpoint of
-# (doc_id, lang, source, n_chars, text, toks) per (session, fixture)
-# replaces every consumer's scan+split stage with a cached-block read.
-# Same keying + fingerprint-invalidation discipline as ext_dedup's
-# _MINHASH_CACHE (nothing survives the process; every bench/oracle
-# invocation recomputes from parquet — the applicationId key makes the
-# cache die with the session). At fixture scale the helper returns
-# None and callers KEEP their original per-query lineage, so the
-# driver's sf0.001/0.01 oracle plans are byte-identical to round 14.
-# Round 16: registered in the central session-cache list, so
-# unpin_all() evicts it between bench queries — the frame dedups
-# repeated tokenization WITHIN one query execution only.
-_DOCTOK_CACHE: dict[tuple[str, str], tuple[str, DataFrame]] = session_cache({})
-
-
-def doc_tokens_frame(spark: SparkSession, sf_dir: str) -> DataFrame | None:
-    """The session-shared tokenized ``documents`` frame — columns
-    (doc_id, lang, source, n_chars, text, toks) with ``toks =
-    functions.text.tokens(text)`` — localCheckpoint-ed once per
-    (session, fixture) above fixture scale; ``None`` at fixture scale
-    (callers fall back to their plain lineage). Consumers must treat
-    the frame as READ-ONLY and derive by select/filter only; exploding
-    the cached ``toks`` attribute is safe (there is no tokenizer left
-    in the lineage for InferFiltersFromGenerate to duplicate)."""
+def doc_tokens_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The tokenized ``documents`` frame — columns (doc_id, lang,
+    source, n_chars, text, toks) with ``toks =
+    functions.text.tokens(text)``, spread() across the session's
+    cores above fixture scale. A plain lineage: every call builds it
+    anew, and a consumer that reads it more than once pins it.
+    Explode ``toks`` with the short-doc guard inside the generator or
+    after a real projection — a ``filter(size(toks) ...)`` is pushed
+    below the projection and tokenizes twice (test_plans.py)."""
     from eventsgateway_spark.functions.text import tokens
 
-    # A/B kill-switch (the SPARK_GRAFT_PIN_MODE convention): =1 makes
-    # every consumer take its plain per-query fallback lineage, which
-    # is how the r15 before-plans and A/B floors were recorded.
-    if os.environ.get("SPARK_GRAFT_NO_DOCTOK", "") == "1":
-        return None
-    docs = table(spark, sf_dir, "documents")
-    if is_fixture_scale(docs):
-        return None
-    key = (spark.sparkContext.applicationId, os.path.realpath(sf_dir))
-    fp = fixture_fingerprint(sf_dir)
-    hit = _DOCTOK_CACHE.get(key)
-    if hit is not None:
-        if hit[0] == fp:
-            return hit[1]
-        del _DOCTOK_CACHE[key]
-        release_frame(hit[1])
-    # persist(), NOT localCheckpoint (measured r15): checkpoint blocks
-    # are row-serialized, so a consumer selecting (lang, toks) pays a
-    # full-width deserialize of text+everything per row (q21/q29 floors
-    # REGRESSED ~2x under a checkpointed frame); the columnar in-memory
-    # cache prunes to exactly the consumer's columns. Evicted by
-    # unpin_all() via the session-cache registry (r16): bench samples
-    # pay the tokenize cost inside their own timed region.
-    #
-    # Partitioning is SIZE-DERIVED, not spread()'s flat shuffle
-    # parallelism: a consumer stage over P cached partitions costs P
-    # task launches, and at fixture-bench scale (584 KB of documents)
-    # a 32-partition cache made every light consumer ~2x slower while
-    # 4-8 partitions was the measured knee for the heavy explode
-    # shapes (interleaved A/B, r15: trigram-agg 0.86/0.57/0.47/0.77 s
-    # and 5-gram-decon 0.77/0.59/0.63/1.07 s floors at 1/4/8/32). A
-    # ~128 KB-per-partition target hits that knee and grows to the
-    # session's full shuffle parallelism (spread()'s value) once the
-    # corpus outgrows cores x 128 KB — on any real input the cap
-    # governs and this matches spread() exactly.
-    n_max = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    n = min(n_max, max(1, -(-input_bytes(docs) // (128 << 10))))
-    ck = docs.repartition(n).select(
+    return spread(table(spark, sf_dir, "documents")).select(
         "doc_id",
         "lang",
         "source",
         "n_chars",
         "text",
         tokens("text").alias("toks"),
-    ).persist()
-    _DOCTOK_CACHE[key] = (fp, ck)
-    return ck
+    )
 
 
 def arrow_scorer() -> bool:
@@ -438,27 +318,6 @@ def arrow_scorer() -> bool:
     per-row compute outgrows transfer (long docs, high-dim vectors).
     Both paths produce identical query results (tests/test_ext.py)."""
     return os.environ.get("SPARK_GRAFT_ARROW_SCORER", "") == "1"
-
-
-def fixture_fingerprint(sf_dir: str, name: str = "documents") -> str:
-    """Cheap identity of a fixture table: sorted (name, mtime_ns,
-    size) of <name>.parquet under sf_dir (file or directory). The
-    invalidation key for every session-scoped cache derived from the
-    fixture (ext_dedup cluster labels, ext_text eval Bloom filter,
-    the r15 IVF-assignment cache over embeddings) — a fixture
-    regenerated IN-PLACE mid-session must miss those caches instead
-    of serving stale results (ADVICE r7)."""
-    target = os.path.join(sf_dir, f"{name}.parquet")
-    parts = []
-    if os.path.isdir(target):
-        for dp, _, files in os.walk(target):
-            for f in sorted(files):
-                st = os.stat(os.path.join(dp, f))
-                parts.append(f"{f}:{st.st_mtime_ns}:{st.st_size}")
-    elif os.path.exists(target):
-        st = os.stat(target)
-        parts.append(f"{name}.parquet:{st.st_mtime_ns}:{st.st_size}")
-    return ";".join(parts)
 
 
 def table_buckets(spark: SparkSession, table: str, default: int = 32) -> int:

@@ -124,19 +124,10 @@ def q21_token_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """split → explode → grouped count with HAVING — the generate/
     flatten operator class (maps onto props-map explosion for the
     gateway event model, SURVEY §2.5 Q12)."""
-    from eventsgateway_spark.queries._util import doc_tokens_frame
+    from eventsgateway_spark.queries._util import spread
 
-    dt = doc_tokens_frame(spark, sf_dir)
-    docs = table(spark, sf_dir, "documents")
-    # the session-shared toks are exactly split-minus-empties, so the
-    # explode+filter collapses to one cached-column explode (r15)
-    exploded = (
-        dt.select("lang", F.explode("toks").alias("token"))
-        if dt is not None
-        else docs.select(
-            "lang", F.explode(F.split("text", " ")).alias("token")
-        )
-    )
+    docs = spread(table(spark, sf_dir, "documents").select("lang", "text"))
+    exploded = docs.select("lang", F.explode(F.split("text", " ")).alias("token"))
     return (
         exploded.filter(F.col("token") != "")
         .groupBy("lang", "token")

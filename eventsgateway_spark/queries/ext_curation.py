@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from eventsgateway_spark.functions.text import EN_STOPWORDS, tokens
+from eventsgateway_spark.functions.text import EN_STOPWORDS
 from eventsgateway_spark.queries import query
 from eventsgateway_spark.queries._util import pin, spread, table
 
@@ -154,17 +154,8 @@ def q66_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     removed. Detection = ``regexp_extract_all`` counts; redaction =
     chained ``regexp_replace`` (global in both engines). Map-only
     scan + one aggregate to |sources| rows; everything JVM-side."""
-    # r15: the session-shared tokenized frame carries (doc_id, source,
-    # text) columnar — riding it skips this query's own parquet scan +
-    # spread exchange (guide §2.4); the regex work below is unchanged.
-    # Fixture scale keeps the plain lineage (dt is None).
-    from eventsgateway_spark.queries._util import doc_tokens_frame
-
-    dt = doc_tokens_frame(spark, sf_dir)
     docs = _plant_pii(
-        dt.select("doc_id", "source", "text")
-        if dt is not None
-        else spread(
+        spread(
             table(spark, sf_dir, "documents").select("doc_id", "source", "text")
         )
     )
@@ -253,16 +244,9 @@ def q67_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate / array filter) + one aggregate to |langs| rows."""
     from eventsgateway_spark.queries._util import doc_tokens_frame
 
-    dt = doc_tokens_frame(spark, sf_dir)
-    if dt is not None:
-        toked = dt.select("lang", "toks")
-    else:
-        docs = spread(
-            table(spark, sf_dir, "documents").select("lang", "text")
-        )
-        # tokens projected once before the four metric consumers
-        # (quality_metrics docstring; plan audit in test_plans.py)
-        toked = docs.select("lang", tokens("text").alias("toks"))
+    # tokens projected once before the four metric consumers
+    # (quality_metrics docstring; plan audit in test_plans.py)
+    toked = doc_tokens_frame(spark, sf_dir).select("lang", "toks")
     m = toked.select("lang", *quality_metrics(F.col("toks")))
     flags = m.select("lang", *quality_flags())
     return (
@@ -459,28 +443,15 @@ def q69_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     and sum left-to-right — identical fp rounding in both engines."""
     from eventsgateway_spark.queries._util import doc_tokens_frame
 
-    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    # ONE tokenized pass over the corpus: doc length + the query-term
-    # slice come out of a single projection, pinned (persist) because
-    # three join branches consume it — the previous shape scanned and
-    # tokenized the corpus once per branch, and Catalyst's
-    # InferFiltersFromGenerate doubled the tf branch's tokenization by
-    # pushing an inferred size() filter through the toks projection.
-    dt = doc_tokens_frame(spark, sf_dir)
-    toked = (
-        dt.select("doc_id", "toks")
-        if dt is not None
-        else spread(docs).select("doc_id", tokens("text").alias("toks"))
-    )
-    base = toked.select(
+    # doc length + the query-term slice come out of a single
+    # projection that three join branches read; unpinned, each branch
+    # re-tokenizes, which measured cheaper than a pin at sf0.1 (cold
+    # qprof A/B: off 2.09 s, checkpoint 2.22 s, persist 2.94 s medians)
+    base = doc_tokens_frame(spark, sf_dir).select(
         "doc_id",
         F.size("toks").alias("dl"),
         F.filter("toks", lambda t: t.isin(*_QUERY_TERMS)).alias("qt"),
     )
-    if dt is None:
-        # pin only when NOT riding the session-shared tokenization
-        # (r15 A/B: 1.26 → 1.09 s floor pin-off on the cached path)
-        base = pin(base, mode="persist")
     dl = base.select("doc_id", "dl")
     stats = base.agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -613,37 +584,18 @@ def q78_repetition_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
     math (ppm via integer division) — exact cross-engine."""
     from eventsgateway_spark.functions.text import ngrams
 
-    from eventsgateway_spark.queries._util import pin
+    from eventsgateway_spark.queries._util import doc_tokens_frame, pin
 
-    from eventsgateway_spark.queries._util import doc_tokens_frame
-
-    dt = doc_tokens_frame(spark, sf_dir)
-    if dt is not None:
-        base = dt.select(
+    # base feeds THREE consumers (c2, c5, the final n_toks select), so
+    # it is tokenized ONCE and materialized (pin/checkpoint — VERDICT
+    # r13 #3): without it each branch re-scans and re-splits the
+    # corpus, 3× the tokenize CPU at 100 TB. At fixture scale pin() is
+    # an identity.
+    base = pin(
+        doc_tokens_frame(spark, sf_dir).select(
             "doc_id", F.length("text").alias("n_chars"), "toks"
         )
-    else:
-        docs = spread(
-            table(spark, sf_dir, "documents").select("doc_id", "text")
-        )
-        base = docs.select(
-            "doc_id",
-            F.length("text").alias("n_chars"),
-            tokens("text").alias("toks"),
-        )
-    # base feeds THREE consumers (c2, c5, the final n_toks select).
-    # When NOT riding the session-shared tokenization, it is tokenized
-    # ONCE and materialized (pin/checkpoint — the q57/q72 auto-pick
-    # discipline; VERDICT r13 #3): without it each branch re-scans and
-    # re-splits the corpus, 3× the tokenize CPU at 100 TB. At fixture
-    # scale pin() is an identity, so the driver-oracle plan (and its
-    # value hash) is byte-identical to the uncached round-13 shape.
-    # When dt IS present, base is a cheap projection of the columnar
-    # cache and the checkpoint's extra job + row-serialized re-read
-    # cost more than the three recomputes they save — the r15 batch-3b
-    # pattern (q25/q69/q80/q84); pin only on the uncached path.
-    if dt is None:
-        base = pin(base)
+    )
     c2 = (
         base.select("doc_id", "n_chars", F.explode(ngrams(F.col("toks"), 2)).alias("g"))
         .groupBy("doc_id", "n_chars", "g")

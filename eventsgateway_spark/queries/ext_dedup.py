@@ -28,8 +28,6 @@ clustering (DuckDB side uses a recursive CTE closure).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -45,7 +43,6 @@ from eventsgateway_spark.queries import query
 from eventsgateway_spark.queries._util import (
     arrow_scorer,
     pin,
-    session_cache,
     spread,
     table,
 )
@@ -391,14 +388,8 @@ def q29_exact_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup tier and the template for any exact content-hash dedup."""
     from eventsgateway_spark.queries._util import doc_tokens_frame
 
-    dt = doc_tokens_frame(spark, sf_dir)
-    docs = dt if dt is not None else table(spark, sf_dir, "documents")
-    key = F.array_join(
-        F.sort_array(
-            F.array_distinct(F.col("toks") if dt is not None else tokens("text"))
-        ),
-        " ",
-    )
+    docs = doc_tokens_frame(spark, sf_dir)
+    key = F.array_join(F.sort_array(F.array_distinct(F.col("toks"))), " ")
     return (
         docs.select(F.col("doc_id"), key.alias("k"))
         .groupBy("k")
@@ -438,8 +429,8 @@ def q30_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Candidates come from an inverted-index equi-join on the shingle
     (docs sharing zero shingles are never paired), with hot shingles
     df-capped — the plan is linear in Σ shingles, not |docs|². The
-    pair frame is the session-shared :func:`near_dup_pair_frame`
-    (q32/q77/q80 consume the same lineage)."""
+    pair frame is :func:`near_dup_pair_frame` (q32/q77/q80 consume the
+    same lineage)."""
     return near_dup_pair_frame(spark, sf_dir).orderBy("d1", "d2")
 
 
@@ -517,59 +508,19 @@ def minhash_band_candidates(mins: DataFrame) -> DataFrame:
     )
 
 
-# Session-scoped cache of the MinHash family's shared lineage — the
-# near_dup_pair_frame discipline (above) applied one family over:
-# q31 verifies the banding candidates, q93 calibrates the estimator
-# over EXACTLY the same candidate universe ("one lineage, two views",
-# the r14 rotation-slot rationale), and in a shared bench/notebook
-# session each used to rebuild shingles → signatures → banding join
-# from scratch (~3 s each at sf0.1). Keyed (applicationId,
-# realpath(sf_dir)) + fixture fingerprint; at fixture scale the plain
-# per-query lineage is returned uncached so the driver's sf0.01 runs
-# hash-check each query independently. Measured at sf0.1 (round-15):
-# one ~4 s session build, then q31 3.3 → 0.66 s / q93 3.9 → 0.89 s
-# floors on the cached frames.
-_MINHASH_CACHE: dict[tuple[str, str], tuple[str, tuple]] = session_cache({})
-
-
 def minhash_family_frames(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """(sh, mins, cand) — the df-capped shingle table, the MinHash
     signature table (with per-doc sz), and the LSH banding candidate
-    pairs, materialized once per (session, fixture) above fixture
-    scale."""
-    from eventsgateway_spark.queries._util import (
-        is_fixture_scale,
-        release_frame,
-    )
-
-    key = (spark.sparkContext.applicationId, os.path.realpath(sf_dir))
-    fp = _fixture_fingerprint(sf_dir)
-    hit = _MINHASH_CACHE.get(key)
-    if hit is not None:
-        cached_fp, cached = hit
-        if cached_fp == fp:
-            return cached
-        del _MINHASH_CACHE[key]
-        for df in cached:
-            release_frame(df)
-    docs = table(spark, sf_dir, "documents")
-    if is_fixture_scale(docs):
-        sh = doc_shingles(docs)
-        mins = minhash_components(sh)
-        return sh, mins, minhash_band_candidates(mins)
-    from eventsgateway_spark.queries._util import doc_tokens_frame
-
-    # above fixture scale the one-time family build rides the session-
-    # shared tokenization instead of re-splitting the corpus (r15)
-    dt = doc_tokens_frame(spark, sf_dir)
-    sh = doc_shingles(dt.select("doc_id", "toks") if dt is not None else docs)
-    sh = sh.localCheckpoint()
-    mins = minhash_components(sh).localCheckpoint()
-    cand = minhash_band_candidates(mins).localCheckpoint()
-    _MINHASH_CACHE[key] = (fp, (sh, mins, cand))
-    return sh, mins, cand
+    pairs: the one family lineage q31 verifies and q93 calibrates
+    ("one lineage, two views"). sh and mins each feed several
+    consumers, so both are pinned (cold qprof A/B at sf0.1, q31/q93
+    medians: checkpoint 4.27/3.99 s, persist 4.47/4.45 s, off
+    4.61/5.20 s)."""
+    sh = pin(doc_shingles(table(spark, sf_dir, "documents")))
+    mins = pin(minhash_components(sh))
+    return sh, mins, minhash_band_candidates(mins)
 
 
 @query(
@@ -602,8 +553,8 @@ def q31_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # count(1) rides the signature groupBy (minhash_components): the
     # per-doc shingle size verify_pairs needs comes out of THAT
     # aggregation instead of a fourth full run of the shingle lineage.
-    # sh/mins/cand come from the session-shared family lineage (r15 —
-    # q93 audits the same candidate universe; see minhash_family_frames)
+    # sh/mins/cand come from the family lineage q93 audits too
+    # (minhash_family_frames)
     sh, mins, cand = minhash_family_frames(spark, sf_dir)
     return verify_pairs(
         cand, sh, 0.4, sizes=mins.select("doc_id", "sz")
@@ -634,73 +585,14 @@ _CLUSTER_CTES = """
 # q32 — duplicate clustering: connected components
 # ---------------------------------------------------------------------------
 
-# (applicationId, realpath(sf_dir), documents.parquet fingerprint) ->
-# materialized (doc_id, cluster_id) frame. Session-scoped on purpose: a
-# durable saved table would go stale if the fixture were regenerated
-# between runs, while the bench/driver reuse we need (q32 then q77 in
-# ONE session) is exactly session-scoped. The fingerprint (mtime+size
-# of the fixture's parquet files, ADVICE r7) means a fixture
-# regenerated IN-PLACE mid-session misses the cache instead of serving
-# stale labels; the superseded entry is unpersisted on eviction so its
-# localCheckpoint blocks free immediately rather than waiting for GC.
-_LABELS_CACHE: dict[tuple[str, str], tuple[str, DataFrame]] = session_cache({})
-
-# Same keying and eviction discipline for the Jaccard>=0.5 near-dup
-# PAIR frame itself — the lineage one level below the labels: FOUR
-# registry queries consume it (q30 reports it, q32/q77 contract it to
-# clusters, q80 propagates quality over it), and in a shared bench /
-# notebook session each used to re-run the shingle self-join from
-# scratch (~3 s of q80's 3.9 s fresh cost at sf0.1 — VERDICT r10 #2).
-_PAIRS_CACHE: dict[tuple[str, str], tuple[str, DataFrame]] = session_cache({})
-
-
-def _fixture_fingerprint(sf_dir: str) -> str:
-    """Shared helper — see queries/_util.fixture_fingerprint."""
-    from eventsgateway_spark.queries._util import fixture_fingerprint
-
-    return fixture_fingerprint(sf_dir)
-
-
 def near_dup_pair_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(d1, d2, inter, sz1, sz2, jaccard) at Jaccard >= 0.5 — THE
-    shared near-dup pair lineage (df-capped inverted index, q30
-    documents the plan), materialized once per (session, fixture)
-    above fixture scale exactly like :func:`dedup_cluster_labels`.
-    At fixture scale (driver correctness runs at sf0.01) the plain
-    plan is returned uncached, so every consumer still hash-checks
-    its full lineage independently against its oracle. Evicted by
-    ``unpin_all()`` via the session-cache registry (r16 — VERDICT r15
-    #1): each bench sample pays the pair join inside its own timed
-    region; the cache dedups reuse within one execution and across
-    queries only in long-lived sessions that never call unpin_all
-    (notebooks) — the in-session form of the durable bucketed shingle
-    index (streaming/near_dup.py)."""
-    from eventsgateway_spark.queries._util import is_fixture_scale
-
-    key = (spark.sparkContext.applicationId, os.path.realpath(sf_dir))
-    fp = _fixture_fingerprint(sf_dir)
-    hit = _PAIRS_CACHE.get(key)
-    if hit is not None:
-        cached_fp, cached = hit
-        if cached_fp == fp:
-            return cached
-        del _PAIRS_CACHE[key]
-        from eventsgateway_spark.queries._util import release_frame
-
-        release_frame(cached)
-    docs = table(spark, sf_dir, "documents")
-    if is_fixture_scale(docs):
-        return jaccard_pairs(doc_shingles(docs), 0.5)
-    from eventsgateway_spark.queries._util import doc_tokens_frame
-
-    # the one-time pair build rides the session-shared tokenization (r15)
-    dt = doc_tokens_frame(spark, sf_dir)
-    pairs = jaccard_pairs(
-        doc_shingles(dt.select("doc_id", "toks") if dt is not None else docs),
-        0.5,
-    ).localCheckpoint()
-    _PAIRS_CACHE[key] = (fp, pairs)
-    return pairs
+    near-dup pair lineage (df-capped inverted index, q30 documents the
+    plan) that q30 reports, q32/q77/q87 contract to clusters and q80
+    propagates quality over. Each query builds it anew; across queries
+    the durable form is the bucketed shingle index
+    (streaming/near_dup.py)."""
+    return jaccard_pairs(doc_shingles(table(spark, sf_dir, "documents")), 0.5)
 
 
 def dedup_cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -709,52 +601,29 @@ def dedup_cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id.
 
     THE single copy of the shingle → Jaccard-pair → star-contraction
-    lineage, shared by q32 (cluster report) and q77 (leakage-safe
-    split). Above fixture scale the label table is materialized once
-    (``localCheckpoint``) and cached per (session, fixture): the
-    round-6 driver bench ran the identical full lineage twice — q32 at
-    3.4 s and q77 at 9.9 s — for a table of |clustered docs| rows. At
-    100 TB the same table graduates to a doc_id-bucketed saved table
-    (the save/load_corpus_index pattern, streaming/near_dup.py); the
-    cache here is the in-session form of that materialization. At
-    fixture scale (driver correctness runs) the plan is returned
-    uncached — the recompute is cheaper than any checkpoint job, and
-    each query still hash-checks independently against its oracle."""
-    from eventsgateway_spark.queries._util import is_fixture_scale
+    lineage, shared by q32 (cluster report), q77 (leakage-safe split)
+    and q87 (cluster-size histogram). At 100 TB the table graduates to
+    a doc_id-bucketed saved table (the save/load_corpus_index pattern,
+    streaming/near_dup.py)."""
+    from eventsgateway_spark.queries._util import release_frame
 
-    key = (spark.sparkContext.applicationId, os.path.realpath(sf_dir))
-    fp = _fixture_fingerprint(sf_dir)
-    hit = _LABELS_CACHE.get(key)
-    if hit is not None:
-        cached_fp, cached = hit
-        if cached_fp == fp:
-            return cached
-        # fixture regenerated in-place: evict and reclaim the stale
-        # entry's checkpoint blocks now, not at GC time (release_frame
-        # — plain unpersist is a no-op for localCheckpoint blocks)
-        del _LABELS_CACHE[key]
-        from eventsgateway_spark.queries._util import release_frame
-
-        release_frame(cached)
-    docs = table(spark, sf_dir, "documents")
     edges = near_dup_pair_frame(spark, sf_dir).select(
         F.col("d1").alias("u"), F.col("d2").alias("v")
     )
     cc = connected_components(edges)
-    labels = cc.labels.select(
+    plain = cc.labels.select(
         F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
     )
-    if not is_fixture_scale(docs):
-        labels = labels.localCheckpoint()
+    # pinned: cold qprof A/B at sf0.1, q77/q87 medians checkpoint
+    # 5.55/5.26 s against 6.27-6.61/5.41-6.05 s unpinned
+    labels = pin(plain)
+    if labels is not plain and cc.edges is not None:
         # labels is materialized, so the converged star forest's
         # checkpoint blocks are no longer reachable through any live
-        # lineage — free them now (r16; the per-round intermediates
-        # are already freed inside connected_components)
-        if cc.edges is not None:
-            from eventsgateway_spark.queries._util import release_frame
-
-            release_frame(cc.edges)
-        _LABELS_CACHE[key] = (fp, labels)
+        # lineage — free them now (the per-round intermediates are
+        # already freed inside connected_components); at fixture
+        # scale pin() is identity and labels still reads them
+        release_frame(cc.edges)
     return labels
 
 
@@ -778,8 +647,8 @@ def q32_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     chain, the failure mode of the previous hash-to-min loop — cannot
     stall convergence at corpus scale. Iteration count on a synthetic
     giant chain is pinned by tests/test_components.py. The label table
-    itself comes from :func:`dedup_cluster_labels`, materialized once
-    per session and shared with q77."""
+    itself comes from :func:`dedup_cluster_labels`, shared with q77
+    and q87."""
     labels = dedup_cluster_labels(spark, sf_dir)
     return (
         labels.select(
@@ -836,8 +705,7 @@ def simhash_sigs(docs: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
     from eventsgateway_spark.functions.text import has_pretokenized
 
     # A frame carrying a `toks` column is PRE-TOKENIZED (the doc_shingles
-    # contract): the split is skipped — q39/q63 feed the session-shared
-    # doc_tokens_frame here above fixture scale.
+    # contract): the split is skipped.
     if has_pretokenized(docs):
         tok = docs.select("doc_id", F.explode("toks").alias("tk")).select(
             "doc_id", token_hash32(F.col("tk")).alias("hs")
@@ -861,50 +729,13 @@ def simhash_sigs(docs: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
     return sums.select("doc_id", sig_expr.alias("simhash"))
 
 
-# Session-scoped cache of the (doc_id, simhash) signature table per
-# bit width — the _MINHASH_CACHE discipline for the SimHash family
-# (r15): q39 (16-bit) and q63 (32-bit) each re-ran the explode +
-# ``bits``-column conditional-sum aggregate per execution; the
-# signature table is |docs| rows and fixture-derived, so it
-# materializes once per (session, fixture, bits). Fixture scale stays
-# uncached (driver oracle plans untouched).
-_SIMHASH_SIG_CACHE: dict[tuple[str, str, int], tuple[str, DataFrame]] = session_cache({})
-
-
 def simhash_sig_frame(
     spark: SparkSession, sf_dir: str, bits: int
 ) -> DataFrame:
-    """(doc_id, simhash) at ``bits`` width over the documents fixture,
-    session-cached above fixture scale; the plain per-query lineage at
-    fixture scale."""
-    from eventsgateway_spark.queries._util import (
-        doc_tokens_frame,
-        is_fixture_scale,
-        release_frame,
-    )
-
-    docs = table(spark, sf_dir, "documents")
-    if is_fixture_scale(docs):
-        return simhash_sigs(
-            spread(docs.select("doc_id", "text")), bits
-        )
-    key = (spark.sparkContext.applicationId, os.path.realpath(sf_dir), bits)
-    fp = _fixture_fingerprint(sf_dir)
-    hit = _SIMHASH_SIG_CACHE.get(key)
-    if hit is not None:
-        if hit[0] == fp:
-            return hit[1]
-        del _SIMHASH_SIG_CACHE[key]
-        release_frame(hit[1])
-    dt = doc_tokens_frame(spark, sf_dir)
-    src = (
-        dt.select("doc_id", "toks")
-        if dt is not None
-        else spread(docs.select("doc_id", "text"))
-    )
-    sig = simhash_sigs(src, bits).localCheckpoint()
-    _SIMHASH_SIG_CACHE[key] = (fp, sig)
-    return sig
+    """(doc_id, simhash) at ``bits`` width over the documents fixture —
+    q39 (16-bit) and q63 (32-bit)."""
+    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
+    return simhash_sigs(spread(docs), bits)
 
 
 @query(
@@ -976,10 +807,10 @@ def q63_simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate pairs over 500 docs). Complements q31 (MinHash/Jaccard):
     SimHash catches small token-distribution edits that shift few
     bits."""
-    # session-cached signature table (simhash_sig_frame, r15) — above
-    # fixture scale it IS a checkpoint, so the old per-execution
-    # pin(sig) job is redundant; at fixture scale pin() was identity.
-    sig = simhash_sig_frame(spark, sf_dir, HAM_SIG_BITS)
+    # pin: both sides of the band self-join read the signature table
+    # (cold qprof A/B at sf0.1: checkpoint 3.85 s, off 4.90 s,
+    # persist 5.68 s medians)
+    sig = pin(simhash_sig_frame(spark, sf_dir, HAM_SIG_BITS))
     return hamming_band_pairs(sig, "simhash", HAM_BANDS, _HAM_BAND_W, HAM_MAX)
 
 
@@ -1183,22 +1014,12 @@ def q72_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     under Q72_AGG_BYTES; above it the ``agg`` form takes over — its
     map-side partial min collapses a boilerplate window shared by
     millions of docs BEFORE the shuffle and its join-back skew is
-    AQE-splittable, where a window partition is one indivisible task.
-    ``SPARK_GRAFT_Q72_OWNERSHIP`` still overrides both ways."""
-    raw_docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    mode = os.environ.get("SPARK_GRAFT_Q72_OWNERSHIP")
-    if not mode:
-        from eventsgateway_spark.queries._util import input_bytes
+    AQE-splittable, where a window partition is one indivisible task."""
+    from eventsgateway_spark.queries._util import doc_tokens_frame, input_bytes
 
-        mode = "agg" if input_bytes(raw_docs) > Q72_AGG_BYTES else "window"
-    from eventsgateway_spark.queries._util import doc_tokens_frame
-
-    dt = doc_tokens_frame(spark, sf_dir)
-    toks = (
-        dt.select("doc_id", "toks")
-        if dt is not None
-        else spread(raw_docs).select("doc_id", tokens("text").alias("toks"))
-    )
+    docs = table(spark, sf_dir, "documents")
+    mode = "agg" if input_bytes(docs) > Q72_AGG_BYTES else "window"
+    toks = doc_tokens_frame(spark, sf_dir).select("doc_id", "toks")
     # The short-doc guard lives INSIDE the generator (null -> no rows)
     # instead of a filter: `filter(size(toks) >= W)` gets predicate-
     # pushed below the toks projection, re-inlining the tokenization
@@ -1307,23 +1128,15 @@ def q80_quality_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id — the standard distributed PageRank step, with the edge and
     node tables pin-materialized once so the {_PROP_ITERS}-iteration
     DAG re-reads them instead of re-deriving the shingle self-join
-    per iteration. The pair join itself comes from the session-shared
-    :func:`near_dup_pair_frame` (VERDICT r10 #2: in a bench/notebook
-    session that also runs q30/q32/q77, the ~3 s pair derivation is
-    paid once, not per query)."""
-    from eventsgateway_spark.queries._util import doc_tokens_frame
-
-    dt = doc_tokens_frame(spark, sf_dir)
+    per iteration. The pair join itself is :func:`near_dup_pair_frame`
+    (q30's lineage)."""
     return quality_propagation(
-        dt.select("doc_id", "toks")
-        if dt is not None
-        else table(spark, sf_dir, "documents"),
+        table(spark, sf_dir, "documents"),
         edges0=near_dup_pair_frame(spark, sf_dir).select("d1", "d2"),
-        # with both the tokenization and the pair frame session-cached,
-        # the per-execution edge/node pins cost more than the recompute
-        # they save (r15 A/B: 2.82 → 1.74 s floor pin-off); the
-        # streaming index-backed caller keeps the default persist.
-        pin_mode="off" if dt is not None else "persist",
+        # cold qprof A/B at sf0.1 (medians): checkpoint 8.0 s, persist
+        # 11.1 s, off 11.3 s; the streaming index-backed caller keeps
+        # the default persist
+        pin_mode="checkpoint",
     )
 
 
@@ -1428,9 +1241,8 @@ def q87_cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     every corpus run reads first: how many 2-doc mirrors vs viral
     N-doc clusters exist, and how many documents each size class
     removes (keep-first drops ``n_docs - n_clusters`` per row). Rides
-    THE shared cluster lineage (``dedup_cluster_labels`` — same
-    session-cached frame q32/q77/q80 consume; at fixture scale the
-    uncached plan hash-checks the full lineage), then two tiny hash
+    THE shared cluster lineage (``dedup_cluster_labels`` — the same
+    lineage q32/q77 consume), then two tiny hash
     aggregates: cluster_id → size, size → (n_clusters, n_docs). Scale
     shape: the histogram is ≤ max-cluster-size rows — nothing
     corpus-grain crosses the second shuffle; no window, no join after
@@ -1573,99 +1385,25 @@ def _ham_pairs_oracle(sig_ctes: str, bands: int, band_w: int, max_ham: int) -> s
     """
 
 
-# (applicationId, realpath(sf_dir), modality) -> materialized
-# (doc_id, sig) frame — the media analog of _PAIRS_CACHE: THREE
-# registry queries consume each signature lineage (q89 + q91 the image
-# one, q90 + q91 the audio one), and in a shared bench/notebook
-# session each used to re-run the synth+decode+hash mapInPandas chain
-# from scratch. Same keying, fingerprint eviction, and
-# survives-unpin_all discipline as the other session caches; active
-# only above fixture scale so driver oracle runs still hash-check the
-# full lineage per query. scaleprobe clears it between growth samples
-# (the round-12 pairs-cache lesson).
-_MEDIA_SIG_CACHE: dict[tuple[str, str, str], tuple[str, DataFrame]] = session_cache({})
-
-
 def media_sigs(spark: SparkSession, sf_dir: str, modality: str) -> DataFrame:
-    """(doc_id, dhash|afp) — THE shared perceptual-signature lineage
-    per modality, materialized once per (session, fixture) above
-    fixture scale (see ``_MEDIA_SIG_CACHE``)."""
-    from eventsgateway_spark.queries._util import is_fixture_scale
-
+    """(doc_id, dhash|afp) — THE perceptual-signature lineage per
+    modality (the synth+decode+hash mapInPandas chain), consumed by
+    q89/q92 (image), q90 (audio) and q91 (both)."""
     builder = {"image": _image_sigs, "audio": _audio_sigs}[modality]
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.realpath(sf_dir),
-        modality,
-    )
-    fp = _fixture_fingerprint(sf_dir)
-    hit = _MEDIA_SIG_CACHE.get(key)
-    if hit is not None:
-        cached_fp, cached = hit
-        if cached_fp == fp:
-            return cached
-        del _MEDIA_SIG_CACHE[key]
-        from eventsgateway_spark.queries._util import release_frame
-
-        release_frame(cached)
-    docs = table(spark, sf_dir, "documents")
-    sigs = builder(spark, sf_dir)
-    if not is_fixture_scale(docs):
-        sigs = sigs.localCheckpoint()
-        _MEDIA_SIG_CACHE[key] = (fp, sigs)
-    return sigs
-
-
-# Session-scoped cache of the banded PAIR frame itself — one level up
-# from _MEDIA_SIG_CACHE, the near_dup_pair_frame discipline applied to
-# the media family (round-15, guide §2.4): THREE registry queries
-# consume each modality's pair set (q89 + q91 the image one, q90 + q91
-# the audio one), and in a shared bench/notebook session each used to
-# re-run the band explode + self-join + Hamming verify over the cached
-# signatures (~0.6 s per modality at sf0.1 — measured round-15 probe).
-# Same keying/fingerprint-eviction/survives-unpin_all discipline; at
-# fixture scale the plain lineage is returned so every driver oracle
-# run hash-checks its full construction independently.
-_MEDIA_PAIR_CACHE: dict[tuple[str, str, str], tuple[str, DataFrame]] = session_cache({})
+    return builder(spark, sf_dir)
 
 
 def media_band_pairs(spark: SparkSession, sf_dir: str, modality: str) -> DataFrame:
-    """(d1, d2, hamming) — THE shared Manku banded near-dup pair frame
-    per modality (q89/q90's exact construction), materialized once per
-    (session, fixture) above fixture scale."""
-    from eventsgateway_spark.queries._util import (
-        is_fixture_scale,
-        release_frame,
-    )
-
+    """(d1, d2, hamming) — THE Manku banded near-dup pair frame per
+    modality (q89/q90's exact construction; q91 joins both). The
+    signatures are pinned: both sides of the band self-join read them,
+    and unpinned each side re-runs the mapInPandas chain (no exchange
+    reuse; q89-q91 ran about 2x slower)."""
     sig_col = {"image": "dhash", "audio": "afp"}[modality]
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.realpath(sf_dir),
-        modality,
-    )
-    fp = _fixture_fingerprint(sf_dir)
-    hit = _MEDIA_PAIR_CACHE.get(key)
-    if hit is not None:
-        cached_fp, cached = hit
-        if cached_fp == fp:
-            return cached
-        del _MEDIA_PAIR_CACHE[key]
-        release_frame(cached)
-    pairs = hamming_band_pairs(
-        media_sigs(spark, sf_dir, modality), sig_col,
+    return hamming_band_pairs(
+        pin(media_sigs(spark, sf_dir, modality)), sig_col,
         IMG_HAM_BANDS, _IMG_BAND_W, IMG_HAM_MAX,
     )
-    if not is_fixture_scale(table(spark, sf_dir, "documents")):
-        # cached UNmaterialized (r16): with the session caches evicted
-        # between bench queries, every consumer is single-use within
-        # its own execution — the localCheckpoint job cost more than
-        # the recompute it could ever save (the pair join reads the
-        # checkpointed signature frame, not the decode tier). A
-        # same-session second consumer recomputes the banding join
-        # over the still-cached signatures; results identical.
-        _MEDIA_PAIR_CACHE[key] = (fp, pairs)
-    return pairs
 
 
 @query(
@@ -1833,8 +1571,8 @@ def q91_cross_modal_dup_consensus(spark: SparkSession, sf_dir: str) -> DataFrame
     and -1 the sentinel for a modality that did not flag the pair
     (NULL in a BIGINT oracle column degrades to float64 in the
     comparison frame — the engine-wide sentinel convention). Both
-    inputs are the EXACT q89/q90 constructions (shared ``media_sigs``
-    session-cached lineages + ``hamming_band_pairs``); the join is
+    inputs are the EXACT q89/q90 constructions (``media_sigs`` +
+    ``hamming_band_pairs``); the join is
     pair-grain (equi on two ints), so q91's marginal cost over its
     parents is one tiny shuffle. At 100 TB the pair tables are the
     already-reduced dedup reports — consensus never touches payloads
@@ -1995,12 +1733,9 @@ def q93_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the exact-intersection branch) and the static plan inlines the
     # tokenize+md5 subtree into each (16 split() sites measured at
     # round-14 closing — AQE runtime reuse saved it only SOMETIMES:
-    # 2.8 s floor with 9-15 s spikes in the same session). r15: the
-    # round-14 per-query persists graduated to the session-shared
-    # family lineage (minhash_family_frames — q31 verifies the same
-    # candidate universe this query calibrates; one build serves
-    # both). Identity at fixture scale — the driver's sf0.01 plan and
-    # hash are untouched.
+    # 2.8 s floor with 9-15 s spikes in the same session), so the
+    # family lineage pins sh and mins (minhash_family_frames — q31
+    # verifies the same candidate universe this query calibrates).
     sh, mins, cand = minhash_family_frames(spark, sf_dir)
     m1 = mins.select(
         F.col("doc_id").alias("d1"),

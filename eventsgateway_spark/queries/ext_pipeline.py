@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from eventsgateway_spark.functions.text import CHUNK_STRIDE, CHUNK_TOKENS, tokens
+from eventsgateway_spark.functions.text import CHUNK_STRIDE, CHUNK_TOKENS
 from eventsgateway_spark.queries import query
 from eventsgateway_spark.queries._util import pin, table
 from eventsgateway_spark.queries.ext_dedup import (
@@ -113,40 +113,31 @@ def q60_corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     from eventsgateway_spark.queries._util import doc_tokens_frame
 
     docs = table(spark, sf_dir, "documents").select("doc_id", "source", "text")
-    dt = doc_tokens_frame(spark, sf_dir)
-    if dt is not None:
-        # r15 batch 2b: the session-shared tokenized checkpoint already
-        # IS the materialized one-tokenization frame the pin below used
-        # to build per query — ride it and skip the extra checkpoint job.
-        with_toks = dt.select("doc_id", "source", "toks")
-    else:
-        with_toks = docs.select(
-            "doc_id", "source", tokens("text").alias("toks")
-        )
+    with_toks = doc_tokens_frame(spark, sf_dir).select("doc_id", "source", "toks")
 
-        # r15 (guide §1/§5): when keep-first takes its JOIN branch (input
-        # below KEEP_FIRST_WINDOW_BYTES), the tokenized frame is computed
-        # by BOTH join sides plus the eval-gram branch — persist it so the
-        # tokenizer runs once per corpus, not three times. Above the
-        # window threshold the window branch already evaluates with_toks
-        # ONCE and the eval-gram branch is better served by the raw scan's
-        # source= pushdown than by materializing a corpus-scale tokenized
-        # cache, so the pin is deliberately conditioned on the same size
-        # gate (identity at fixture scale either way — driver plan/hash
-        # untouched). Measured with the shingle pin below: q60 floor
-        # 8.6 → 5.3 s at sf0.1 (interleaved A/B, round-15). Mode for ALL
-        # FOUR q60 pins re-measured round-15 after pin(persist) went lazy:
-        # interleaved env-forced A/B reads checkpoint 4.00 / persist 5.62 /
-        # off 4.80 s (q60 min-of-3) — the persist write of wide
-        # array<string> toks columns into the block store costs more than
-        # the checkpoint's extra job, so checkpoint everywhere.
-        from eventsgateway_spark.queries._util import input_bytes
-        from eventsgateway_spark.queries.ext_dedup import (
-            KEEP_FIRST_WINDOW_BYTES,
-        )
+    # r15 (guide §1/§5): when keep-first takes its JOIN branch (input
+    # below KEEP_FIRST_WINDOW_BYTES), the tokenized frame is computed
+    # by BOTH join sides plus the eval-gram branch — persist it so the
+    # tokenizer runs once per corpus, not three times. Above the
+    # window threshold the window branch already evaluates with_toks
+    # ONCE and the eval-gram branch is better served by the raw scan's
+    # source= pushdown than by materializing a corpus-scale tokenized
+    # cache, so the pin is deliberately conditioned on the same size
+    # gate (identity at fixture scale either way — driver plan/hash
+    # untouched). Measured with the shingle pin below: q60 floor
+    # 8.6 → 5.3 s at sf0.1 (interleaved A/B, round-15). Mode for ALL
+    # FOUR q60 pins re-measured round-15 after pin(persist) went lazy:
+    # interleaved env-forced A/B reads checkpoint 4.00 / persist 5.62 /
+    # off 4.80 s (q60 min-of-3) — the persist write of wide
+    # array<string> toks columns into the block store costs more than
+    # the checkpoint's extra job, so checkpoint everywhere.
+    from eventsgateway_spark.queries._util import input_bytes
+    from eventsgateway_spark.queries.ext_dedup import (
+        KEEP_FIRST_WINDOW_BYTES,
+    )
 
-        if input_bytes(docs) <= KEEP_FIRST_WINDOW_BYTES:
-            with_toks = pin(with_toks, mode="checkpoint")
+    if input_bytes(docs) <= KEEP_FIRST_WINDOW_BYTES:
+        with_toks = pin(with_toks, mode="checkpoint")
 
     # quality floor
     q = with_toks.filter(F.size("toks") >= MIN_TOKENS)

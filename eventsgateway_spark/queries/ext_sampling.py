@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from eventsgateway_spark.queries import query
-from eventsgateway_spark.queries._util import pin, session_cache, spread, table
+from eventsgateway_spark.queries._util import pin, spread, table
 
 # split thresholds on the hash-percent: [0,80) train, [80,90) val, rest test
 TRAIN_PCT = 80
@@ -200,20 +200,11 @@ def q74_token_budget_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from eventsgateway_spark.operators.skew import skew_safe_running_sum
     from eventsgateway_spark.queries.ext_pipeline import prefix_bucket_docs
 
-    from eventsgateway_spark.queries._util import doc_tokens_frame
-
     docs = spread(table(spark, sf_dir, "documents").select("source", "doc_id", "text"))
-    dt = doc_tokens_frame(spark, sf_dir)
-    t = (
-        dt.select(
-            "source", "doc_id", F.size("toks").cast("bigint").alias("n_tokens")
-        )
-        if dt is not None
-        else docs.select(
-            "source",
-            "doc_id",
-            F.size(tokens("text")).cast("bigint").alias("n_tokens"),
-        )
+    t = docs.select(
+        "source",
+        "doc_id",
+        F.size(tokens("text")).cast("bigint").alias("n_tokens"),
     )
     c = skew_safe_running_sum(
         t,
@@ -260,8 +251,8 @@ def source_totals(docs: DataFrame) -> DataFrame:
     from eventsgateway_spark.functions.text import has_pretokenized, tokens
 
     if has_pretokenized(docs):
-        # pre-tokenized caller (the session-shared doc_tokens_frame):
-        # skip the split — same counts by construction
+        # pre-tokenized caller: skip the split — same counts by
+        # construction
         return docs.select("source", "toks").groupBy("source").agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum(F.size("toks")).cast("bigint").alias("n_tokens"),
@@ -368,9 +359,7 @@ def q75_domain_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     than their share), dominant ones < 100."""
     from eventsgateway_spark.queries._util import doc_tokens_frame
 
-    dt = doc_tokens_frame(spark, sf_dir)
-    docs = dt if dt is not None else table(spark, sf_dir, "documents")
-    return mixture_weights(docs).orderBy("source")
+    return mixture_weights(doc_tokens_frame(spark, sf_dir)).orderBy("source")
 
 
 # ---------------------------------------------------------------------------
@@ -451,21 +440,12 @@ def q76_training_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     virtual time (rank-within-source / mixture weight); reading in vt
     order delivers the q75 mixture in every prefix of the stream."""
     from eventsgateway_spark.operators.skew import skew_safe_running_sum
-    from eventsgateway_spark.queries._util import doc_tokens_frame, spread
+    from eventsgateway_spark.queries._util import doc_tokens_frame
 
-    # r15: the ranked lineage fans out inside skew_safe_running_sum
-    # (phase-1 window AND the phase-2 bucket totals), so an uncached
-    # input is scanned + spread TWICE per execution; the session-shared
-    # tokenized frame already holds (source, doc_id) columnar — riding
-    # it drops both parquet scans and both spread exchanges (guide
-    # §2.4). Fixture scale keeps the plain lineage (dt is None).
     dt = doc_tokens_frame(spark, sf_dir)
-    docs = (
-        dt.select("source", "doc_id")
-        if dt is not None
-        else spread(table(spark, sf_dir, "documents").select("source", "doc_id"))
+    h = dt.select("source", "doc_id").withColumn(
+        "h", F.md5(F.col("doc_id").cast("string"))
     )
-    h = docs.withColumn("h", F.md5(F.col("doc_id").cast("string")))
     ranked = skew_safe_running_sum(
         h,
         keys=["source"],
@@ -478,11 +458,7 @@ def q76_training_order(spark: SparkSession, sf_dir: str) -> DataFrame:
         rn_col="rk",
         sum_col="_unused",
     )
-    weights = mixture_weights(
-        dt if dt is not None else table(spark, sf_dir, "documents")
-    ).select(
-        "source", "weight_ppm"
-    )
+    weights = mixture_weights(dt).select("source", "weight_ppm")
     return (
         ranked.join(weights, "source")
         .select(
@@ -554,9 +530,8 @@ def q77_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment — no near-duplicate pair straddles two splits.
 
     The cluster-label table is ``dedup_cluster_labels`` — the SAME
-    session-materialized frame q32 reads, so running both (bench,
-    driver) pays the shingle → pair → contraction lineage once; q77
-    itself is one doc_id-keyed left join plus a map over the labels."""
+    shingle → pair → contraction lineage q32 reads; q77 itself is one
+    doc_id-keyed left join plus a map over the labels."""
     from eventsgateway_spark.queries.ext_dedup import dedup_cluster_labels
 
     docs = table(spark, sf_dir, "documents")
@@ -663,72 +638,26 @@ def q82_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Session-scoped cache of the scored DSIR weight table — the
-# near_dup_pair_frame discipline (ext_dedup.py) applied to the DSIR
-# family: q82 reports the weights, q83 resamples under them, and in a
-# shared bench/notebook session each used to rebuild the full model +
-# scoring lineage (tokenize ×3, two term aggregates, scoring join)
-# from scratch. Keyed (applicationId, realpath(sf_dir)) with the
-# fixture fingerprint guarding in-place regens; at fixture scale the
-# plain lineage is returned uncached so the driver's sf0.01 runs
-# hash-check the full lineage independently per query. Measured at
-# sf0.1 (round-15): one ~2.8 s session build (tokenize ×1 now, was
-# ×3), then 0.20/0.20 s per query — from 2.7/2.3 s floors each.
-_DSIR_CACHE: dict[tuple[str, str], tuple[str, DataFrame]] = session_cache({})
-
-
 def dsir_scored_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, lang, source, n_tok, wt_unats) — THE scored DSIR
     weight table over the fixture corpus, shared by q82 and q83 (one
     lineage, two views; the _SH_CTES one-copy discipline). Builds the
     importance model and scoring pass with ONE tokenization (the
     exploded token stream is pinned and threaded through both — the
-    q84 token-stream convention), materialized once per (session,
-    fixture) above fixture scale."""
-    import os as _os
-
-    from eventsgateway_spark.queries._util import (
-        fixture_fingerprint,
-        is_fixture_scale,
-        release_frame,
-    )
-
-    key = (spark.sparkContext.applicationId, _os.path.realpath(sf_dir))
-    fp = fixture_fingerprint(sf_dir)
-    hit = _DSIR_CACHE.get(key)
-    if hit is not None:
-        cached_fp, cached = hit
-        if cached_fp == fp:
-            return cached
-        del _DSIR_CACHE[key]
-        release_frame(cached)
+    q84 token-stream convention)."""
     from eventsgateway_spark.functions.text import tokens
 
-    from eventsgateway_spark.queries._util import doc_tokens_frame
-
     docs = spread(table(spark, sf_dir, "documents"))
-    dtf = doc_tokens_frame(spark, sf_dir)
     # ONE tokenization for the whole family: the exploded stream feeds
     # the model's cs/ct term aggregates AND the scoring join (was 3
     # separate explodes of the corpus). pin is identity at fixture
-    # scale, so the driver's oracle plans are untouched. r15 batch 2b:
-    # the one-time family build rides the session-shared tokenization.
+    # scale.
     tok = pin(
-        (
-            dtf.select("doc_id", "lang", F.explode("toks").alias("term"))
-            if dtf is not None
-            else docs.select(
-                "doc_id", "lang", F.explode(tokens("text")).alias("term")
-            )
-        ),
+        docs.select("doc_id", "lang", F.explode(tokens("text")).alias("term")),
         mode="persist",
     )
     lr, _meta = importance_model(docs, tok=tok)
-    wt = score_importance(docs, lr, tok=tok)
-    if not is_fixture_scale(docs):
-        wt = wt.localCheckpoint()
-        _DSIR_CACHE[key] = (fp, wt)
-    return wt
+    return score_importance(docs, lr, tok=tok)
 
 
 def _importance_ratio(c_tgt: F.Column, c_src: F.Column) -> F.Column:

@@ -22,7 +22,6 @@ hash-match after a defensive round(6).
 
 from __future__ import annotations
 
-import os
 import weakref
 
 from pyspark.sql import DataFrame, SparkSession
@@ -45,7 +44,6 @@ from eventsgateway_spark.queries import query
 from eventsgateway_spark.queries._util import (
     arrow_scorer,
     pin,
-    session_cache,
     spread,
     table,
 )
@@ -135,31 +133,14 @@ def q33_cosine_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the query's norm once per candidate (higher-order folds are
     # interpreted, not codegen'd), tripling the per-pair CPU of the
     # brute-force scan. Same grouping as the oracle: dot / (qn * cn).
-    # r15 batch 4: above fixture scale both brute-force sides ride the
-    # session-shared norm_frame (one scan + one norm-fold pass per
-    # session instead of two scans + two full-corpus folds per
-    # execution); fixture scale keeps the plain lineage below, so the
-    # driver-oracle plan (and its 2-fold plan pin) is byte-identical.
-    nf = norm_frame(spark, sf_dir)
-    if nf is not None:
-        v = nf.select("vec_id", "label", "e", F.col("nrm").alias("cn"))
-    else:
-        v = (
-            spread(table(spark, sf_dir, "embeddings"))
-            .select(
-                "vec_id",
-                "label",
-                as_double(F.col("embedding")).alias("e"),
-            )
-            # zero-norm exclusion — same semantic as norm_view (the score
-            # divides by qn * cn; ANSI would throw, and direction-free
-            # vectors have no place in a cosine ranking). Oracle mirrors.
-            # Filter on the SQUARED sum before projecting cn: a filter on
-            # the projected sqrt re-inlines below the projection and folds
-            # the vector twice with SQRT (the plan test pins 2 folds).
-            .filter(norm_sq(F.col("e")) > 0)
-            .withColumn("cn", norm(F.col("e")))
+    # Zero-norm vectors are excluded (norm_frame; the score divides by
+    # qn * cn). pin: both join sides read the norm view (cold qprof
+    # A/B at sf0.1: checkpoint 1.31 s, persist 1.33 s, off 1.41 s)
+    v = pin(
+        norm_frame(spark, sf_dir).select(
+            "vec_id", "label", "e", F.col("nrm").alias("cn")
         )
+    )
     q = v.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("qid"),
         F.col("label").alias("q_label"),
@@ -326,36 +307,23 @@ def q34_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     query pins the exact bucket assignment (integer-formula hyperplanes
     → oracle-reproducible). Zero-norm vectors are excluded on BOTH
     sides: they never enter a similarity index (norm_view semantic)."""
-    from eventsgateway_spark.queries._util import is_fixture_scale
-
     emb = table(spark, sf_dir, "embeddings")
     np_ = lsh_plane_count(emb, 8)
-    if not is_fixture_scale(emb):
-        # r15: ride the session-shared bucket table at this query's own
-        # geometry (np_, 1 table) — lsh_bucket(..., table_id=0) is
-        # bit-identical to the frame's tbl=0 lane — and join the label
-        # back on vec_id (the cached frame's zero-norm filter defines
-        # the same universe this query's inline filter did).
-        bt = lsh_bucket_frame(spark, sf_dir, np_, 1).select(
-            "vec_id", "bucket"
-        )
-        b = bt.join(emb.select("vec_id", "label"), "vec_id")
-    else:
-        v = (
-            spread(emb)
-            # zero-norm filter on the SQUARED sum, applied BEFORE any norm
-            # projection: predicate pushdown re-inlines a filtered column's
-            # defining expression below the projection, so filtering on a
-            # projected sqrt(fold) doubles the per-vector SQRT folds in the
-            # scan (caught by tests/test_plans.py::
-            # test_q33_norms_precomputed_below_join on the q33 twin).
-            # norm > 0 <=> norm_sq > 0 — sqrt is monotone on [0, inf).
-            .filter(norm_sq(as_double(F.col("embedding"))) > 0)
-            .select("vec_id", "label", F.col("embedding"))
-        )
-        b = v.select(
-            "vec_id", "label", lsh_bucket(F.col("embedding"), np_).alias("bucket")
-        )
+    v = (
+        spread(emb)
+        # zero-norm filter on the SQUARED sum, applied BEFORE any norm
+        # projection: predicate pushdown re-inlines a filtered column's
+        # defining expression below the projection, so filtering on a
+        # projected sqrt(fold) doubles the per-vector SQRT folds in the
+        # scan (caught by tests/test_plans.py::
+        # test_q33_norms_precomputed_below_join on the q33 twin).
+        # norm > 0 <=> norm_sq > 0 — sqrt is monotone on [0, inf).
+        .filter(norm_sq(as_double(F.col("embedding"))) > 0)
+        .select("vec_id", "label", F.col("embedding"))
+    )
+    b = v.select(
+        "vec_id", "label", lsh_bucket(F.col("embedding"), np_).alias("bucket")
+    )
     return (
         b.groupBy("bucket")
         .agg(
@@ -589,100 +557,35 @@ def q36_binary_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ND_PLANES = 6
 _ND_TABLES = 2
 
-# Session-scoped cache of the near-dup LSH bucket table — (vec_id,
-# tbl, bucket) at the family geometry, the near_dup_pair_frame
-# discipline (round-15): q38 generates candidates from it, q85 audits
-# its occupancies, and in a shared bench/notebook session each used
-# to re-run the zero-norm filter + T×p fold projections from scratch.
-# Keyed (applicationId, realpath(sf_dir), planes, tables) with the
-# embeddings fixture fingerprint; fixture scale stays uncached (the
-# driver's oracle runs hash-check each query's full lineage).
-_LSH_BUCKET_CACHE: dict[tuple[str, str, int, int], tuple[str, DataFrame]] = session_cache({})
-
-# Session-scoped cache of the zero-norm-filtered (vec_id, label, raw,
-# e, nrm) embeddings view — q38's verify sides re-derived it (cast +
-# norm fold + checkpoint job) once PER EXECUTION; it is fixture-derived
-# and |emb| rows, so it materializes once per (session, fixture) like
-# the bucket table above. Fixture scale stays uncached (pin() was
-# identity there anyway, so the driver-oracle plan is byte-identical).
-# r15 batch 4 widens it with ``label`` (8 bytes against a 64-dim
-# raw+double pair) so the whole exact-similarity family shares ONE
-# fold pass: q33's brute-force sides, q81's quantize input, q43's
-# centroid/probe sides and the IVF assignment build all start from
-# this frame — before, each execution re-scanned parquet and re-ran
-# the interpreted norm_sq/norm folds over every row.
-_NORM_CACHE: dict[tuple[str, str], tuple[str, DataFrame]] = session_cache({})
-
-
-def norm_frame(spark: SparkSession, sf_dir: str) -> DataFrame | None:
-    """The session-shared norm view above fixture scale; None at
-    fixture scale (callers keep their plain per-query lineage)."""
-    import os as _os
-
-    from eventsgateway_spark.queries._util import (
-        fixture_fingerprint,
-        is_fixture_scale,
-        release_frame,
-    )
-
-    emb = table(spark, sf_dir, "embeddings")
-    if is_fixture_scale(emb):
-        return None
-    key = (spark.sparkContext.applicationId, _os.path.realpath(sf_dir))
-    fp = fixture_fingerprint(sf_dir, "embeddings")
-    hit = _NORM_CACHE.get(key)
-    if hit is not None:
-        if hit[0] == fp:
-            return hit[1]
-        del _NORM_CACHE[key]
-        release_frame(hit[1])
-    v = (
-        spread(emb)
+def norm_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, label, raw, e, nrm) — the zero-norm-filtered embeddings
+    with the promoted doubles and their norm (norm_view plus ``label``
+    and the ``raw`` float array), the start of the exact-similarity
+    lineages (q33, q38, q81). Every call builds it anew; q33 and q81
+    pin their copy, q38's readers recompute it (each choice by cold
+    A/B)."""
+    return (
+        spread(table(spark, sf_dir, "embeddings"))
         .select(
             "vec_id",
             "label",
             F.col("embedding").alias("raw"),
             as_double(F.col("embedding")).alias("e"),
         )
+        # squared-sum filter BEFORE the norm projection (q33 plan-test
+        # discipline: a filter on projected sqrt re-folds with SQRT)
         .filter(norm_sq(F.col("e")) > 0)
-        .select(
-            "vec_id", "label", "raw", "e", norm(F.col("e")).alias("nrm")
-        )
-        .localCheckpoint()
+        .select("vec_id", "label", "raw", "e", norm(F.col("e")).alias("nrm"))
     )
-    _NORM_CACHE[key] = (fp, v)
-    return v
 
 
 def lsh_bucket_frame(
     spark: SparkSession, sf_dir: str, np_: int, nt_: int
 ) -> DataFrame:
-    """THE shared (vec_id, tbl, bucket) LSH table frame for the
-    embeddings fixture at geometry (np_, nt_) — JVM fold buckets
-    (bit-level the per-table constructions q38/q85 inline at fixture
-    scale), materialized once per (session, fixture, geometry)."""
-    import os as _os
-
-    from eventsgateway_spark.queries._util import (
-        fixture_fingerprint,
-        is_fixture_scale,
-        release_frame,
-    )
-
-    key = (
-        spark.sparkContext.applicationId,
-        _os.path.realpath(sf_dir),
-        np_,
-        nt_,
-    )
-    fp = fixture_fingerprint(sf_dir, "embeddings")
-    hit = _LSH_BUCKET_CACHE.get(key)
-    if hit is not None:
-        cached_fp, cached = hit
-        if cached_fp == fp:
-            return cached
-        del _LSH_BUCKET_CACHE[key]
-        release_frame(cached)
+    """THE (vec_id, tbl, bucket) LSH table frame for the embeddings
+    fixture at geometry (np_, nt_) — JVM fold buckets (bit-level the
+    per-table constructions q38/q85 inline at fixture scale); q38
+    generates candidates from it and q85 audits its occupancies."""
     emb = table(spark, sf_dir, "embeddings")
     v = (
         spread(emb)
@@ -699,9 +602,6 @@ def lsh_bucket_frame(
             lsh_bucket(F.col("embedding"), np_, t).alias("bucket"),
         )
         per_table = b if per_table is None else per_table.unionAll(b)
-    if not is_fixture_scale(emb):
-        per_table = per_table.localCheckpoint()
-        _LSH_BUCKET_CACHE[key] = (fp, per_table)
     return per_table
 _DUCK_ND_BUCKETS = "\n            UNION ALL ".join(
     f"SELECT vec_id, {t} AS tbl, {_duck_bucket(_ND_PLANES, t)} AS bucket FROM v"
@@ -751,23 +651,10 @@ def q38_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     verify step divides by n1 * n2)."""
     emb = table(spark, sf_dir, "embeddings")
     np_, nt_ = lsh_family(emb, _ND_PLANES, _ND_TABLES)
-    # session-shared norm view above fixture scale (norm_frame, r15);
-    # fixture scale keeps the plain pinned lineage below.
-    v = norm_frame(spark, sf_dir)
-    if v is None:
-        v = pin(
-            spread(emb)
-            .select(
-                "vec_id",
-                F.col("embedding").alias("raw"),
-                as_double(F.col("embedding")).alias("e"),
-            )
-            # filter on the squared sum BEFORE projecting nrm — a filter
-            # on the projected sqrt re-inlines below the projection and
-            # folds the vector twice with SQRT (q33 plan-test discipline)
-            .filter(norm_sq(F.col("e")) > 0)
-            .select("vec_id", "raw", "e", norm(F.col("e")).alias("nrm"))
-        )
+    # the bucket build and both verify sides read the norm view;
+    # unpinned, measured no slower than a pin at sf0.1 (cold qprof
+    # A/B: off 4.23 s, checkpoint 4.32 s, persist 5.89 s medians)
+    v = norm_frame(spark, sf_dir).select("vec_id", "raw", "e", "nrm")
     from eventsgateway_spark.queries._util import is_fixture_scale
 
     if (np_, nt_) == (_ND_PLANES, _ND_TABLES) and is_fixture_scale(emb):
@@ -790,9 +677,8 @@ def q38_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
             cand = p if cand is None else cand.unionAll(p)
     elif (np_, nt_) == (_ND_PLANES, _ND_TABLES):
         # floors geometry above fixture scale (bench regime): the SAME
-        # JVM-fold buckets from the session-shared bucket table (one
-        # lineage, two views — q85 audits the identical frame; r15,
-        # the near_dup_pair_frame discipline), with candidate
+        # JVM-fold buckets from lsh_bucket_frame (one lineage, two
+        # views — q85 audits the identical frame), with candidate
         # generation AND exact-cosine verify collapsed into ONE
         # groupBy(tbl, bucket) GEMM kernel (r15 batch 4 — the q70/q94
         # within-cell pattern applied to the LSH buckets): the old
@@ -804,31 +690,17 @@ def q38_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # shares a bucket in >=1 table), same HALF_UP law; pairs hit
         # in both tables collapse in the distinct below exactly like
         # the fold path's candidate distinct.
-        bt = lsh_bucket_frame(spark, sf_dir, np_, nt_)
-        if os.environ.get("SPARK_GRAFT_Q38_FOLD") != "1":
-            from eventsgateway_spark.shipping import ship_package
+        from eventsgateway_spark.shipping import ship_package
 
-            ship_package(spark)
-            return (
-                bt.join(v.select("vec_id", "e", "nrm"), "vec_id")
-                .groupBy("tbl", "bucket")
-                .applyInPandas(
-                    _bucket_pair_kernel, "id1 long, id2 long, cos_sim_u long"
-                )
-                .distinct()
-                .orderBy("id1", "id2")
-            )
-        # SPARK_GRAFT_Q38_FOLD=1 — the A/B kill switch (the
-        # SPARK_GRAFT_NO_DOCTOK convention): the pre-batch-4 shape,
-        # per-table joins collapsed to one (tbl, bucket) equi-join,
-        # verify via the tail's pair joins + interpreted dot folds.
-        x, y = bt.alias("x"), bt.alias("y")
-        cand = x.join(
-            y,
-            (F.col("x.tbl") == F.col("y.tbl"))
-            & (F.col("x.bucket") == F.col("y.bucket"))
-            & (F.col("x.vec_id") < F.col("y.vec_id")),
-        ).select(F.col("x.vec_id").alias("id1"), F.col("y.vec_id").alias("id2"))
+        ship_package(spark)
+        return (
+            lsh_bucket_frame(spark, sf_dir, np_, nt_)
+            .join(v.select("vec_id", "e", "nrm"), "vec_id")
+            .groupBy("tbl", "bucket")
+            .applyInPandas(_bucket_pair_kernel, "id1 long, id2 long, cos_sim_u long")
+            .distinct()
+            .orderBy("id1", "id2")
+        )
     else:
         # above the floors (no oracle runs here): ONE Arrow pass
         # computes all nt_ buckets per vector (the ladder made T·p
@@ -936,18 +808,9 @@ def ivf_centroids(emb: DataFrame, k: int = IVF_K) -> DataFrame:
     order is irrelevant downstream (assignment/probing argmin over
     (dist, cid) structs is order-free), so collect_list needs no
     ordering guarantee — true before and after this fix."""
-    return ivf_centroids_of(norm_view(emb), k)
-
-
-def ivf_centroids_of(nv: DataFrame, k: int = IVF_K) -> DataFrame:
-    """:func:`ivf_centroids` over an explicit (vec_id, e, ...) norm
-    view — r15 batch 4 split so a caller holding the session-shared
-    ``norm_frame`` can build the centroid row from the checkpointed
-    frame (a bounded TakeOrdered over cached rows) instead of
-    re-scanning parquet and re-folding every norm per execution. Same
-    composition, so ``ivf_centroids(emb, k)`` plans are unchanged."""
     return (
-        nv.orderBy("vec_id")
+        norm_view(emb)
+        .orderBy("vec_id")
         .limit(k)
         .select(F.struct(F.col("vec_id").alias("cid"), F.col("e").alias("ce")).alias("c"))
         .agg(F.collect_list("c").alias("cents"))
@@ -1098,61 +961,6 @@ def ivf_assign(emb: DataFrame, k: int = IVF_K) -> DataFrame:
     return ivf_assign_with(norm_view(emb), ivf_centroids(emb, k), k=k)
 
 
-# Session-scoped cache of the corpus IVF assignment — the
-# near_dup_pair_frame discipline (ext_dedup.py) applied to the
-# similarity family (round-15, guide §2.4): FOUR registry queries
-# consume the same (vec_id, e, nrm, cell_id) frame (q43 candidate
-# join, q70 within-cell dedup, q86 cell audit, q94 label vote), and
-# in a shared bench/notebook session each used to re-run the
-# centroid build + per-vector k×dim fold distances from scratch.
-# Keyed (applicationId, realpath(sf_dir), k) — q43 pins k at the
-# IVF_K oracle constant while q70/q86/q94 derive it from input size,
-# so the entries only coincide when the derived count sits at the
-# floor — with the EMBEDDINGS fixture fingerprint guarding in-place
-# regens. At fixture scale the plain lineage is returned uncached so
-# the driver's oracle runs hash-check each query independently.
-_IVF_ASSIGN_CACHE: dict[tuple[str, str, int], tuple[str, DataFrame]] = session_cache({})
-
-
-def ivf_assign_frame(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
-    """THE shared corpus IVF-assignment frame at cell count ``k``,
-    materialized once per (session, fixture, k) above fixture scale."""
-    import os as _os
-
-    from eventsgateway_spark.queries._util import (
-        fixture_fingerprint,
-        is_fixture_scale,
-        release_frame,
-    )
-
-    key = (spark.sparkContext.applicationId, _os.path.realpath(sf_dir), k)
-    fp = fixture_fingerprint(sf_dir, "embeddings")
-    hit = _IVF_ASSIGN_CACHE.get(key)
-    if hit is not None:
-        cached_fp, cached = hit
-        if cached_fp == fp:
-            return cached
-        del _IVF_ASSIGN_CACHE[key]
-        release_frame(cached)
-    emb = spread(table(spark, sf_dir, "embeddings"))
-    # r15 batch 4: the one-time build starts from the session-shared
-    # norm view when available (non-None exactly above fixture scale —
-    # same embeddings-size gate), so a session holding two cell counts
-    # (q43's IVF_K floor + the derived SemDeDup count) folds norms
-    # once, not once per k. The plain fallback keeps fixture scale
-    # (and any caller that stood the shared frame down) bit-identical.
-    nf = norm_frame(spark, sf_dir)
-    if nf is not None:
-        nv = nf.select("vec_id", "e", "nrm")
-        assign = ivf_assign_with(nv, ivf_centroids_of(nv, k), k=k)
-    else:
-        assign = ivf_assign(emb, k)
-    if not is_fixture_scale(emb):
-        assign = assign.localCheckpoint()
-        _IVF_ASSIGN_CACHE[key] = (fp, assign)
-    return assign
-
-
 def ivf_probe_with(
     v: DataFrame, cents: DataFrame, nprobe: int = IVF_NPROBE,
     k: int | None = None,
@@ -1297,21 +1105,9 @@ def q43_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     nprobe × cell occupancy, not corpus size. Deterministic centroids
     (first K ids) keep the whole query oracle-reproducible."""
     emb = spread(table(spark, sf_dir, "embeddings"))
-    assign = ivf_assign_frame(spark, sf_dir, IVF_K)
+    assign = ivf_assign(emb, IVF_K)
     query_pred = (F.col("vec_id") >= 10) & (F.col("vec_id") < 20)
-    # r15 batch 4: above fixture scale the probe side and the centroid
-    # row both come from the session-shared norm_frame — the
-    # per-execution centroid build was a full parquet scan + norm fold
-    # over every row feeding a TakeOrdered(k). Fixture scale keeps the
-    # plain ivf_probes lineage (driver-oracle plan byte-identical).
-    nf = norm_frame(spark, sf_dir)
-    if nf is not None:
-        nv = nf.select("vec_id", "e", "nrm")
-        probes = ivf_probe_with(
-            nv.filter(query_pred), ivf_centroids_of(nv, IVF_K), IVF_NPROBE
-        )
-    else:
-        probes = ivf_probes(emb, query_pred)
+    probes = ivf_probes(emb, query_pred)
     scored = (
         assign.join(F.broadcast(probes), "cell_id")
         .filter(F.col("vec_id") != F.col("qid"))
@@ -1454,24 +1250,9 @@ def q81_quantized_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     accumulation order), hence hash-identical across engines and
     partitionings. Quantized-vs-exact ranking agreement is pinned by
     tests/test_ext.py::test_quantized_ann_agrees_with_exact."""
-    # r15 batch 4: the quantize input is the session-shared norm view
-    # above fixture scale (one scan + fold pass per session — the q33
-    # rationale); the int8 code fold itself stays per-execution (it IS
-    # this query's operator). Fixture scale keeps the plain lineage.
-    nf = norm_frame(spark, sf_dir)
-    if nf is not None:
-        v = nf.select("vec_id", "label", "e", "nrm")
-    else:
-        v = (
-            spread(table(spark, sf_dir, "embeddings"))
-            .select(
-                "vec_id", "label", as_double(F.col("embedding")).alias("e")
-            )
-            # squared-sum filter BEFORE the norm projection (q33 plan-test
-            # discipline: a filter on projected sqrt re-folds with SQRT)
-            .filter(norm_sq(F.col("e")) > 0)
-            .withColumn("nrm", norm(F.col("e")))
-        )
+    # pin: both join sides read the norm view (cold qprof A/B at
+    # sf0.1: checkpoint 1.34 s, persist 1.39 s, off 1.64 s)
+    v = pin(norm_frame(spark, sf_dir).select("vec_id", "label", "e", "nrm"))
     from eventsgateway_spark.functions.vectors import dot_codes, sq8_codes
 
     u = v.select(
@@ -1771,7 +1552,7 @@ def q70_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus². Output: per-vector decision (vec_id, cell_id, dropped,
     max_prior_sim_u), totally ordered."""
     emb = spread(table(spark, sf_dir, "embeddings"))
-    assign = ivf_assign_frame(spark, sf_dir, semd_cell_count(emb))
+    assign = ivf_assign(emb, semd_cell_count(emb))
     from eventsgateway_spark.queries._util import is_fixture_scale
 
     if arrow_scorer() or not is_fixture_scale(emb):
@@ -1892,8 +1673,8 @@ def q85_lsh_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             per_table = b if per_table is None else per_table.unionAll(b)
     elif (np_, nt_) == (_ND_PLANES, _ND_TABLES):
         # floors geometry above fixture scale (bench regime): audit
-        # the session-shared bucket table q38 generates candidates
-        # from (one lineage, two views — r15)
+        # the bucket table q38 generates candidates from (one
+        # lineage, two views)
         per_table = lsh_bucket_frame(spark, sf_dir, np_, nt_).select(
             "tbl", "bucket"
         )
@@ -1964,7 +1745,7 @@ def q86_ivf_cell_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape: map-only assignment (broadcast centroid row), one hash
     aggregate on cell_id — the corpus is never reshuffled."""
     emb = spread(table(spark, sf_dir, "embeddings"))
-    assign = ivf_assign_frame(spark, sf_dir, semd_cell_count(emb))
+    assign = ivf_assign(emb, semd_cell_count(emb))
     return (
         assign.groupBy("cell_id")
         .agg(
@@ -2059,7 +1840,7 @@ def q94_knn_label_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
     join's input — the corpus-grain work is exactly q70's within-cell
     pair join, reused shape and bounds."""
     emb = spread(table(spark, sf_dir, "embeddings"))
-    assign = ivf_assign_frame(spark, sf_dir, semd_cell_count(emb))
+    assign = ivf_assign(emb, semd_cell_count(emb))
     labels = table(spark, sf_dir, "embeddings").select("vec_id", "label")
     from eventsgateway_spark.queries._util import is_fixture_scale
 

@@ -31,12 +31,7 @@ from eventsgateway_spark.functions.text import (
     tokens,
 )
 from eventsgateway_spark.queries import query
-from eventsgateway_spark.queries._util import (
-    doc_tokens_frame,
-    pin,
-    spread,
-    table,
-)
+from eventsgateway_spark.queries._util import doc_tokens_frame, spread, table
 
 # DuckDB-side token array (empties dropped) — mirror of text.tokens().
 from eventsgateway_spark.queries._util import DUCK_TOKS as _DUCK_TOKS
@@ -67,15 +62,10 @@ def q24_bigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language bigram frequencies (n-gram operator, n=2).
     transform over an index sequence builds the gram array JVM-side;
     explode + hash-aggregate is the scalable shape (no self-join)."""
-    dt = doc_tokens_frame(spark, sf_dir)
-    if dt is not None:
-        with_toks = dt.select("lang", "toks")
-    else:
-        docs = spread(table(spark, sf_dir, "documents").select("lang", "text"))
-        # project the token array BEFORE the n-gram lambda: inlined, the
-        # split+filter subtree would be re-evaluated per element reference
-        # (measured 5× slower at sf0.1)
-        with_toks = docs.select("lang", tokens("text").alias("toks"))
+    # the token array is a projected column BEFORE the n-gram lambda:
+    # inlined, the split+filter subtree would be re-evaluated per
+    # element reference (measured 5× slower at sf0.1)
+    with_toks = doc_tokens_frame(spark, sf_dir).select("lang", "toks")
     return (
         with_toks.select("lang", F.explode(ngrams(F.col("toks"), 2)).alias("bigram"))
         .groupBy("lang", "bigram")
@@ -122,30 +112,17 @@ def q25_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream), then the small scored slice is ranked. The n_docs scalar
     rides a broadcast cross-join — no driver-side collect."""
     docs = table(spark, sf_dir, "documents")
-    dt = doc_tokens_frame(spark, sf_dir)
-    # materialized once at scale: consumed by BOTH the document-
-    # frequency agg and the scored slice (recomputing the explode
-    # would double the token-stream cost)
-    # pin only when NOT riding the session-shared tokenization: with
-    # dt cached, both consumers recompute the aggregate from columnar
-    # cache blocks, which measured CHEAPER than the pin's extra job
-    # (r15 A/B: 1.46 → 1.37 s floor pin-off).
-    tf_base = (
-        (
-            dt.select("doc_id", F.explode("toks").alias("term"))
-            if dt is not None
-            else spread(docs.select("doc_id", "text")).select(
-                "doc_id", F.explode(tokens("text")).alias("term")
-            )
-        )
+    # tf feeds the document-frequency agg and the scored slice;
+    # unpinned, measured no slower than a pin at sf0.1 (cold qprof
+    # A/B: off 2.28 s, checkpoint 2.42 s, persist 2.58 s medians)
+    tf = (
+        spread(docs.select("doc_id", "text"))
+        .select("doc_id", F.explode(tokens("text")).alias("term"))
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
-    tf = tf_base if dt is not None else pin(tf_base)
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("dfreq"))
-    n_docs = (dt if dt is not None else docs).agg(
-        F.count(F.lit(1)).alias("n_docs")
-    )
+    n_docs = docs.agg(F.count(F.lit(1)).alias("n_docs"))
     scored = (
         tf.filter(F.col("doc_id") < 20)
         .join(dfreq, "term")
@@ -204,14 +181,11 @@ def q26_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Function-word language ID: count hits against tiny per-language
     stopword vocabularies, argmax with a fixed tie-break (en > es >
     und). Integer counts only — exactly reproducible."""
-    dt = doc_tokens_frame(spark, sf_dir)
     docs = (
-        dt.select("doc_id", "lang", "toks")
-        if dt is not None
-        else table(spark, sf_dir, "documents").select(
-            "doc_id", "lang", tokens("text").alias("toks")
-        )
-    ).filter(F.col("doc_id") < 100)
+        table(spark, sf_dir, "documents")
+        .select("doc_id", "lang", tokens("text").alias("toks"))
+        .filter(F.col("doc_id") < 100)
+    )
     toks = F.col("toks")
     hits = docs.select(
         "doc_id",
@@ -262,14 +236,11 @@ def q27_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     mass, mean token length, stopword ratio → keep/flag verdict.
     Ratios are single IEEE divisions of exact integers (deterministic
     across engines); thresholds mirror C4-style heuristics."""
-    dt = doc_tokens_frame(spark, sf_dir)
     docs = (
-        dt.select("doc_id", "n_chars", "text", "toks")
-        if dt is not None
-        else table(spark, sf_dir, "documents").select(
-            "doc_id", "n_chars", "text", tokens("text").alias("toks")
-        )
-    ).filter(F.col("doc_id") < 200)
+        table(spark, sf_dir, "documents")
+        .select("doc_id", "n_chars", "text", tokens("text").alias("toks"))
+        .filter(F.col("doc_id") < 200)
+    )
     toks = F.col("toks")
     m = docs.select(
         "doc_id",
@@ -323,14 +294,7 @@ def q28_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     count of documents sharing it (exact-sequence duplicate detector —
     the cheap first pass before fuzzy dedup). md5-derived token hashes
     keep the fold identical in both engines."""
-    dt = doc_tokens_frame(spark, sf_dir)
-    wt = (
-        dt.select("doc_id", "toks")
-        if dt is not None
-        else spread(
-            table(spark, sf_dir, "documents").select("doc_id", "text")
-        ).select("doc_id", tokens("text").alias("toks"))
-    )
+    wt = doc_tokens_frame(spark, sf_dir).select("doc_id", "toks")
     toks = F.col("toks")
     h = wt.select(
         "doc_id",
@@ -381,15 +345,7 @@ def q40_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     division truncates identically on positives in both engines — no
     IEEE division reaches the result); the subword regex sits in the
     Java-regex ∩ RE2 subset so both engines tokenize identically."""
-    dt = doc_tokens_frame(spark, sf_dir)
-    docs = (
-        dt
-        if dt is not None
-        else spread(
-            table(spark, sf_dir, "documents").select("source", "text")
-        ).select("source", "text", tokens("text").alias("toks"))
-    )
-    m = docs.select(
+    m = doc_tokens_frame(spark, sf_dir).select(
         "source",
         F.size("toks").alias("ws_tokens"),
         F.size(F.regexp_extract_all("text", F.lit(_SUBWORD_RE), F.lit(0))).alias(
@@ -499,12 +455,7 @@ def q51_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus token count, output rows ≈ tokens/stride per doc, no UDFs.
     At 100 TB the chunk table is written partitioned by a hash-split of
     doc_id (q47's operator) so downstream shuffles are balanced."""
-    dt = doc_tokens_frame(spark, sf_dir)
-    base = (
-        dt.select("doc_id", "toks")
-        if dt is not None
-        else spread(table(spark, sf_dir, "documents").select("doc_id", "text"))
-    )
+    base = doc_tokens_frame(spark, sf_dir).select("doc_id", "toks")
     return chunk_documents(base).orderBy("doc_id", "chunk_id")
 
 
@@ -585,19 +536,13 @@ def q53_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles: explode → broadcast-hash semi-side join → per-doc count.
     At 100 TB the eval gram set stays a broadcast (it scales with
     benchmark size, not corpus size)."""
-    dt = doc_tokens_frame(spark, sf_dir)
-    if dt is not None:
-        with_toks = dt.select("doc_id", "source", "toks")
-    else:
-        docs = spread(
-            table(spark, sf_dir, "documents").select("doc_id", "source", "text")
-        )
-        # toks is PROJECTED before the lambda-heavy gram derivation so the
-        # split/filter runs once per row, not once per ngrams reference
-        # (decon_toks docstring; plan pinned in test_plans.py).
-        with_toks = docs.select(
-            "doc_id", "source", decon_toks("text").alias("toks")
-        )
+    docs = spread(
+        table(spark, sf_dir, "documents").select("doc_id", "source", "text")
+    )
+    # toks is PROJECTED before the lambda-heavy gram derivation so the
+    # split/filter runs once per row, not once per ngrams reference
+    # (decon_toks docstring; plan pinned in test_plans.py).
+    with_toks = docs.select("doc_id", "source", decon_toks("text").alias("toks"))
     grams = with_toks.select(
         "doc_id",
         "source",
@@ -621,46 +566,6 @@ def q53_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 BLOOM_FPP = 1e-4  # gram-level false-positive probability
 
-# (applicationId, realpath(sf_dir)) -> (fixture fingerprint, filter).
-# The eval-side build (scan + distinct-hash collect) depends only on
-# the fixture, so repeated q79 builds in one session (bench warm-up +
-# timed runs) reuse one filter — the same session-scoped, fingerprint-
-# invalidated pattern as ext_dedup's _LABELS_CACHE. Eviction here also
-# drops the filter's broadcast (operators/bloom.drop_broadcast), so
-# the cap is a REAL memory bound on driver and executors — without
-# that, popping the dict entry would free nothing (the bitset lives on
-# in the broadcast layer, which keeps up to 4 on its own).
-_BLOOM_CACHE: dict[tuple[str, str], tuple[str, object]] = {}
-_BLOOM_CACHE_KEEP = 2
-
-
-def _eval_bloom_for(spark: SparkSession, sf_dir: str, eval_grams) -> object:
-    import os as _os
-
-    from eventsgateway_spark.operators.bloom import build_bloom, drop_broadcast
-    from eventsgateway_spark.queries._util import fixture_fingerprint
-
-    key = (spark.sparkContext.applicationId, _os.path.realpath(sf_dir))
-    fp = fixture_fingerprint(sf_dir)
-    hit = _BLOOM_CACHE.get(key)
-    if hit is not None and hit[0] == fp:
-        return hit[1]
-    bf = build_bloom(eval_grams, "g", fpp=BLOOM_FPP)
-    if hit is not None:  # same key, stale fixture: the overwrite below
-        # would strand the old bitset in the broadcast layer's own
-        # cache — release it so eviction stays a REAL memory bound
-        # (ADVICE r8; mirrors the size-cap path beneath).
-        drop_broadcast(spark, hit[1])
-    _BLOOM_CACHE[key] = (fp, bf)
-    stale = [k for k in _BLOOM_CACHE if k[0] != key[0]]
-    while stale or len(_BLOOM_CACHE) > _BLOOM_CACHE_KEEP:
-        old_key = stale.pop(0) if stale else next(iter(_BLOOM_CACHE))
-        _, old_bf = _BLOOM_CACHE.pop(old_key)
-        if old_key[0] == key[0]:  # same app: its broadcast may be live
-            drop_broadcast(spark, old_bf)
-    return bf
-
-
 @query("q79_bloom_decontaminate", declared=False)  # approximate (FP > 0) — invariant-tested in tests/test_bloom.py, never hash-declared
 def q79_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Test-set decontamination via a broadcast BLOOM FILTER instead of
@@ -675,25 +580,22 @@ def q79_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     — no explode, no join, NO shuffle at all (q53 shuffles nothing
     either, but ships the gram strings; here the executors receive
     only the bitset). Eval side: one distinct-hash aggregate, 8 bytes
-    per gram to the driver."""
-    from eventsgateway_spark.operators.bloom import bloom_probe_count_udf
+    per gram to the driver. Each execution builds its own filter."""
+    from eventsgateway_spark.operators.bloom import (
+        bloom_probe_count_udf,
+        build_bloom,
+    )
 
-    dt = doc_tokens_frame(spark, sf_dir)
-    if dt is not None:
-        with_toks = dt.select("doc_id", "source", "toks")
-    else:
-        docs = spread(
-            table(spark, sf_dir, "documents").select("doc_id", "source", "text")
-        )
-        # Same projected-toks shape as q53 — both the eval-side build and
-        # the probe side tokenize exactly once per scanned row.
-        with_toks = docs.select(
-            "doc_id", "source", decon_toks("text").alias("toks")
-        )
+    docs = spread(
+        table(spark, sf_dir, "documents").select("doc_id", "source", "text")
+    )
+    # Same projected-toks shape as q53 — both the eval-side build and
+    # the probe side tokenize exactly once per scanned row.
+    with_toks = docs.select("doc_id", "source", decon_toks("text").alias("toks"))
     eval_grams = with_toks.filter(F.col("source") == EVAL_SOURCE).select(
         F.explode(decon_grams(F.col("toks"))).alias("g")
     )
-    bf = _eval_bloom_for(spark, sf_dir, eval_grams)
+    bf = build_bloom(eval_grams, "g", fpp=BLOOM_FPP)
     probe = bloom_probe_count_udf(spark, bf)
     return (
         with_toks.filter(F.col("source") != EVAL_SOURCE)
@@ -736,12 +638,7 @@ def q56_repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     trigram's count (template pages repeat one phrase many times).
     Single explode → (doc, gram) count → per-doc rollup; integers
     except one final IEEE division, so exact everywhere."""
-    dt = doc_tokens_frame(spark, sf_dir)
-    if dt is not None:
-        with_toks = dt.select("doc_id", "toks")
-    else:
-        docs = spread(table(spark, sf_dir, "documents").select("doc_id", "text"))
-        with_toks = docs.select("doc_id", tokens("text").alias("toks"))
+    with_toks = doc_tokens_frame(spark, sf_dir).select("doc_id", "toks")
     c = (
         with_toks.select("doc_id", F.explode(ngrams(F.col("toks"), 3)).alias("g"))
         .groupBy("doc_id", "g")
@@ -834,16 +731,7 @@ def q65_text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     count is one window keyed by fingerprint. Every shuffle is keyed by
     doc_id / gram / fingerprint — per-document grain throughout, so the
     same plan holds on a 100 TB corpus."""
-    dt = doc_tokens_frame(spark, sf_dir)
-    docs = (
-        dt
-        if dt is not None
-        else spread(
-            table(spark, sf_dir, "documents").select(
-                "doc_id", "lang", "n_chars", "text"
-            )
-        )
-    )
+    docs = doc_tokens_frame(spark, sf_dir)
     toks = F.col("toks")
     # m fans out to the trigram branch (rep) and the profile branch,
     # deliberately UNpinned: column pruning gives each branch only its
@@ -857,7 +745,7 @@ def q65_text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = docs.select(
         "doc_id", "lang", "n_chars",
         F.length(F.regexp_replace("text", "[^a-z]", "")).alias("n_alpha"),
-        F.col("toks") if dt is not None else tokens("text").alias("toks"),
+        "toks",
     ).select(
         "doc_id", "lang", "n_chars", "n_alpha", "toks",
         F.size(toks).alias("n_tokens"),
@@ -963,16 +851,11 @@ def q71_lm_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     unchanged by the join and AQE's skew split covers 'the'-class
     fan-in. Per-doc reduce is one (doc_id) hash aggregate. Everything
     JVM built-ins; linear in corpus tokens."""
-    dt = doc_tokens_frame(spark, sf_dir)
-    if dt is not None:
-        tok = dt.select("doc_id", F.explode("toks").alias("term"))
-    else:
-        docs = spread(
-            table(spark, sf_dir, "documents").select("doc_id", "text")
-        )
-        tok = pin(
-            docs.select("doc_id", F.explode(tokens("text")).alias("term"))
-        )
+    docs = spread(table(spark, sf_dir, "documents").select("doc_id", "text"))
+    # tok feeds three consumers; unpinned, measured no slower than a
+    # pin at sf0.1 (cold qprof A/B: off 2.06 s, checkpoint 2.25 s,
+    # persist 2.20 s medians)
+    tok = docs.select("doc_id", F.explode(tokens("text")).alias("term"))
     cnt = tok.groupBy("term").agg(F.count(F.lit(1)).alias("c"))
     tot = tok.agg(F.count(F.lit(1)).alias("total"))
     lp = cnt.crossJoin(F.broadcast(tot)).select(
@@ -1055,32 +938,19 @@ def q84_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     volume unchanged. All JVM built-ins, linear in corpus tokens. At
     100 TB the trained bigram table is |distinct bigrams| rows —
     orders of magnitude below the corpus — and persists for reuse."""
-    dt = doc_tokens_frame(spark, sf_dir)
-    if dt is not None:
-        wt = dt.select("doc_id", "toks")
-        # exploding the cached attribute is safe here: there is no
-        # tokenizer left in the lineage for InferFiltersFromGenerate
-        # to duplicate (doc_tokens_frame docstring)
-        tok = dt.select("doc_id", F.explode("toks").alias("term"))
-    else:
-        docs = spread(
-            table(spark, sf_dir, "documents").select("doc_id", "text")
-        )
-        wt = docs.select("doc_id", tokens("text").alias("toks"))
-        # tokenizer INLINE in the explode (q71's shape), not via wt's
-        # projected column: exploding a projected ATTRIBUTE triggers
-        # InferFiltersFromGenerate, whose size(toks) > 0 predicate pushes
-        # below the projection and re-inlines the tokenizer TWICE into the
-        # filter (the q33 norm-fold class; caught by the decon-family
-        # single-tokenization sweep). The ngrams branch below is immune —
-        # its generator input is a full expression, which the rule skips.
-        tok = docs.select("doc_id", F.explode(tokens("text")).alias("term"))
-    # pin only off the shared cache (q25's r15 rationale; A/B floor
-    # 1.61 → 1.41 s pin-off when dt is cached)
-    bgs_base = wt.select(
-        "doc_id", F.explode(ngrams(F.col("toks"), 2)).alias("b")
-    )
-    bgs = bgs_base if dt is not None else pin(bgs_base)
+    docs = spread(table(spark, sf_dir, "documents").select("doc_id", "text"))
+    wt = docs.select("doc_id", tokens("text").alias("toks"))
+    # tokenizer INLINE in the explode (q71's shape), not via wt's
+    # projected column: exploding a projected ATTRIBUTE triggers
+    # InferFiltersFromGenerate, whose size(toks) > 0 predicate pushes
+    # below the projection and re-inlines the tokenizer TWICE into the
+    # filter (the q33 norm-fold class; caught by the decon-family
+    # single-tokenization sweep). The ngrams branch below is immune —
+    # its generator input is a full expression, which the rule skips.
+    tok = docs.select("doc_id", F.explode(tokens("text")).alias("term"))
+    # bgs feeds three consumers; a pin measured no faster at sf0.1
+    # (cold qprof A/B: off 3.34 s, checkpoint 3.39 s, persist 3.26 s)
+    bgs = wt.select("doc_id", F.explode(ngrams(F.col("toks"), 2)).alias("b"))
     cbg = bgs.groupBy("b").agg(F.count(F.lit(1)).alias("c_ab"))
     # left token via substring_index, NOT F.split: (a) no array
     # materialization per row, and (b) the decon-family plan sweep

@@ -10,7 +10,6 @@ hints for dims, decimal-exact money math).
 
 from __future__ import annotations
 
-import os
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
@@ -639,8 +638,7 @@ def q57_spend_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     the upper bound on the window's input rows — is under
     Q57_PREFIX_BYTES; past that (or when the size is unknowable:
     huge-counts-as-safe) the bit-identical distributed ``prefix`` twin
-    takes over automatically. ``SPARK_GRAFT_Q57_RANK`` still
-    overrides both ways."""
+    takes over automatically."""
     o = table(spark, sf_dir, "orders")
     c = table(spark, sf_dir, "customer")
     s = (
@@ -648,11 +646,9 @@ def q57_spend_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_custkey")
         .agg(as_double(F.sum(money("o_totalprice"))).alias("spend"))
     )
-    mode = os.environ.get("SPARK_GRAFT_Q57_RANK")
-    if not mode:
-        from eventsgateway_spark.queries._util import input_bytes
+    from eventsgateway_spark.queries._util import input_bytes
 
-        mode = "prefix" if input_bytes(c) > Q57_PREFIX_BYTES else "window"
+    mode = "prefix" if input_bytes(c) > Q57_PREFIX_BYTES else "window"
     return with_global_rank_battery(s, mode=mode)
 
 

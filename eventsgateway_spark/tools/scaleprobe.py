@@ -630,6 +630,7 @@ def run_probe(mults: tuple[int, ...] = (1, 10, 100), runs: int = 2,
               root: str = "/tmp/scaleprobe",
               probe_queries: tuple[str, ...] = PROBE_QUERIES) -> dict:
     from eventsgateway_spark.queries import QUERIES
+    from eventsgateway_spark.queries._util import unpin_all
     from eventsgateway_spark.session import get_spark
 
     spark = get_spark("scaleprobe")
@@ -644,21 +645,13 @@ def run_probe(mults: tuple[int, ...] = (1, 10, 100), runs: int = 2,
         for name in probe_queries:
             samples = []
             for _ in range(runs):
-                # Session-scoped lineage caches (cluster labels,
-                # near-dup pairs, media signatures/pairs, minhash and
-                # simhash families, tokenized documents, LSH buckets,
-                # IVF assignments, norms, DSIR weights) would make a
-                # cached run time the ~0 s reuse path and fake the
-                # growth exponent. Round 16 centralizes them in
-                # _util's session-cache registry (VERDICT r15 #4:
-                # this clear-list used to import module privates and
-                # a new cache could silently escape it); one call
-                # clears every registered cache.
-                from eventsgateway_spark.queries._util import (
-                    clear_session_caches,
-                )
-
-                clear_session_caches()
+                # every sample starts cold: a pin left by the previous
+                # sample (the registry wrapper keeps a query's own
+                # pins across its re-runs) would let a repeat time the
+                # reuse path and fake the growth exponent; released
+                # pins also stop accumulating across queries/scales
+                # and squeezing memory in the x100 timings
+                unpin_all()
                 t0 = time.perf_counter()
                 QUERIES[name](spark, sf_dir).write.format("noop").mode(
                     "overwrite"
@@ -666,13 +659,7 @@ def run_probe(mults: tuple[int, ...] = (1, 10, 100), runs: int = 2,
                 samples.append(time.perf_counter() - t0)
             results[name][mult] = round(min(samples), 2)
             print(f"x{mult} {name}: {results[name][mult]}s", flush=True)
-            # q60's pin(persist) frames survive GC until unpersisted
-            # (same hazard bench.py guards): left pinned, they
-            # accumulate across queries/scales and squeeze memory in
-            # the x100 timings this tool exists to measure honestly
-            from eventsgateway_spark.queries._util import unpin_all
-
-            unpin_all()
+        unpin_all()
         import gc
 
         gc.collect()

@@ -1003,69 +1003,39 @@ def test_asof_null_timestamps_match_nothing(spark):
     assert got == {1: None, 2: None}
 
 
-def test_dedup_cluster_labels_cache_evicts_on_fixture_change(spark, monkeypatch):
-    """A fixture regenerated IN-PLACE mid-session must miss the cache
-    (ADVICE r7): the key includes a mtime/size fingerprint of
-    documents.parquet, so a changed fingerprint evicts and rebuilds
-    instead of serving stale labels."""
-    import os
-
-    import eventsgateway_spark.queries.ext_dedup as ed
-
-    sf_big = "/root/testdata/sf0.1"
-    if not os.path.exists(os.path.join(sf_big, "documents.parquet")):
-        pytest.skip("sf0.1 fixture absent")
-    ed._LABELS_CACHE.clear()
-    try:
-        first = ed.dedup_cluster_labels(spark, sf_big)
-        assert ed.dedup_cluster_labels(spark, sf_big) is first
-        monkeypatch.setattr(ed, "_fixture_fingerprint", lambda _: "regenerated")
-        rebuilt = ed.dedup_cluster_labels(spark, sf_big)
-        assert rebuilt is not first
-        # the rebuilt entry is now the cached one
-        assert ed.dedup_cluster_labels(spark, sf_big) is rebuilt
-    finally:
-        ed._LABELS_CACHE.clear()
-
-
 def test_dedup_cluster_labels_shared_and_cached(spark):
-    """q32 and q77 must ride ONE materialization of the cluster-label
-    lineage (the round-6 driver bench ran the identical lineage twice,
-    3.4 s + 9.9 s). Above fixture scale the helper caches a
-    localCheckpoint per (session, fixture): a second call returns the
-    SAME frame (no recompute), and q32/q77 agree on every clustered
-    doc's label."""
+    """q32 and q77 read the one cluster-label lineage
+    (``dedup_cluster_labels``) and agree on every clustered doc's
+    label; the clustered docs are exactly the nodes of q30's
+    Jaccard>=0.5 pair graph."""
     import os
 
-    import eventsgateway_spark.queries.ext_dedup as ed
     from eventsgateway_spark.queries import QUERIES
 
     sf_big = "/root/testdata/sf0.1"
     if not os.path.exists(os.path.join(sf_big, "documents.parquet")):
         pytest.skip("sf0.1 fixture absent")
-    ed._LABELS_CACHE.clear()
-    try:
-        first = ed.dedup_cluster_labels(spark, sf_big)
-        assert ed._LABELS_CACHE, "sf0.1 is above fixture scale; must cache"
-        assert ed.dedup_cluster_labels(spark, sf_big) is first
-
-        q32_labels = {
-            r.doc_id: r.cluster_id
-            for r in QUERIES["q32_dedup_clusters"](spark, sf_big).collect()
-        }
-        q77_labels = {
-            r.doc_id: r.cluster_id
-            for r in QUERIES["q77_leakage_safe_split"](spark, sf_big).collect()
-        }
-        assert q32_labels  # the fixture has near-dups; the test must bite
-        for doc_id, cl in q32_labels.items():
-            assert q77_labels[doc_id] == cl
-        # docs outside the pair graph are their own cluster in q77
-        for doc_id, cl in q77_labels.items():
-            if doc_id not in q32_labels:
-                assert cl == doc_id
-    finally:
-        ed._LABELS_CACHE.clear()
+    q32_labels = {
+        r.doc_id: r.cluster_id
+        for r in QUERIES["q32_dedup_clusters"](spark, sf_big).collect()
+    }
+    q77_labels = {
+        r.doc_id: r.cluster_id
+        for r in QUERIES["q77_leakage_safe_split"](spark, sf_big).collect()
+    }
+    assert q32_labels  # the fixture has near-dups; the test must bite
+    for doc_id, cl in q32_labels.items():
+        assert q77_labels[doc_id] == cl
+    # docs outside the pair graph are their own cluster in q77
+    for doc_id, cl in q77_labels.items():
+        if doc_id not in q32_labels:
+            assert cl == doc_id
+    pair_nodes = {
+        d
+        for r in QUERIES["q30_jaccard_pairs"](spark, sf_big).collect()
+        for d in (r.d1, r.d2)
+    }
+    assert set(q32_labels) == pair_nodes
 
 
 def test_with_keep_first_branches_agree(spark):
@@ -1101,12 +1071,13 @@ def test_with_keep_first_branches_agree(spark):
     ]
 
 
-def test_with_owner_min_modes_agree(spark):
+def test_with_owner_min_modes_agree(spark, monkeypatch):
     """q72's ownership step has two row-identical plans: the default
     window form (one shuffle) and the groupBy+join 'agg' fallback for
     hot-key corpora (map-side combinable, AQE-splittable join-back).
     Equality pinned on data with a deliberately hot key, and q72
-    itself must produce identical rows under the env knob."""
+    itself must produce identical rows when its size bound forces the
+    agg form."""
     import pytest
 
     from eventsgateway_spark.queries.ext_dedup import with_owner_min
@@ -1129,28 +1100,24 @@ def test_with_owner_min_modes_agree(spark):
 
     from eventsgateway_spark.queries import QUERIES
 
-    ref = [tuple(r) for r in QUERIES["q72_substring_dedup"](spark, SF_ORACLE).collect()]
-    import os
+    import eventsgateway_spark.queries.ext_dedup as ed
 
-    os.environ["SPARK_GRAFT_Q72_OWNERSHIP"] = "agg"
-    try:
-        alt = [tuple(r) for r in QUERIES["q72_substring_dedup"](spark, SF_ORACLE).collect()]
-    finally:
-        del os.environ["SPARK_GRAFT_Q72_OWNERSHIP"]
+    ref = [tuple(r) for r in QUERIES["q72_substring_dedup"](spark, SF_ORACLE).collect()]
+    monkeypatch.setattr(ed, "Q72_AGG_BYTES", 0)
+    alt = [tuple(r) for r in QUERIES["q72_substring_dedup"](spark, SF_ORACLE).collect()]
     assert ref == alt
 
 
-def test_q57_rank_modes_agree(spark):
+def test_q57_rank_modes_agree(spark, monkeypatch):
     """with_global_rank_battery's prefix mode (distributed exact rank +
     arithmetic ntile/percent_rank/cume_dist — the 100 TB path) is
     row-identical to the native unpartitioned-window mode, including
     the ntile remainder distribution (N mod 10 != 0), the N=1
     percent_rank edge, and duplicate spends resolved by the custkey
     tiebreak."""
-    import os
-
     import pytest
 
+    import eventsgateway_spark.queries.relational as rel
     from eventsgateway_spark.queries import QUERIES
     from eventsgateway_spark.queries.relational import with_global_rank_battery
 
@@ -1166,11 +1133,8 @@ def test_q57_rank_modes_agree(spark):
         with_global_rank_battery(s, "salted")
 
     ref = [tuple(r) for r in QUERIES["q57_spend_deciles"](spark, SF_ORACLE).collect()]
-    os.environ["SPARK_GRAFT_Q57_RANK"] = "prefix"
-    try:
-        alt = [tuple(r) for r in QUERIES["q57_spend_deciles"](spark, SF_ORACLE).collect()]
-    finally:
-        del os.environ["SPARK_GRAFT_Q57_RANK"]
+    monkeypatch.setattr(rel, "Q57_PREFIX_BYTES", 0)
+    alt = [tuple(r) for r in QUERIES["q57_spend_deciles"](spark, SF_ORACLE).collect()]
     assert ref == alt
 
 
@@ -1222,43 +1186,6 @@ def test_importance_weights_favor_target_language(spark):
     assert sum(en) / len(en) > sum(rest) / len(rest)
     for r in rows:
         assert r.tgt_like == (1 if r.wt_unats >= 0 else 0)
-
-
-def test_near_dup_pair_frame_shared_and_evicts(spark, monkeypatch):
-    """The pair cache one level below the labels (round 11b): above
-    fixture scale a second call returns the SAME frame; a fixture
-    regenerated in-place (changed fingerprint) evicts and rebuilds;
-    at fixture scale nothing is cached (driver rows keep full
-    lineage); and the cached frame's values equal q30's output."""
-    import os
-
-    import eventsgateway_spark.queries.ext_dedup as ed
-    from eventsgateway_spark.queries import QUERIES
-
-    sf_big = "/root/testdata/sf0.1"
-    if not os.path.exists(os.path.join(sf_big, "documents.parquet")):
-        pytest.skip("sf0.1 fixture absent")
-    ed._PAIRS_CACHE.clear()
-    try:
-        first = ed.near_dup_pair_frame(spark, sf_big)
-        assert ed._PAIRS_CACHE, "sf0.1 is above fixture scale; must cache"
-        assert ed.near_dup_pair_frame(spark, sf_big) is first
-        got = {(r.d1, r.d2): r.jaccard for r in first.collect()}
-        want = {
-            (r.d1, r.d2): r.jaccard
-            for r in QUERIES["q30_jaccard_pairs"](spark, sf_big).collect()
-        }
-        assert got == want and got, "cached pairs must equal q30 output"
-        monkeypatch.setattr(ed, "_fixture_fingerprint", lambda _: "regen")
-        rebuilt = ed.near_dup_pair_frame(spark, sf_big)
-        assert rebuilt is not first
-        assert ed.near_dup_pair_frame(spark, sf_big) is rebuilt
-    finally:
-        ed._PAIRS_CACHE.clear()
-    # fixture scale: no caching
-    ed._PAIRS_CACHE.clear()
-    ed.near_dup_pair_frame(spark, "/root/testdata/sf0.001")
-    assert not ed._PAIRS_CACHE
 
 
 def test_bigram_lm_catches_shuffled_tokens(spark, tmp_path):
@@ -1877,206 +1804,71 @@ def test_perceptual_hash_null_payload_excluded(spark):
     assert [r["asset_id"] for r in audio_fingerprint(df).collect()] == [0]
 
 
-def test_media_sig_cache_shared_across_queries(spark):
-    """Above fixture scale the image/audio signature lineages are
-    session-cached (the _PAIRS_CACHE discipline): q89 warms the image
-    entry, q91 rides BOTH entries instead of re-running the
-    synth+decode+hash chains; at the driver's oracle scale (sf0.01)
-    the cache stays empty so every query hash-checks its full
-    lineage. Cached and uncached results are identical."""
-    from eventsgateway_spark.queries import QUERIES
-    from eventsgateway_spark.queries.ext_dedup import (
-        _MEDIA_SIG_CACHE,
-        media_sigs,
-    )
-    from eventsgateway_spark.queries._util import release_frame
-
-    # oracle scale: no caching
-    QUERIES["q89_image_dhash_near_dup"](spark, SF_ORACLE).count()
-    assert not _MEDIA_SIG_CACHE
-
-    sf01 = "/root/testdata/sf0.1"
-    try:
-        uncached = {
-            tuple(r)
-            for r in QUERIES["q91_cross_modal_dup_consensus"](
-                spark, sf01
-            ).limit(0).collect()  # build only — warm both entries
-        }
-        assert len(_MEDIA_SIG_CACHE) == 2  # image + audio at sf0.1
-        # a second consumer returns the SAME cached frame object
-        f1 = media_sigs(spark, sf01, "image")
-        f2 = media_sigs(spark, sf01, "image")
-        assert f1 is f2
-        got = {
-            tuple(r)
-            for r in QUERIES["q89_image_dhash_near_dup"](spark, sf01)
-            .limit(50).collect()
-        }
-        assert len(got) == 50  # rides the warm entry, still correct rows
-    finally:
-        from eventsgateway_spark.queries.ext_dedup import _MEDIA_PAIR_CACHE
-
-        for cache in (_MEDIA_SIG_CACHE, _MEDIA_PAIR_CACHE):
-            for _fp, frame in cache.values():
-                release_frame(frame)
-            cache.clear()
-
-
-def test_media_pair_cache_shared_and_exact(spark):
-    """round-15: the banded pair frame itself is session-cached one
-    level above the signature cache (q89 + q91 share the image pairs,
-    q90 + q91 the audio pairs). Cached rows must equal the uncached
-    construction exactly, the driver's oracle scale must stay
-    uncached, and a second consumer must get the SAME frame object."""
-    from eventsgateway_spark.queries import QUERIES
-    from eventsgateway_spark.queries.ext_dedup import (
-        IMG_HAM_BANDS,
-        IMG_HAM_MAX,
-        _IMG_BAND_W,
-        _MEDIA_PAIR_CACHE,
-        _MEDIA_SIG_CACHE,
-        hamming_band_pairs,
-        media_band_pairs,
-        media_sigs,
-    )
-    from eventsgateway_spark.queries._util import release_frame
-
-    # oracle scale: no caching, q89 still returns its full lineage
-    QUERIES["q89_image_dhash_near_dup"](spark, SF_ORACLE).count()
-    assert not _MEDIA_PAIR_CACHE
-
-    sf01 = "/root/testdata/sf0.1"
-    try:
-        cached = media_band_pairs(spark, sf01, "image")
-        assert media_band_pairs(spark, sf01, "image") is cached
-        fresh = hamming_band_pairs(
-            media_sigs(spark, sf01, "image"), "dhash",
-            IMG_HAM_BANDS, _IMG_BAND_W, IMG_HAM_MAX,
-        )
-        assert sorted(map(tuple, cached.collect())) == sorted(
-            map(tuple, fresh.collect())
-        )
-    finally:
-        for cache in (_MEDIA_SIG_CACHE, _MEDIA_PAIR_CACHE):
-            for _fp, frame in cache.values():
-                release_frame(frame)
-            cache.clear()
-
-
-def test_doc_tokens_frame_cache_and_parity(spark, monkeypatch):
-    """The r15 session-shared tokenized-documents lineage
-    (_util.doc_tokens_frame): None at fixture scale (driver-oracle
-    plans untouched), one cached columnar frame per (session, fixture)
-    above it, fingerprint-invalidated — and every converted consumer
-    must be row-identical on the shared path vs its plain fallback
-    lineage."""
+def test_queries_leave_no_module_state(spark):
+    """Queries keep no state between executions: after q79 (Bloom
+    filter), q92 (media signatures) and q31 (MinHash family) run over
+    sf0.1 and ``unpin_all()`` returns, no module-level dict, list or
+    tuple anywhere in ``eventsgateway_spark.queries`` holds a
+    DataFrame or a BloomFilter."""
     import os
+    import sys
 
-    import eventsgateway_spark.queries._util as u
-    import eventsgateway_spark.queries.ext_text as et
+    from pyspark.sql import DataFrame
+
+    from eventsgateway_spark.operators.bloom import BloomFilter
     from eventsgateway_spark.queries import QUERIES
-
-    # fixture scale: the helper must stand down entirely
-    assert u.doc_tokens_frame(spark, SF_ORACLE) is None
+    from eventsgateway_spark.queries._util import unpin_all
 
     sf01 = "/root/testdata/sf0.1"
     if not os.path.exists(os.path.join(sf01, "documents.parquet")):
         pytest.skip("sf0.1 fixture absent")
-    u._DOCTOK_CACHE.clear()
-    try:
-        first = u.doc_tokens_frame(spark, sf01)
-        assert first is not None and u._DOCTOK_CACHE
-        assert u.doc_tokens_frame(spark, sf01) is first
-        # in-place fixture regen must evict, not serve stale tokens
-        monkeypatch.setattr(u, "fixture_fingerprint", lambda *a, **k: "regen")
-        rebuilt = u.doc_tokens_frame(spark, sf01)
-        assert rebuilt is not None and rebuilt is not first
-        monkeypatch.undo()
+    for name in (
+        "q79_bloom_decontaminate",
+        "q92_media_band_stats",
+        "q31_minhash_lsh_pairs",
+    ):
+        QUERIES[name](spark, sf01).write.format("noop").mode("overwrite").save()
+    unpin_all()
 
-        # parity: shared path vs plain fallback for a representative
-        # consumer of each conversion shape (projected toks, exploded
-        # toks, pretokenized doc_shingles/simhash feed, agg-only)
-        names = (
-            "q24_bigram_counts",  # lang + ngram explode
-            "q29_exact_dedup_groups",  # canonical-key map-only
-            "q53_decontaminate",  # decon family, source + grams
-            "q63_simhash_hamming_pairs",  # pretokenized simhash_sigs
-            "q65_text_profile",  # widest facet consumer (text col too)
-            "q75_domain_mixture",  # pretokenized source_totals
-        )
-        shared = {
-            n: [tuple(r) for r in QUERIES[n](spark, sf01).collect()]
-            for n in names
-        }
-        for mod in (u, et):
-            monkeypatch.setattr(mod, "doc_tokens_frame", lambda *a: None)
-        plain = {
-            n: [tuple(r) for r in QUERIES[n](spark, sf01).collect()]
-            for n in names
-        }
-        monkeypatch.undo()
-        for n in names:
-            assert shared[n] == plain[n] and len(shared[n]) > 0, n
-    finally:
-        while u._DOCTOK_CACHE:
-            _, (_fp, frame) = u._DOCTOK_CACHE.popitem()
-            u.release_frame(frame)
+    def held(obj, depth=0):
+        if isinstance(obj, (DataFrame, BloomFilter)):
+            return True
+        if depth > 3:
+            return False
+        if isinstance(obj, dict):
+            obj = list(obj.keys()) + list(obj.values())
+        if isinstance(obj, (list, tuple)):
+            return any(held(x, depth + 1) for x in obj)
+        return False
+
+    leaks = [
+        f"{mod_name}.{attr}"
+        for mod_name, mod in list(sys.modules.items())
+        if mod_name.startswith("eventsgateway_spark.queries")
+        for attr, val in vars(mod).items()
+        if isinstance(val, (dict, list, tuple)) and held(val)
+    ]
+    assert not leaks, f"module state survives unpin_all: {leaks}"
 
 
-def test_norm_frame_shared_consumers_parity(spark, monkeypatch):
-    """The r15 batch-4 widening of the session-shared norm view
-    (ext_similarity.norm_frame): None at fixture scale (driver-oracle
-    plans untouched), carries ``label`` above it, and every consumer
-    converted this batch (q33 brute-force sides, q81 quantize input,
-    q43 centroid/probe sides) must be row-identical on the shared
-    path vs its plain per-query fallback lineage."""
+def test_bench_plans_are_plain_lineages(spark):
+    """The plan the bench times over sf0.1 is the plan the oracle
+    checks at fixture scale, up to pin() and spread(): q72 and q92,
+    which pin nothing, read no cached relation (InMemoryRelation)
+    and no checkpointed one (LogicalRDD)."""
     import os
 
-    import eventsgateway_spark.queries.ext_similarity as es
     from eventsgateway_spark.queries import QUERIES
-    from eventsgateway_spark.queries._util import release_frame
-
-    # fixture scale: the helper must stand down entirely
-    assert es.norm_frame(spark, SF_ORACLE) is None
 
     sf01 = "/root/testdata/sf0.1"
-    if not os.path.exists(os.path.join(sf01, "embeddings.parquet")):
+    if not os.path.exists(os.path.join(sf01, "documents.parquet")):
         pytest.skip("sf0.1 fixture absent")
-    for cache in (es._NORM_CACHE, es._IVF_ASSIGN_CACHE):
-        for _fp, frame in cache.values():
-            release_frame(frame)
-        cache.clear()
-    try:
-        first = es.norm_frame(spark, sf01)
-        assert first is not None and es._NORM_CACHE
-        assert es.norm_frame(spark, sf01) is first
-        assert "label" in first.columns  # batch 4: q33/q81 need it
-
-        names = ("q33_cosine_top3", "q81_quantized_ann", "q43_ivf_ann")
-        shared = {
-            n: [tuple(r) for r in QUERIES[n](spark, sf01).collect()]
-            for n in names
-        }
-        # plain fallback: stand the shared frame down everywhere (the
-        # IVF assignment cache must not serve the shared-path build)
-        for cache in (es._NORM_CACHE, es._IVF_ASSIGN_CACHE):
-            for _fp, frame in cache.values():
-                release_frame(frame)
-            cache.clear()
-        monkeypatch.setattr(es, "norm_frame", lambda *a: None)
-        plain = {
-            n: [tuple(r) for r in QUERIES[n](spark, sf01).collect()]
-            for n in names
-        }
-        monkeypatch.undo()
-        for n in names:
-            assert shared[n] == plain[n] and len(shared[n]) > 0, n
-    finally:
-        for cache in (es._NORM_CACHE, es._IVF_ASSIGN_CACHE):
-            for _fp, frame in cache.values():
-                release_frame(frame)
-            cache.clear()
+    for name in ("q72_substring_dedup", "q92_media_band_stats"):
+        plan = (
+            QUERIES[name](spark, sf01)._jdf.queryExecution().optimizedPlan().toString()
+        )
+        assert "InMemoryRelation" not in plan, name
+        assert "LogicalRDD" not in plan, name
 
 
 def test_q38_bucket_gemm_matches_fold(spark):
@@ -2150,82 +1942,6 @@ def test_q38_bucket_gemm_matches_fold(spark):
         ).collect()
     ]
     assert got == exp and len(got) > 0
-
-
-def test_unpin_all_evicts_session_caches(spark):
-    """Round 16 (VERDICT r15 #1/#4): bench.py's between-query
-    ``unpin_all()`` must return the session to a COLD state — every
-    session-scoped lineage cache is registered centrally in
-    ``_util._SESSION_CACHES`` and evicted, so per-query bench rows
-    measure cold per-query cost. Also pins the registry contents: a
-    cache that is not registered would silently escape both the bench
-    eviction and scaleprobe's growth sweep."""
-    import os
-
-    import eventsgateway_spark.queries._util as u
-    import eventsgateway_spark.queries.ext_dedup as ed
-    import eventsgateway_spark.queries.ext_sampling as esa
-    import eventsgateway_spark.queries.ext_similarity as es
-
-    expected = [
-        u._DOCTOK_CACHE,
-        ed._LABELS_CACHE,
-        ed._PAIRS_CACHE,
-        ed._MINHASH_CACHE,
-        ed._SIMHASH_SIG_CACHE,
-        ed._MEDIA_SIG_CACHE,
-        ed._MEDIA_PAIR_CACHE,
-        es._LSH_BUCKET_CACHE,
-        es._NORM_CACHE,
-        es._IVF_ASSIGN_CACHE,
-        esa._DSIR_CACHE,
-    ]
-    registered = {id(c) for c in u._SESSION_CACHES}
-    missing = [i for i, c in enumerate(expected) if id(c) not in registered]
-    assert not missing, f"unregistered session caches at indexes {missing}"
-
-    sf01 = "/root/testdata/sf0.1"
-    if not os.path.exists(os.path.join(sf01, "documents.parquet")):
-        pytest.skip("sf0.1 fixture absent")
-    try:
-        assert u.doc_tokens_frame(spark, sf01) is not None
-        assert es.norm_frame(spark, sf01) is not None
-        assert u._DOCTOK_CACHE and es._NORM_CACHE
-        u.unpin_all()
-        for cache in u._SESSION_CACHES:
-            assert not cache, "unpin_all left a session cache populated"
-    finally:
-        u.unpin_all()  # a failed assert must not leave the caches pinned
-
-
-def test_clear_session_caches_survives_malformed_entry(spark):
-    """One cache value that breaks the ``(fingerprint, DataFrame |
-    tuple[DataFrame])`` contract must not stop the rest from being
-    released: every well-formed frame — in later caches and later in
-    the same cache — is unpersisted, every cache is emptied, and the
-    malformed entry is still reported."""
-    import eventsgateway_spark.queries._util as u
-
-    frames = [spark.range(3).persist() for _ in range(3)]
-    for df in frames:
-        df.count()
-    bad_cache = {"bad": "not-a-pair", "ok": ("fp", frames[0])}
-    good_cache = {"one": ("fp", frames[1]), "many": ("fp", (frames[2],))}
-    u._SESSION_CACHES.insert(0, bad_cache)
-    u._SESSION_CACHES.append(good_cache)
-    try:
-        with pytest.raises(TypeError, match="'bad'"):
-            u.clear_session_caches()
-        assert not bad_cache and not good_cache
-        assert not any(df.is_cached for df in frames)
-    finally:
-        # by identity: list.remove() compares by value and would take
-        # out the first registered cache that is also empty
-        u._SESSION_CACHES[:] = [
-            c for c in u._SESSION_CACHES if c is not bad_cache and c is not good_cache
-        ]
-        for df in frames:
-            df.unpersist()
 
 
 def test_media_batch_kernels_match_scalar_law():

@@ -503,8 +503,9 @@ def test_scale_mode_auto_pick_at_fixture_scale(spark):
     # window-mode ownership: min(doc_id) as a window function over h
     assert "windowspecdefinition(h" in q72
     # and size-unknowable inputs take the distributed twin (the
-    # huge-counts-as-safe direction): exercised via the env override
-    # equality tests in test_ext.py plus input_bytes' sentinel.
+    # huge-counts-as-safe direction): exercised by the mode-equality
+    # tests in test_ext.py (size bound patched to 0) plus
+    # input_bytes' sentinel.
 
 
 def test_q33_norms_precomputed_below_join(spark):

@@ -292,10 +292,12 @@ def doc_tokens_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     source, n_chars, text, toks) with ``toks =
     functions.text.tokens(text)``, spread() across the session's
     cores above fixture scale. A plain lineage: every call builds it
-    anew, and a consumer that reads it more than once pins it.
-    Explode ``toks`` with the short-doc guard inside the generator or
-    after a real projection — a ``filter(size(toks) ...)`` is pushed
-    below the projection and tokenizes twice (test_plans.py)."""
+    anew, and a consumer pins its own projection where a cold A/B says
+    the pin pays (q60, q78). Never
+    explode the bare ``toks`` column: InferFiltersFromGenerate adds a
+    ``size(toks) > 0`` filter that is pushed below the projection and
+    tokenizes twice (test_plans.py); explode an expression over it
+    (ngrams, a ``when`` guard) or ``tokens(text)`` inline instead."""
     from eventsgateway_spark.functions.text import tokens
 
     return spread(table(spark, sf_dir, "documents")).select(

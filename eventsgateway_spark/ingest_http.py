@@ -123,21 +123,22 @@ def ingest_events(
     The index list is sorted and unique, matching the semantics (not
     the goroutine-append ordering) of the reference's FailureIndexes.
 
-    Per-request shape: two Spark jobs and one Python-worker task. The
-    verdict job collects ONE tagged outcome frame — the quarantine
-    rows unioned with the encoded valid rows, the size verdict a
-    column — so the Avro encode runs once (the only Python task, and
-    none with native ``to_avro``). The sink job publishes the collected
-    bytes of the accepted rows, in request order, from a local
-    relation: the published payloads are the bytes the size check saw,
-    and no encode or ``current_timestamp()`` is re-run for them."""
+    Per-request shape: two Spark jobs of one task each, and no
+    Python-worker task. The verdict job collects ONE tagged outcome
+    frame — the quarantine rows unioned with the encoded valid rows,
+    the size verdict a column — so the Avro encode (a JVM expression)
+    runs once. The sink job publishes the collected bytes of the
+    accepted rows, in request order, from a local relation: the
+    published payloads are the bytes the size check saw, and no encode
+    or ``current_timestamp()`` is re-run for them."""
     if not events:
         return [], {}
     rows, reasons = _wire_rows(events)
     if not rows:
         return sorted(reasons), reasons
-    # one partition per request, so each job is one task per union
-    # branch and the bus write commits one part file; both frames are
+    # one partition per request: both union branches are then single-
+    # partition, which Spark unions partition-wise into ONE verdict
+    # task, and the bus write commits one part file; both frames are
     # local relations with no locality preference to wait on
     wire = local_frame(spark, rows, _HTTP_WIRE_SCHEMA).coalesce(1)
     encoded, quarantine = encode(spark, wire)

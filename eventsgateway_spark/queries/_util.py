@@ -157,11 +157,12 @@ def pin(df: DataFrame, mode: str = "checkpoint") -> DataFrame:
       3.7× faster than checkpoint on q31's band self-join at sf0.1).
 
     At fixture scale any materialization job costs more than the
-    recompute it saves, so the frame is returned untouched. A persist
-    pin lives until ``unpin_all()`` or the next registry query's
-    ``unpin_others`` releases it; checkpoint blocks are left to
-    Spark's ContextCleaner. 100 TB posture: a long-lived pinned frame
-    should graduate to a persisted/bucketed table (SCALE.md)."""
+    recompute it saves, so the frame is returned untouched. A pin of
+    either materializing mode lives until ``unpin_all()`` or the next
+    registry query's ``unpin_others`` releases it (``release_frame``
+    frees persisted and checkpointed blocks alike). 100 TB posture: a
+    long-lived pinned frame should graduate to a persisted/bucketed
+    table (SCALE.md)."""
     if mode not in ("off", "persist", "checkpoint"):
         # checked at every scale: a typo'd mode must fail in the
         # fixture-scale tests, not first in a bench run
@@ -181,13 +182,14 @@ def pin(df: DataFrame, mode: str = "checkpoint") -> DataFrame:
         # results. Measured at sf0.1 (interleaved A/B, round-15):
         # q38 3.43→1.84, q60 4.98→4.07, q85 1.50→1.17, q63 1.72→1.59.
         df = df.persist()
-        _PINNED.append((_PIN_OWNER, df))
-        return df
-    return df.localCheckpoint()
+    else:
+        df = df.localCheckpoint()
+    _PINNED.append((_PIN_OWNER, df))
+    return df
 
 
-# Persisted frames created by pin(mode="persist"), tagged with the
-# registry query that created them. STRONG references on purpose
+# Frames materialized by pin() (persisted or checkpointed), tagged with
+# the registry query that created them. STRONG references on purpose
 # (ADVICE r6 considered weakrefs): SQL persist registers the plan in
 # the JVM CacheManager, which holds the blocks until an explicit
 # unpersist — a GC'd Python handle would make the entry permanently
@@ -264,23 +266,27 @@ def _release(df: DataFrame) -> None:
 
 
 def unpin_others(current: str) -> None:
-    """Unpersist every pin owned by a different query (or by no query).
+    """Release every pin owned by a different query (or by no query),
+    and ``current``'s own checkpoint pins: a re-run checkpoints anew,
+    so only its persist pins (same-plan persist is dedup'd) carry over.
     Results already materialized by the owning action are unaffected.
-    Release is REAL for checkpoint-mode pins too (release_frame): a
+    Release is REAL for checkpoint-mode pins (release_frame): a
     released checkpoint frame cannot be recomputed (truncated
     lineage), which is fine under the single-threaded-build contract —
     every driver/bench/pytest flow collects a query's result before
     the next query's build triggers this release — but means persist-
     mode semantics (silent recompute) do NOT extend to checkpoints."""
-    keep = [(o, df) for o, df in _PINNED if o == current]
+    keep = []
     for o, df in _PINNED:
-        if o != current:
+        if o == current and df.is_cached:  # one of current's persist pins
+            keep.append((o, df))
+        else:
             _release(df)
     _PINNED[:] = keep
 
 
 def unpin_all() -> None:
-    """Release every persist pin (called between bench.py / qprof /
+    """Release every pin (called between bench.py / qprof /
     scaleprobe samples). Queries keep no other state between
     executions: each builds its whole lineage on every call."""
     while _PINNED:

@@ -45,9 +45,10 @@ AVRO_EVENT_SCHEMA = T.StructType(
     ]
 )
 
-#: The Avro schema JSON itself (verbatim semantics of .ipynb:36-70);
-#: used by the codec in sources/avro_codec.py and by native
-#: to_avro/from_avro when the spark-avro jar is on the classpath.
+#: The Avro schema JSON itself (verbatim semantics of .ipynb:36-70):
+#: the wire contract that the JVM codec (eventsgateway_spark/jvm/) and
+#: the Python reference codec in sources/avro_codec.py implement for
+#: this one schema, field by field.
 AVRO_EVENT_SCHEMA_JSON = """
 {
   "namespace": "com.tfgco.eventsgateway",

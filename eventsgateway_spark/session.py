@@ -57,7 +57,7 @@ def get_spark(app_name: str = "eventsgateway_spark", **extra_confs: str) -> Spar
     """
     # Python workers inherit PYTHONPATH from their parent process env,
     # not the driver's sys.path — without this, any pickled function
-    # referencing the package (pandas-UDF Avro fallback, UDTFs) fails
+    # referencing the package (multimodal decode, UDTFs) fails
     # with ModuleNotFoundError when the caller runs outside the repo
     # root. Local mode: the driver env var reaches the workers (must be
     # set before the first JVM starts). Cluster mode: executors spawn

@@ -13,8 +13,9 @@ with ModuleNotFoundError (observed on the Arrow-scorer sweep from a
 deployment does: zip the package once per session and
 ``sc.addPyFile`` it, which places it on every executor's PYTHONPATH
 (current and future). Idempotent and cheap (~100 KB); called lazily by
-every code path that creates a by-reference Python UDF (Avro fallback
-codec, multimodal decode, Arrow scorers).
+every code path that creates a by-reference Python UDF (multimodal
+decode, Arrow scorers, UDTFs). The Avro codec is JVM code and needs no
+shipping.
 """
 
 from __future__ import annotations

@@ -3,35 +3,49 @@
 The reference serializes events with compiled Avro codegen
 (server/sender/kafka.go:102-117; schema embedded at
 spark-notebook/eventsgateway-streaming.ipynb:36-70) and the notebook
-decodes with Spark's ``from_avro``. This container has no spark-avro
-connector jar, so the engine carries its own spec-conformant binary
-codec for the one fixed Event schema (Avro 1.x binary encoding: zigzag
-varint longs, length-prefixed utf8 strings, block-encoded maps),
-exposed as Arrow-batched pandas UDFs.
+decodes with Spark's ``from_avro``. The spark-avro connector is not a
+Spark built-in, but the Avro library it wraps ships in Spark's own
+jars, so the engine carries one JVM codec for the one fixed Event
+schema: two Java UDFs (``eventsgateway_spark/jvm/``) over Avro's
+binary encoder and decoder. ``to_avro_col``/``from_avro_col`` return
+plain JVM expressions, so neither the ingest encode nor the ETL decode
+starts a Python worker.
 
-When the spark-avro jar IS on the classpath (any real cluster),
-``to_avro_col``/``from_avro_col`` transparently use the native
-JVM functions instead — same wire bytes either way, verified by the
-round-trip tests.
+The sources are compiled with ``javac`` on the first codec use in a
+JVM, into ``eventsgateway_spark/jvm/build/`` keyed by their hash, so a
+checkout compiles once per source change; a host without ``javac``
+gets an error that says so.
+
+``encode_event``/``decode_event`` are a pure-Python implementation of
+the same binary encoding (zigzag varint longs, length-prefixed utf8
+strings, block-encoded maps). They are the reference the JVM codec is
+tested against byte for byte, and what clients and tests use to read
+payloads on the driver.
 """
 
 from __future__ import annotations
 
-import pandas as pd
+import hashlib
+import os
+import shutil
+import subprocess
+import tempfile
+import threading
+import zipfile
+
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from eventsgateway_spark.schemas import AVRO_EVENT_SCHEMA, AVRO_EVENT_SCHEMA_JSON
+from eventsgateway_spark.schemas import AVRO_EVENT_SCHEMA
 
 # ---------------------------------------------------------------------------
 # Pure-Python Avro binary primitives (Avro spec §Binary Encoding)
 #
-# Batch-first (round-7): the fallback runs inside Arrow-batched pandas
-# UDFs, so the unit of work is the BATCH, not the row. Encoding appends
-# into one bytearray per record with a precomputed varint table for the
-# common small lengths; decoding walks a bytes object with an integer
-# cursor (no BytesIO, no per-byte .read(1) allocation). Measured ~5-8x
-# over the previous per-row BytesIO codec on the loadtest workload.
+# Encoding appends into one bytearray per record with a precomputed
+# varint table for the common small lengths; decoding walks a bytes
+# object with an integer cursor (no BytesIO, no per-byte .read(1)
+# allocation), so checking many payloads on the driver stays cheap.
 # ---------------------------------------------------------------------------
 
 # zigzag varint encodings for 0..1023 — covers string/map lengths and
@@ -192,109 +206,143 @@ def decode_event(raw: bytes) -> dict:
 
 
 # ---------------------------------------------------------------------------
-# Spark column-level API
+# Spark column-level API: the JVM codec
 # ---------------------------------------------------------------------------
 
-
-_NATIVE_AVRO: bool | None = None
-
-
-def native_avro_available(spark: SparkSession) -> bool:
-    """True if the spark-avro SQL functions are actually usable.
-
-    Probing the classloader (``Class.forName``) is a false positive on
-    distributions that ship the avro classes without registering the SQL
-    functions (``AVRO_NOT_LOADED_SQL_FUNCTIONS_UNUSABLE`` at call time).
-    The only reliable probe is executing a tiny ``to_avro`` expression
-    end-to-end and falling back to the pandas codec on any failure.
-    """
-    global _NATIVE_AVRO
-    if _NATIVE_AVRO is None:
-        try:
-            from pyspark.sql.avro.functions import to_avro
-
-            probe = spark.range(1).select(
-                to_avro(F.struct(F.lit("x").alias("a"))).alias("v")
-            )
-            probe.collect()
-            _NATIVE_AVRO = True
-        except Exception:
-            _NATIVE_AVRO = False
-    return _NATIVE_AVRO
+_JVM_SRC = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "jvm"
+)
+#: Compiled jars, one per source hash (git-ignored).
+BUILD_DIR = os.path.join(_JVM_SRC, "build")
+_SOURCES = ("EventAvroEncode.java", "EventAvroDecode.java")
+_PACKAGE = "eventsgateway_spark.jvm."
+#: One class from each jar the sources compile against; the running
+#: JVM says where it loaded them from.
+_CLASSPATH_ANCHORS = (
+    "org.apache.avro.io.EncoderFactory",
+    "org.apache.spark.sql.api.java.UDF6",
+    "scala.collection.Seq",
+    "scala.reflect.api.TypeTags",  # named by functions.udf's overloads
+)
+_UDFS_ATTR = "_eventsgateway_avro_udfs"
+# The threading HTTP ingest server can make its first codec calls from
+# several threads at once; one of them builds and registers.
+_UDFS_LOCK = threading.Lock()
 
 
-def _pandas_encode(
-    id_s: pd.Series, name_s: pd.Series, props_s: pd.Series, sts: pd.Series, cts: pd.Series
-) -> pd.Series:
-    # .tolist() up front: iterating python lists skips the per-element
-    # Series __getitem__/dtype machinery inside the hot loop
-    enc = _encode_one
-    out: list[bytes] = []
-    for i, n, p, s, c in zip(
-        id_s.tolist(), name_s.tolist(), props_s.tolist(),
-        sts.tolist(), cts.tolist(),
-    ):
-        ba = bytearray()
-        enc(ba, i, n, p, int(s), int(c))
-        out.append(bytes(ba))
-    return pd.Series(out)
-
-
-def _pandas_decode(raw: pd.Series) -> pd.DataFrame:
-    ids, names, props, sts, cts = _decode_batch(
-        [bytes(b) for b in raw.tolist()]
+def _javac() -> str:
+    home = os.environ.get("JAVA_HOME")
+    search = os.pathsep.join(
+        p for p in (home and os.path.join(home, "bin"), os.environ.get("PATH")) if p
     )
-    # columnar construction — pd.DataFrame.from_records re-infers every
-    # row; building the five columns directly is the Arrow-friendly shape
-    return pd.DataFrame(
-        {
-            "id": ids,
-            "name": names,
-            "props": props,
-            "serverTimestamp": sts,
-            "clientTimestamp": cts,
-        }
-    )
+    javac = shutil.which("javac", path=search)
+    if javac is None:
+        raise RuntimeError(
+            "the Avro codec is compiled from eventsgateway_spark/jvm/*.java "
+            "on first use and needs javac (a JDK 17 or newer) on PATH or "
+            "under JAVA_HOME; no javac was found"
+        )
+    return javac
+
+
+def codec_jar(classpath: list[str]) -> str:
+    """Path of the codec jar for the current Java sources, compiling
+    it against ``classpath`` if this source hash has no jar yet. The
+    jar is written under a temporary name and renamed into place, so
+    concurrent builders never expose a partial jar."""
+    sources = [os.path.join(_JVM_SRC, name) for name in _SOURCES]
+    digest = hashlib.sha256()
+    for path in sources:
+        with open(path, "rb") as fh:
+            digest.update(fh.read())
+    jar = os.path.join(BUILD_DIR, f"event-avro-{digest.hexdigest()[:16]}.jar")
+    if os.path.exists(jar):
+        return jar
+    javac = _javac()
+    os.makedirs(BUILD_DIR, exist_ok=True)
+    with tempfile.TemporaryDirectory(prefix=".compile-", dir=BUILD_DIR) as tmp:
+        classes = os.path.join(tmp, "classes")
+        # a short-lived compiler: the C1 JIT and serial GC start fastest
+        proc = subprocess.run(
+            [javac, "-J-XX:TieredStopAtLevel=1", "-J-XX:+UseSerialGC",
+             "--release", "17", "-proc:none", "-nowarn",
+             "-cp", os.pathsep.join(classpath), "-d", classes, *sources],
+            capture_output=True, text=True,
+        )
+        if proc.returncode != 0:
+            raise RuntimeError(f"javac failed on {_JVM_SRC}:\n{proc.stderr}")
+        staged = os.path.join(tmp, "codec.jar")
+        with zipfile.ZipFile(staged, "w") as zf:
+            for dirpath, _dirs, names in os.walk(classes):
+                for name in names:
+                    full = os.path.join(dirpath, name)
+                    zf.write(full, os.path.relpath(full, classes))
+        os.replace(staged, jar)
+    return jar
+
+
+def _codec_udfs(spark: SparkSession):
+    """The (encode, decode) JVM UDFs, built once per SparkContext: the
+    jar is compiled if needed and added to the session with ADD JAR,
+    then both UDF classes are loaded through the session's jar
+    class loader."""
+    sc = spark.sparkContext
+    udfs = getattr(sc, _UDFS_ATTR, None)
+    if udfs is not None:
+        return udfs
+    with _UDFS_LOCK:
+        udfs = getattr(sc, _UDFS_ATTR, None)
+        if udfs is not None:
+            return udfs
+        jvm, jss = spark._jvm, spark._jsparkSession
+        classpath = [
+            jvm.java.io.File(
+                jvm.java.lang.Class.forName(name).getProtectionDomain()
+                .getCodeSource().getLocation().toURI()
+            ).getPath()
+            for name in _CLASSPATH_ANCHORS
+        ]
+        spark.sql(f"ADD JAR '{codec_jar(classpath)}'")
+        loader = jss.sharedState().jarClassLoader()
+
+        def udf(cls: str, return_type: T.DataType, name: str):
+            impl = jvm.java.lang.Class.forName(_PACKAGE + cls, True, loader)
+            jtype = jss.parseDataType(return_type.json())
+            return impl.newInstance().toUdf(jtype).withName(name)
+
+        # Nondeterministic only to the optimizer: it then neither pushes
+        # a filter on the encoded bytes (size_limit) through the
+        # projection that computes them nor collapses that projection
+        # into its consumers, either of which would encode twice.
+        encode = udf("EventAvroEncode", T.BinaryType(), "egw_avro_encode")
+        udfs = (
+            encode.asNondeterministic(),
+            udf("EventAvroDecode", AVRO_EVENT_SCHEMA, "egw_avro_decode"),
+        )
+        setattr(sc, _UDFS_ATTR, udfs)
+    return udfs
+
+
+def _apply(spark: SparkSession, judf, *cols: Column) -> Column:
+    from pyspark.sql.classic.column import _to_java_column, _to_seq
+
+    return Column(judf.apply(_to_seq(spark.sparkContext, cols, _to_java_column)))
 
 
 def to_avro_col(spark: SparkSession) -> Column:
     """Column expression encoding the five storage fields into Avro
     bytes. Input columns: id, name, props, serverTimestamp,
-    clientTimestamp."""
-    # NULL props must encode as an empty map on BOTH paths: the Avro
-    # schema types props as a non-nullable map, so the native to_avro
-    # would throw at runtime on a null row — a DataFrame that works in
-    # the fallback container (encode_event coerces None to {}) must
-    # not fail on a spark-avro cluster.
-    props = F.coalesce(
-        F.col("props"), F.expr("cast(map() as map<string,string>)")
-    ).alias("props")
-    if native_avro_available(spark):
-        from pyspark.sql.avro.functions import to_avro
-
-        return to_avro(
-            F.struct("id", "name", props, "serverTimestamp", "clientTimestamp"),
-            AVRO_EVENT_SCHEMA_JSON,
-        )
-    from eventsgateway_spark.shipping import ship_package
-
-    ship_package(spark)  # fallback codec pickles by module reference
-    # Nondeterministic only to the optimizer: it then neither pushes a
-    # filter on the encoded bytes (size_limit) through the projection
-    # that computes them nor collapses that projection into its
-    # consumers, either of which would run this Python UDF twice.
-    enc = F.pandas_udf(_pandas_encode, "binary").asNondeterministic()
-    return enc("id", "name", props, "serverTimestamp", "clientTimestamp")
+    clientTimestamp. A NULL props map encodes as an empty map, as
+    ``encode_event`` does."""
+    encode, _ = _codec_udfs(spark)
+    props = F.col("props")
+    return _apply(
+        spark, encode, F.col("id"), F.col("name"), F.map_keys(props),
+        F.map_values(props), F.col("serverTimestamp"), F.col("clientTimestamp"),
+    )
 
 
 def from_avro_col(spark: SparkSession, value_col: str = "value") -> Column:
     """Column expression decoding Avro bytes into the Event struct."""
-    if native_avro_available(spark):
-        from pyspark.sql.avro.functions import from_avro
-
-        return from_avro(F.col(value_col), AVRO_EVENT_SCHEMA_JSON)
-    from eventsgateway_spark.shipping import ship_package
-
-    ship_package(spark)  # fallback codec pickles by module reference
-    dec = F.pandas_udf(_pandas_decode, AVRO_EVENT_SCHEMA)
-    return dec(value_col)
+    _, decode = _codec_udfs(spark)
+    return _apply(spark, decode, F.col(value_col))

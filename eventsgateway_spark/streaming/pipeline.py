@@ -12,9 +12,9 @@ dedup stays a downstream operator (streaming/dedup.py).
 Per-micro-batch shape: the session's byte-derived scan splits
 (session.py) pack a batch's bus files into ceil(bytes / 128 MiB)
 tasks — one for a batch of RPC-sized files, whatever the core count.
-Each task runs the Avro decode once (one Python-worker task on the
-fallback codec) and writes one file per year/month/day directory its
-events touch, so a small batch adds one file per day directory.
+Each task runs the Avro decode once, as a JVM expression (no Python
+worker), and writes one file per year/month/day directory its events
+touch, so a small batch adds one file per day directory.
 """
 
 from __future__ import annotations

@@ -1851,6 +1851,29 @@ def test_queries_leave_no_module_state(spark):
     assert not leaks, f"module state survives unpin_all: {leaks}"
 
 
+def test_unpin_all_releases_checkpoint_pins(spark):
+    """Checkpoint pins are released like persist pins: q63 (a
+    checkpointed signature table) and then q60 (three checkpoint pins)
+    run over sf0.1, and after each ``unpin_all()`` the SparkContext
+    holds no persisted RDD the query made."""
+    import os
+
+    from eventsgateway_spark.queries import QUERIES
+    from eventsgateway_spark.queries._util import unpin_all
+
+    sf01 = "/root/testdata/sf0.1"
+    if not os.path.exists(os.path.join(sf01, "documents.parquet")):
+        pytest.skip("sf0.1 fixture absent")
+    jsc = spark.sparkContext._jsc
+    unpin_all()
+    before = set(jsc.getPersistentRDDs().keys())
+    for name in ("q63_simhash_hamming_pairs", "q60_corpus_prep"):
+        QUERIES[name](spark, sf01).write.format("noop").mode("overwrite").save()
+        unpin_all()
+        left = set(jsc.getPersistentRDDs().keys()) - before
+        assert not left, f"{name} leaves persisted RDDs {sorted(left)}"
+
+
 def test_bench_plans_are_plain_lineages(spark):
     """The plan the bench times over sf0.1 is the plan the oracle
     checks at fixture scale, up to pin() and spread(): q72 and q92,

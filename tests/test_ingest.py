@@ -84,10 +84,9 @@ def test_size_limit_reject(spark):
 def test_ingest_payloads_encode_once(spark):
     """The size check filters on the encoded bytes, and that filter
     must not be pushed through the projection computing them: the
-    payloads plan evaluates the fallback Avro encode once (none with
-    native ``to_avro``), and the size verdict still holds."""
+    payloads plan calls the JVM Avro encode exactly once and starts
+    no Python worker, and the size verdict still holds."""
     from eventsgateway_spark.gateway import ingest
-    from eventsgateway_spark.sources.avro_codec import native_avro_available
 
     rows = [
         ("big", "n", "t", {"p": "a" * 30_001}, 1),
@@ -96,7 +95,8 @@ def test_ingest_payloads_encode_once(spark):
     res = ingest(spark, spark.createDataFrame(rows, WIRE_EVENT_SCHEMA),
                  max_message_bytes=30_000)
     plan = res.payloads._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("EvalPython") == (0 if native_avro_available(spark) else 1), plan
+    assert plan.count("EvalPython") == 0, plan
+    assert plan.count("egw_avro_encode(") == 1, plan
     assert [decode_event(bytes(r["value"]))["id"] for r in res.payloads.collect()] == [
         "small"
     ]

@@ -313,15 +313,14 @@ def _executed_plan(df) -> str:
 
 
 def test_ingest_events_request_shape(spark, tmp_path, monkeypatch):
-    """One 50-event request is two Spark jobs and one Python-worker
-    task: a verdict job of one task per union branch (quarantine rows,
-    encoded rows) whose plan evaluates the Avro encode once, and a
-    publish job of one task and one part file that reads a local
-    relation (no RDD scan, no Python UDF). Counts, not timings, so the
-    shape holds on any host."""
+    """One 50-event request is two Spark jobs and no Python-worker
+    task: a verdict job of one task, whose plan has no Python eval node
+    (the Avro encode is a JVM expression) and whose two single-
+    partition union branches (quarantine rows, encoded rows) Spark
+    unions partition-wise, and a publish job of one task and one part
+    file that reads a local relation (no RDD scan, no Python UDF).
+    Counts, not timings, so the shape holds on any host."""
     import os
-
-    from eventsgateway_spark.sources.avro_codec import native_avro_available
 
     sc = spark.sparkContext
     bus = FileBus(spark, str(tmp_path / "bus"))
@@ -354,7 +353,7 @@ def test_ingest_events_request_shape(spark, tmp_path, monkeypatch):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert fail == [7]
 
-    assert _group_counts(spark, "shape-verdict") == (1, 2)
+    assert _group_counts(spark, "shape-verdict") == (1, 1)
     assert _group_counts(spark, "shape-publish") == (1, 1)
     (new_batch,) = set(os.listdir(bus.root)) - before
     parts = [f for f in os.listdir(os.path.join(bus.root, new_batch))
@@ -362,8 +361,7 @@ def test_ingest_events_request_shape(spark, tmp_path, monkeypatch):
     assert len(parts) == 1
 
     (outcome,) = collected
-    python_evals = 0 if native_avro_available(spark) else 1
-    assert _executed_plan(outcome).count("EvalPython") == python_evals
+    assert _executed_plan(outcome).count("EvalPython") == 0
     (payloads,) = published
     sink_plan = _executed_plan(payloads)
     for marker in ("ExistingRDD", "PythonRDD", "EvalPython", "PythonUDF"):

@@ -28,7 +28,8 @@ df = spark.createDataFrame(
 )
 assert df.select(dot_arrow(F.col("a"), F.col("b")).alias("d")).first()["d"] == 11.0
 
-# 2) Avro fallback codec (sources/avro_codec._pandas_encode — by-reference)
+# 2) Avro codec (JVM UDFs from eventsgateway_spark/jvm: needs the jar the
+#    package compiles and adds with ADD JAR, not the shipped zip)
 from eventsgateway_spark.gateway import Gateway
 from eventsgateway_spark.sources.avro_codec import decode_event
 gw = Gateway(spark, default_topic="t")

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from eventsgateway_spark.gateway import Gateway
 from eventsgateway_spark.sources.kafka import FileBus
 from eventsgateway_spark.sources.lakehouse import read_events_table
-from eventsgateway_spark.streaming.pipeline import run_etl
+from eventsgateway_spark.streaming.pipeline import decode_events, run_etl
 from eventsgateway_spark.streaming import windows as SW
 from eventsgateway_spark.streaming.dedup import dedup_by_id
 from tests.conftest import SF_ORACLE
@@ -117,10 +117,17 @@ def test_split_rule_is_a_floor_not_a_cap(spark, tmp_path):
 
 def test_etl_micro_batch_is_one_task_one_file_per_day(spark, tmp_path):
     """A micro-batch of four RPC files is one Spark task: the Avro
-    decode runs in one Python task and each year/month/day directory
-    gets one part file, not one per bus file."""
+    decode is a JVM expression (no Python eval node in its plan), and
+    each year/month/day directory gets one part file, not one per bus
+    file."""
     bus = FileBus(spark, str(tmp_path / "bus"))
     n_events = _publish_rpcs(spark, bus, 4)
+    decode_plan = (
+        decode_events(spark, bus.consume_batch())
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    assert "egw_avro_decode(" in decode_plan, decode_plan
+    assert "EvalPython" not in decode_plan, decode_plan
     table = str(tmp_path / "events_table")
     q = run_etl(
         spark,

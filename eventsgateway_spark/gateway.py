@@ -14,7 +14,10 @@ Mirrors the reference client semantics (client/client.go):
 
 The server-side pipeline (validate → enrich → encode → route → sink,
 server/sender/kafka.go:44-120) is the ``ingest`` function: one
-declarative plan instead of goroutine fan-out.
+declarative plan instead of goroutine fan-out. It builds one outcome
+frame, every event with its reject reason (NULL when accepted) and its
+encoded bytes; the batch side-outputs and the served ``SendEvents``
+verdict (ingest_http.ingest_events) are both read from it.
 """
 
 from __future__ import annotations
@@ -36,24 +39,50 @@ from eventsgateway_spark.sources.avro_codec import to_avro_col
 
 
 class IngestResult(NamedTuple):
-    """Encoded payloads ready for the sink + rejected side-outputs."""
+    """The two stages of one ingest plan. ``checked`` is the wire rows
+    plus ``reject_reason`` (``transforms.REJECT_REASON``),
+    ``sink_topic``, ``serverTimestamp`` and ``clientTimestamp``,
+    before the encode. ``outcome`` adds the Avro ``value``, encoded
+    only for valid rows, and turns ``reject_reason`` into the final
+    verdict (``transforms.size_verdict``): NULL means accepted."""
 
-    payloads: DataFrame  # columns: topic, key(null), value(avro bytes)
-    quarantine: DataFrame  # invalid envelopes with reject_reason
-    oversized: DataFrame  # size-limit rejects with reject_reason
+    checked: DataFrame
+    outcome: DataFrame
+
+    @property
+    def payloads(self) -> DataFrame:
+        """Accepted events, Kafka-shaped: topic, key (null), value.
+        The reference produces keyless (server/forwarder/kafka.go:
+        66-69): ordering is not guaranteed and duplicates are possible,
+        hence the downstream dedup of Q15."""
+        return self.outcome.filter("reject_reason IS NULL").selectExpr(
+            "sink_topic AS topic", "CAST(NULL AS BINARY) AS key", "value"
+        )
+
+    @property
+    def quarantine(self) -> DataFrame:
+        """Invalid events with their reject_reason, read before the
+        encode: reading them runs no encode."""
+        return self.checked.filter("reject_reason IS NOT NULL")
+
+    @property
+    def oversized(self) -> DataFrame:
+        """Valid events whose encoded payload is too large."""
+        return self.outcome.filter(f"reject_reason = '{transforms.TOO_LARGE}'")
 
     def report(self) -> dict[str, int]:
         """Per-batch ingest outcome: accepted count plus rejected
         counts keyed by reject_reason — the engine's analog of the
         reference's per-row failure indexes in the batch response
-        (server/app/server.go:59-65). Small aggregate jobs over the
-        side-outputs; call for observability, not in the hot path."""
-        out = {"accepted": self.payloads.count()}
-        for df in (self.quarantine, self.oversized):
-            for row in df.groupBy("reject_reason").count().collect():
-                reason = row["reject_reason"]
-                out[reason] = out.get(reason, 0) + int(row["count"])
-        return out
+        (server/app/server.go:59-65). One aggregation over the outcome;
+        call for observability, not in the hot path."""
+        counts = (
+            self.outcome.selectExpr("coalesce(reject_reason, 'accepted') AS outcome")
+            .groupBy("outcome")
+            .count()
+            .collect()
+        )
+        return {"accepted": 0, **{row[0]: int(row[1]) for row in counts}}
 
 
 def local_frame(
@@ -159,40 +188,30 @@ class Gateway:
             yield res
 
 
-def encode(spark: SparkSession, wire_df: DataFrame) -> transforms.ValidationSplit:
-    """validate (P1) → enrich (P5) → route (P6) → Avro-encode (S5):
-    ``valid`` carries the wire columns plus ``serverTimestamp``,
-    ``clientTimestamp``, ``sink_topic`` and the encoded ``value``;
-    ``quarantine`` the invalid envelopes with ``reject_reason``. The
-    one definition of the pipeline up to the size check, shared by
-    ``ingest`` and the serving path (ingest_http.ingest_events)."""
-    valid, quarantine = transforms.validate(wire_df)
-    enriched = transforms.route_topic(transforms.enrich(valid))
-    return transforms.ValidationSplit(
-        valid=enriched.withColumn("value", to_avro_col(spark)),
-        quarantine=quarantine,
-    )
-
-
 def ingest(
     spark: SparkSession,
     wire_df: DataFrame,
     max_message_bytes: int = transforms.DEFAULT_MAX_MESSAGE_BYTES,
 ) -> IngestResult:
-    """The server pipeline as one logical plan:
-
-    ``encode`` (validate → enrich → route → Avro) → size-limit (P2) →
-    Kafka-shaped payload (sink_topic, key, value).
+    """The server pipeline as one logical plan: validate (P1), enrich
+    (P5) and route (P6) in one projection, then the Avro encode (S5)
+    guarded by the reject reason, so invalid rows are never encoded,
+    then the size verdict (P2). Only ``max_message_bytes`` varies per
+    call.
 
     Works identically on batch and streaming DataFrames.
     """
-    encoded, quarantine = encode(spark, wire_df)
-    kept, oversized = transforms.size_limit(encoded, "value", max_message_bytes)
-    payloads = kept.select(
-        F.col("sink_topic").alias("topic"),
-        F.lit(None).cast("binary").alias("key"),  # no partition key — reference
-        # produces keyless (server/forwarder/kafka.go:66-69); ordering is
-        # not guaranteed, duplicates are possible ⇒ downstream dedup Q15.
-        "value",
+    checked = wire_df.selectExpr(
+        "*",
+        f"{transforms.REJECT_REASON} AS reject_reason",
+        f"{transforms.SINK_TOPIC} AS sink_topic",
+        f"{transforms.SERVER_TIMESTAMP} AS serverTimestamp",
+        "`timestamp` AS clientTimestamp",
     )
-    return IngestResult(payloads=payloads, quarantine=quarantine, oversized=oversized)
+    # The encode is nondeterministic to the optimizer, so the size
+    # verdict stays a separate projection over the encoded value and
+    # the encode runs once.
+    outcome = checked.withColumn(
+        "value", F.when(F.col("reject_reason").isNull(), to_avro_col(spark))
+    ).withColumn("reject_reason", F.expr(transforms.size_verdict(max_message_bytes)))
+    return IngestResult(checked=checked, outcome=outcome)

@@ -59,8 +59,8 @@ Two layers, gated differently:
 
 Both RPCs run the REAL ingest pipeline via
 ``ingest_http.ingest_events`` (validate → enrich → route → Avro →
-size-limit as one micro-batch; failure indexes read back from the
-plan's own side-outputs), so HTTP and gRPC can never drift
+size verdict as one micro-batch; failure indexes read back from the
+plan's own outcome rows), so HTTP and gRPC can never drift
 semantically — they share everything below request framing.
 """
 

@@ -8,7 +8,7 @@ This module closes that last behavioral seam with a dependency-free
 stdlib HTTP server (the same pattern as the Prometheus endpoint,
 streaming/metrics_http.py): a game client — or curl — gets a socket to
 point at, and each request body runs through the REAL ingest pipeline
-(`gateway.ingest`: validate → enrich → route → Avro → size-limit) as
+(`gateway.ingest`: validate → enrich → route → Avro → size verdict) as
 one transactional micro-batch, then lands on the configured sink.
 
 Wire protocol (JSON over HTTP; grpc/protobuf are not installed in this
@@ -24,11 +24,12 @@ under test):
     GET  /healthz       -> 200 ok            (app healthcheck analog)
 
 Failure-index mechanics: the request index rides the pipeline as an
-extra ``_idx`` column (every stage is a filter/withColumn, so it flows
-untouched into the quarantine and the encoded rows) and the response
-indexes are read back from one collected outcome frame — the verdict
-and the published payloads come from the SAME evaluation of the plan,
-never from re-implemented driver-side validation.
+extra ``_idx`` column (every stage is a projection that keeps the wire
+columns, so it flows untouched into the outcome) and the response
+indexes are read back from the collected outcome frame — one row per
+event with its reject reason — so the verdict and the published
+payloads come from the SAME evaluation of the plan, never from
+re-implemented driver-side validation.
 
 Scale posture: one request = one micro-batch = a handful of driver-side
 rows, exactly the reference's per-RPC granularity; bulk backfill goes
@@ -44,10 +45,9 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from eventsgateway_spark.gateway import encode, local_frame
+from eventsgateway_spark.gateway import ingest, local_frame
 from eventsgateway_spark.operators import transforms
 from eventsgateway_spark.schemas import WIRE_EVENT_SCHEMA
 from eventsgateway_spark.sources.kafka import PAYLOAD_SCHEMA
@@ -91,7 +91,7 @@ def _wire_rows(events: list[dict]) -> tuple[list[tuple], dict[int, str]]:
             # timestamp 1; floats (ms since epoch) truncate
             ts = None if isinstance(ts_raw, bool) else int(ts_raw)
         except (TypeError, ValueError):
-            ts = None  # validate() rejects it as missing_timestamp
+            ts = None  # the reject rule names it a missing timestamp
         rows.append(
             (
                 i,
@@ -124,11 +124,11 @@ def ingest_events(
     the goroutine-append ordering) of the reference's FailureIndexes.
 
     Per-request shape: two Spark jobs of one task each, and no
-    Python-worker task. The verdict job collects ONE tagged outcome
-    frame — the quarantine rows unioned with the encoded valid rows,
-    the size verdict a column — so the Avro encode (a JVM expression)
-    runs once. The sink job publishes the collected bytes of the
-    accepted rows, in request order, from a local relation: the
+    Python-worker task. The verdict job collects ``gateway.ingest``'s
+    outcome frame — one projection chain over the request rows, with
+    no union — so the Avro encode (a JVM expression) runs once, and
+    only for valid rows. The sink job publishes the collected bytes of
+    the accepted rows, in request order, from a local relation: the
     published payloads are the bytes the size check saw, and no encode
     or ``current_timestamp()`` is re-run for them."""
     if not events:
@@ -136,25 +136,14 @@ def ingest_events(
     rows, reasons = _wire_rows(events)
     if not rows:
         return sorted(reasons), reasons
-    # one partition per request: both union branches are then single-
-    # partition, which Spark unions partition-wise into ONE verdict
-    # task, and the bus write commits one part file; both frames are
-    # local relations with no locality preference to wait on
+    # one partition per request: the verdict is ONE task, and the bus
+    # write commits one part file; both frames are local relations
+    # with no locality preference to wait on. The coalesce also keeps
+    # the projections off the local relation, which the optimizer
+    # would otherwise evaluate on the driver, encode included.
     wire = local_frame(spark, rows, _HTTP_WIRE_SCHEMA).coalesce(1)
-    encoded, quarantine = encode(spark, wire)
-    fits = transforms.size_condition("value", max_message_bytes)
-    outcome = quarantine.select(
-        "_idx",
-        "reject_reason",
-        F.lit(None).cast("string").alias("topic"),
-        F.lit(None).cast("binary").alias("value"),
-    ).unionByName(
-        encoded.select(
-            "_idx",
-            F.when(~fits, F.lit(transforms.TOO_LARGE)).alias("reject_reason"),
-            F.col("sink_topic").alias("topic"),
-            F.when(fits, F.col("value")).alias("value"),
-        )
+    outcome = ingest(spark, wire, max_message_bytes).outcome.selectExpr(
+        "_idx", "reject_reason", "sink_topic AS topic", "value"
     )
     accepted = []
     for row in outcome.collect():

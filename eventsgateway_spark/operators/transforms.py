@@ -5,6 +5,13 @@ the gRPC server (server/sender/kafka.go); here each is a declarative
 DataFrame→DataFrame function so Catalyst fuses them into the scan and
 the whole validate→enrich→route path stays inside whole-stage codegen.
 
+The reject rule is one SQL ``CASE`` expression, ``REJECT_REASON``, and
+the enrich and route steps are SQL text too. A ``SendEvents`` request
+builds its plan anew, and a Python ``Column`` tree costs the driver
+about 14 py4j calls per ``F.col``, while a whole ``selectExpr`` of SQL
+text costs about 6, because the JVM parses it. Only constants are
+written into the text; request data enters as rows.
+
 All functions accept either a batch or a streaming DataFrame with the
 wire-event schema (schemas.WIRE_EVENT_SCHEMA).
 """
@@ -31,104 +38,76 @@ class ValidationSplit(NamedTuple):
     quarantine: DataFrame
 
 
-def _null_prop_value() -> F.Column:
-    """True when props carries a NULL value. The Avro map is
-    string→string (schemas.py mirrors the reference proto): a null
-    value crashes BOTH encoders at execution time, so it must be a
-    quarantine reason, not a batch-killing executor error."""
-    return F.col("props").isNotNull() & F.exists(
-        F.map_values("props"), lambda v: v.isNull()
-    )
+#: P1 — the reason an event is rejected, NULL when it is valid. The
+#: reference rejects events missing id/topic/name or with a zero
+#: timestamp (server/sender/kafka.go:89-94); the first failed check
+#: names the reason. A NULL prop VALUE is rejected too: the Avro map is
+#: string→string (schemas.py mirrors the reference proto), so the
+#: encoder cannot write one, and it must be a reject reason, not a
+#: batch-killing executor error.
+REJECT_REASON = (
+    "CASE WHEN id IS NULL OR id = '' THEN 'missing_id'"
+    " WHEN topic IS NULL OR topic = '' THEN 'missing_topic'"
+    " WHEN name IS NULL OR name = '' THEN 'missing_name'"
+    " WHEN `timestamp` IS NULL OR `timestamp` = 0 THEN 'missing_timestamp'"
+    " WHEN exists(map_values(props), v -> v IS NULL) THEN 'null_prop_value'"
+    " END"
+)
+
+#: P5 — ingest (processing) time in epoch millis, reference
+#: server/sender/kafka.go:108. ``current_timestamp()`` is fixed per
+#: query, so one evaluation stamps one value.
+SERVER_TIMESTAMP = "unix_millis(current_timestamp())"
+
+#: P6 — per-event physical topic: ``sv-uploads-`` + topic
+#: (server/forwarder/kafka.go:65, server/app/app.go:100).
+SINK_TOPIC = f"concat('{TOPIC_PREFIX}', topic)"
+
+#: P2 — reject_reason of an event whose encoded payload is too large.
+TOO_LARGE = "too_large"
 
 
-def validity_condition() -> F.Column:
-    """P1 — the reference rejects events missing id/topic/name or with
-    a zero timestamp (server/sender/kafka.go:89-94); null prop VALUES
-    are additionally rejected because the wire map type cannot encode
-    them (see _null_prop_value)."""
+def size_verdict(max_message_bytes: int) -> str:
+    """P2 — SQL for the final reject reason of an encoded row: its
+    ``reject_reason``, else ``too_large`` when the encoded ``value`` is
+    ``max_message_bytes`` or longer (the reference checks len(Avro
+    bytes) < max, server/sender/kafka.go:76-82)."""
     return (
-        F.col("id").isNotNull()
-        & (F.col("id") != "")
-        & F.col("topic").isNotNull()
-        & (F.col("topic") != "")
-        & F.col("name").isNotNull()
-        & (F.col("name") != "")
-        & F.col("timestamp").isNotNull()
-        & (F.col("timestamp") != 0)
-        & ~_null_prop_value()
+        f"coalesce(reject_reason, CASE WHEN length(value) >= "
+        f"{int(max_message_bytes)} THEN '{TOO_LARGE}' END)"
     )
 
 
 def validate(df: DataFrame) -> ValidationSplit:
-    """P1 + A4 — split into (valid, quarantine). The reference returns
-    failure indexes to the client (server/app/server.go:59-65); the
-    engine's analog is a quarantine side-output the caller can sink,
-    tagged with the rejection reason."""
-    cond = validity_condition()
-    reason = (
-        F.when(F.col("id").isNull() | (F.col("id") == ""), "missing_id")
-        .when(F.col("topic").isNull() | (F.col("topic") == ""), "missing_topic")
-        .when(F.col("name").isNull() | (F.col("name") == ""), "missing_name")
-        .when(
-            F.col("timestamp").isNull() | (F.col("timestamp") == 0),
-            "missing_timestamp",
-        )
-        .otherwise("null_prop_value")
-    )
+    """P1 + A4 — split into (valid, quarantine) by ``REJECT_REASON``.
+    The reference returns failure indexes to the client
+    (server/app/server.go:59-65); the engine's analog is a quarantine
+    side-output the caller can sink, tagged with ``reject_reason``."""
+    tagged = df.selectExpr("*", f"{REJECT_REASON} AS reject_reason")
     return ValidationSplit(
-        valid=df.filter(cond),
-        quarantine=df.filter(~cond).withColumn("reject_reason", reason),
+        valid=tagged.filter("reject_reason IS NULL").drop("reject_reason"),
+        quarantine=tagged.filter("reject_reason IS NOT NULL"),
     )
 
 
 def enrich(df: DataFrame) -> DataFrame:
-    """P5 — stamp ``serverTimestamp = now()`` in epoch millis (ingest /
-    processing time; reference server/sender/kafka.go:108) and map the
-    wire ``timestamp`` to ``clientTimestamp`` (event time).
+    """P5 — stamp ``serverTimestamp`` (``SERVER_TIMESTAMP``) and map
+    the wire ``timestamp`` to ``clientTimestamp`` (event time).
 
     Id stamping is split exactly like the reference: the *client* side
     (Gateway.send_at, mirroring client/client.go:232) assigns uuids, and
-    the *server* side rejects id-less events in validate() — so no uuid
-    backfill happens here."""
+    the *server* side rejects id-less events by ``REJECT_REASON`` — so
+    no uuid backfill happens here."""
     return df.withColumn(
-        "serverTimestamp", F.unix_millis(F.current_timestamp())
+        "serverTimestamp", F.expr(SERVER_TIMESTAMP)
     ).withColumnRenamed("timestamp", "clientTimestamp")
 
 
 def route_topic(df: DataFrame) -> DataFrame:
-    """P6 — per-event physical topic: ``sv-uploads-`` + topic
-    (server/forwarder/kafka.go:65, server/app/app.go:100). Spark's Kafka
-    sink honors a per-row ``topic`` column, so routing is a projection,
-    not a fan-out loop."""
-    return df.withColumn("sink_topic", F.concat(F.lit(TOPIC_PREFIX), F.col("topic")))
-
-
-def to_storage(df: DataFrame) -> DataFrame:
-    """Proto→Avro projection: keep the five stored fields, drop the
-    routing topic (server/sender/kafka.go:102-117 — `Topic` exists only
-    on the wire)."""
-    return df.select("id", "name", "props", "serverTimestamp", "clientTimestamp")
-
-
-#: reject_reason of a payload that fails size_condition().
-TOO_LARGE = "too_large"
-
-
-def size_condition(payload_col: str, max_bytes: int = DEFAULT_MAX_MESSAGE_BYTES) -> F.Column:
-    """P2 — true when the encoded payload fits: strictly shorter than
-    max_bytes (server/sender/kafka.go:76-82). Applied after encoding,
-    on the binary column, like the reference checks len(Avro bytes)."""
-    return F.length(F.col(payload_col)) < F.lit(max_bytes)
-
-
-def size_limit(df: DataFrame, payload_col: str, max_bytes: int = DEFAULT_MAX_MESSAGE_BYTES) -> ValidationSplit:
-    """P2 — split off events whose encoded payload fails
-    size_condition() as ``too_large``."""
-    cond = size_condition(payload_col, max_bytes)
-    return ValidationSplit(
-        valid=df.filter(cond),
-        quarantine=df.filter(~cond).withColumn("reject_reason", F.lit(TOO_LARGE)),
-    )
+    """P6 — ``sink_topic`` (``SINK_TOPIC``). Spark's Kafka sink honors
+    a per-row ``topic`` column, so routing is a projection, not a
+    fan-out loop."""
+    return df.withColumn("sink_topic", F.expr(SINK_TOPIC))
 
 
 def derive_date_partitions(df: DataFrame, ts_col: str = "clientTimestamp") -> DataFrame:

@@ -311,7 +311,7 @@ def _codec_udfs(spark: SparkSession):
             return impl.newInstance().toUdf(jtype).withName(name)
 
         # Nondeterministic only to the optimizer: it then neither pushes
-        # a filter on the encoded bytes (size_limit) through the
+        # a filter on the encoded bytes (the size verdict) through the
         # projection that computes them nor collapses that projection
         # into its consumers, either of which would encode twice.
         encode = udf("EventAvroEncode", T.BinaryType(), "egw_avro_encode")

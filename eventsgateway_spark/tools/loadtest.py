@@ -16,8 +16,8 @@ pacing measures the Go client's RPC path, not the pipeline. Here the
 same EXPECTED event volume (threads × duration / mean-sleep) is built
 through the real `Gateway.send*` API without wall-clock sleeping, and
 the measured phase is what Spark actually executes: the full ingest
-plan (validate → enrich → route → Avro-encode → size-limit) plus the
-bus produce. Reported throughput is therefore pipeline events/sec —
+plan (one reject-reason/enrich/route projection → Avro-encode of the
+valid rows → size verdict) plus the bus produce. Reported throughput is therefore pipeline events/sec —
 the number that scales with executors."""
 
 from __future__ import annotations
@@ -122,8 +122,8 @@ def run_pipeline_throughput(
     """Pipeline-proper throughput at backfill scale: the wire batch is
     generated JVM-side (``spark.range`` + column expressions — no
     driver loop, no buffer API), so the measurement isolates the
-    ingest plan (validate → enrich → route → Avro-encode →
-    size-limit → produce) from client fixed costs. This is the number
+    ingest plan (reject reason, enrich and route → Avro-encode →
+    size verdict → produce) from client fixed costs. This is the number
     that scales with executors; the micro-batch figure above is
     per-RPC latency-bound by design (reference parity)."""
     from pyspark.sql import functions as F

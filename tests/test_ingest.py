@@ -127,6 +127,71 @@ def test_ingest_failure_report(spark):
     }
 
 
+def test_one_reject_rule_for_both_entry_points(spark):
+    """gateway.ingest's side-outputs and ingest_events' failure reasons
+    come from one reject rule: the same rows get the same reason per
+    event, the first failed check names it (an empty id with a zero
+    timestamp is missing_id), and the size boundary is strict (max-1
+    encoded bytes accepted, max rejected). A NULL prop value is
+    rejected before the encode."""
+    from eventsgateway_spark.gateway import ingest, local_frame
+    from eventsgateway_spark.ingest_http import (
+        _HTTP_WIRE_SCHEMA,
+        _wire_rows,
+        ingest_events,
+    )
+
+    ts = 1_690_000_000_000
+    ok = {"id": "ok", "name": "n", "topic": "t", "props": {"k": "v"}, "timestamp": ts}
+    events = [
+        ok,
+        {**ok, "id": "", "timestamp": 0},
+        {**ok, "topic": None},
+        {**ok, "name": ""},
+        {**ok, "timestamp": None},
+        {**ok, "id": "fits", "props": {"big": "x" * 200}},
+        {**ok, "id": "over", "props": {"big": "x" * 201}},
+    ]
+    max_bytes = 1 + len(
+        encode_event("fits", "n", {"big": "x" * 200}, int(time.time() * 1000), ts)
+    )
+    expected = {
+        1: "missing_id",
+        2: "missing_topic",
+        3: "missing_name",
+        4: "missing_timestamp",
+        6: "too_large",
+    }
+
+    _, by_request = ingest_events(spark, events, max_message_bytes=max_bytes)
+    rows, _ = _wire_rows(events)
+    res = ingest(spark, local_frame(spark, rows, _HTTP_WIRE_SCHEMA), max_bytes)
+    by_gateway = {
+        r["_idx"]: r["reject_reason"]
+        for side in (res.quarantine, res.oversized)
+        for r in side.select("_idx", "reject_reason").collect()
+    }
+    assert by_request == expected
+    assert by_gateway == expected
+    assert sorted(decode_event(bytes(r["value"]))["id"]
+                  for r in res.payloads.collect()) == ["fits", "ok"]
+
+    # A NULL prop value cannot be Avro-encoded: the reject reason guards
+    # the encode, so an event that is also over the size limit reports
+    # null_prop_value, not too_large, and the batch runs. (ingest_events
+    # turns a JSON null prop into the string "null", so this case only
+    # reaches the pipeline through a wire frame.)
+    rows = [
+        ("npv", "n", "t", {"big": "a" * 30_001, "k": None}, 1),
+        ("big", "n", "t", {"p": "a" * 30_001}, 1),
+        ("ok", "n", "t", {"p": "a"}, 1),
+    ]
+    res = ingest(spark, local_frame(spark, rows, WIRE_EVENT_SCHEMA),
+                 max_message_bytes=30_000)
+    assert res.report() == {"accepted": 1, "null_prop_value": 1, "too_large": 1}
+    assert [r["id"] for r in res.quarantine.collect()] == ["npv"]
+
+
 def test_date_partition_derivation(spark):
     """P4 — .ipynb:103-106 semantics: partitions from client event time."""
     from eventsgateway_spark.operators.transforms import derive_date_partitions

@@ -314,12 +314,12 @@ def _executed_plan(df) -> str:
 
 def test_ingest_events_request_shape(spark, tmp_path, monkeypatch):
     """One 50-event request is two Spark jobs and no Python-worker
-    task: a verdict job of one task, whose plan has no Python eval node
-    (the Avro encode is a JVM expression) and whose two single-
-    partition union branches (quarantine rows, encoded rows) Spark
-    unions partition-wise, and a publish job of one task and one part
-    file that reads a local relation (no RDD scan, no Python UDF).
-    Counts, not timings, so the shape holds on any host."""
+    task: a verdict job of one task, whose plan is one projection chain
+    over the request rows (no union) with no Python eval node and
+    exactly one call of the Avro encode (a JVM expression), and a
+    publish job of one task and one part file that reads a local
+    relation (no RDD scan, no Python UDF). Counts, not timings, so the
+    shape holds on any host."""
     import os
 
     sc = spark.sparkContext
@@ -361,7 +361,10 @@ def test_ingest_events_request_shape(spark, tmp_path, monkeypatch):
     assert len(parts) == 1
 
     (outcome,) = collected
-    assert _executed_plan(outcome).count("EvalPython") == 0
+    outcome_plan = _executed_plan(outcome)
+    assert outcome_plan.count("EvalPython") == 0, outcome_plan
+    assert "Union" not in outcome_plan, outcome_plan
+    assert outcome_plan.count("egw_avro_encode(") == 1, outcome_plan
     (payloads,) = published
     sink_plan = _executed_plan(payloads)
     for marker in ("ExistingRDD", "PythonRDD", "EvalPython", "PythonUDF"):

@@ -95,48 +95,6 @@ def rolling_fingerprint(toks: Column) -> Column:
     )
 
 
-_shingle_udfs: dict = {}
-
-
-def shingles_arrow(text: Column, n: int) -> Column:
-    """Arrow-batched distinct n-token shingles of a raw text column —
-    the vectorized twin of ``array_distinct(ngrams(tokens(text), n))``
-    (same strings, same first-occurrence order; parity pinned by
-    tests/test_ext.py). The JVM higher-order-function pipeline is
-    interpreted per element; this pays one Arrow transfer per batch and
-    does the splitting in C-backed str ops instead — the fast path for
-    long documents, enabled by SPARK_GRAFT_ARROW_SCORER=1 (see
-    queries/_util.arrow_scorer)."""
-    if n not in _shingle_udfs:
-        import pandas as pd
-
-        # no type annotations: the hints reference a lazily-imported
-        # module, which pandas_udf's signature inference can't resolve
-        def batch(texts):
-            out = []
-            for t in texts:
-                if t is None:
-                    # match the JVM path's null semantics: ngrams() on a
-                    # null token array yields an empty array → explode
-                    # emits no rows (ADVICE r5 — a null text row must
-                    # not crash the Arrow path)
-                    out.append([])
-                    continue
-                toks = [x for x in t.split(" ") if x]
-                out.append(
-                    list(
-                        dict.fromkeys(
-                            " ".join(toks[i : i + n])
-                            for i in range(len(toks) - n + 1)
-                        )
-                    )
-                )
-            return pd.Series(out)
-
-        _shingle_udfs[n] = F.pandas_udf(batch, "array<string>")
-    return _shingle_udfs[n](text)
-
-
 def count_in(toks: Column, vocab: list[str]) -> Column:
     """How many tokens fall in a fixed vocabulary (stopword hits)."""
     return F.size(F.filter(toks, lambda t: t.isin(*vocab)))

@@ -15,8 +15,6 @@ LSH bucket join), never by all-pairs.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -46,74 +44,6 @@ def norm(a: Column) -> Column:
 def cosine(a: Column, b: Column) -> Column:
     """Cosine similarity (full formula — robust to non-unit vectors)."""
     return dot(a, b) / (norm(a) * norm(b))
-
-
-# ---------------------------------------------------------------------------
-# Arrow-vectorized scoring (the high-candidate-volume fast path)
-# ---------------------------------------------------------------------------
-
-# The JVM folds above are interpreted per element (higher-order
-# functions are not codegen'd). This pandas_udf scores a whole Arrow
-# batch with one numpy einsum instead. MEASURED VERDICT at dim=64
-# (40k-vector ANN, ~10^5 candidate pairs): fold 4.8s vs arrow 5.4s
-# warm — Arrow transfer of both vectors per pair (~1KB/row) cancels
-# the vectorized-compute win, so the fold stays the DEFAULT scorer.
-# The Arrow path earns its keep when per-pair compute grows faster
-# than transfer: high-dim vectors with reusable sides (score against
-# a worker-cached matrix), or heavier kernels than a dot product.
-# Summation ORDER also differs from the sequential fold
-# (SIMD/pairwise), so last-bit floats can differ: oracle-checked
-# queries must use the fold (agreement at 6dp rounding is tested).
-
-
-def _dot_arrow_batch(pa: pd.Series, pb: pd.Series) -> pd.Series:
-    # Arrow list columns arrive as a Series of np.ndarray elements;
-    # np.stack avoids the per-row Python-list materialization .tolist()
-    # would pay (measured ~2× on 64-dim batches)
-    try:
-        ma = np.stack(pa.values).astype(np.float64, copy=False)
-        mb = np.stack(pb.values).astype(np.float64, copy=False)
-        return pd.Series(np.einsum("ij,ij->i", ma, mb))
-    except ValueError:
-        # NULL or ragged-length vectors make np.stack throw; the JVM
-        # fold yields NULL for those rows and carries on — the flag
-        # promises identical BEHAVIOR, so the Arrow path must tolerate
-        # them too, not turn them into task failures. Slow per-row
-        # path, taken only when the batch actually contains bad rows.
-        out = []
-        for a, b in zip(pa.values, pb.values):
-            if a is None or b is None or len(a) != len(b):
-                out.append(None)
-            else:
-                out.append(float(np.dot(np.asarray(a, np.float64),
-                                        np.asarray(b, np.float64))))
-        return pd.Series(out, dtype="float64")
-
-
-_dot_arrow_udf = None  # built lazily: pandas_udf needs an active session
-
-
-def dot_arrow(a: Column, b: Column) -> Column:
-    """Batch-vectorized dot product of two equal-length double-array
-    columns via numpy einsum (Arrow transfer, one matmul per batch)."""
-    global _dot_arrow_udf
-    from pyspark.sql import SparkSession
-
-    # getActiveSession is THREAD-LOCAL: a worker thread that never
-    # touched the session sees None there while the process-wide
-    # session (builder.getOrCreate resolves it without creating a new
-    # one when it exists) still needs the package shipped — silently
-    # skipping would resurface the executor ModuleNotFoundError this
-    # call exists to prevent.
-    session = SparkSession.getActiveSession()
-    if session is None:
-        session = SparkSession.builder.getOrCreate()
-    from eventsgateway_spark.shipping import ship_package
-
-    ship_package(session)  # _dot_arrow_batch pickles by module reference
-    if _dot_arrow_udf is None:
-        _dot_arrow_udf = F.pandas_udf(_dot_arrow_batch, "double")
-    return _dot_arrow_udf(a, b)
 
 
 # ---------------------------------------------------------------------------

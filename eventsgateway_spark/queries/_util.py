@@ -261,10 +261,6 @@ def released_checkpoints():
     return _scope()
 
 
-def _release(df: DataFrame) -> None:
-    release_frame(df)
-
-
 def unpin_others(current: str) -> None:
     """Release every pin owned by a different query (or by no query),
     and ``current``'s own checkpoint pins: a re-run checkpoints anew,
@@ -281,7 +277,7 @@ def unpin_others(current: str) -> None:
         if o == current and df.is_cached:  # one of current's persist pins
             keep.append((o, df))
         else:
-            _release(df)
+            release_frame(df)
     _PINNED[:] = keep
 
 
@@ -290,7 +286,7 @@ def unpin_all() -> None:
     scaleprobe samples). Queries keep no other state between
     executions: each builds its whole lineage on every call."""
     while _PINNED:
-        _release(_PINNED.pop()[1])
+        release_frame(_PINNED.pop()[1])
 
 
 def doc_tokens_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -314,18 +310,6 @@ def doc_tokens_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         "text",
         tokens("text").alias("toks"),
     )
-
-
-def arrow_scorer() -> bool:
-    """Opt-in Arrow fast path (``SPARK_GRAFT_ARROW_SCORER=1``) for the
-    interpreted higher-order-function folds in the dedup/similarity
-    verify steps (shingle construction, pair dot products). Default
-    OFF: the JVM folds are bit-reproducible against the DuckDB oracle
-    and measured faster at fixture dims (Arrow transfer cancels the
-    numpy win — functions/vectors.py); the Arrow path pays off when
-    per-row compute outgrows transfer (long docs, high-dim vectors).
-    Both paths produce identical query results (tests/test_ext.py)."""
-    return os.environ.get("SPARK_GRAFT_ARROW_SCORER", "") == "1"
 
 
 def table_buckets(spark: SparkSession, table: str, default: int = 32) -> int:

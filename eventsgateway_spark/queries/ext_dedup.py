@@ -34,14 +34,12 @@ from pyspark.sql.window import Window
 
 from eventsgateway_spark.functions.text import (
     ngrams,
-    shingles_arrow,
     token_hash32,
     tokens,
 )
 from eventsgateway_spark.operators.components import connected_components
 from eventsgateway_spark.queries import query
 from eventsgateway_spark.queries._util import (
-    arrow_scorer,
     pin,
     spread,
     table,
@@ -96,23 +94,16 @@ def doc_shingles(
     if has_pretokenized(docs):
         return _shingles_from_toks(docs, n, max_df)
     base = spread(docs.select("doc_id", "text"))
-    if arrow_scorer():
-        # Arrow fast path: C-backed split/join per batch instead of the
-        # interpreted JVM HOF pipeline; identical shingle strings.
-        shingled = base.select(
-            "doc_id", F.explode(shingles_arrow(F.col("text"), n)).alias("s")
+    shingled = (
+        base
+        # project toks first — inlined, the split+filter subtree is
+        # re-evaluated per n-gram lambda reference (5× slower)
+        .select("doc_id", tokens("text").alias("toks"))
+        .select(
+            "doc_id",
+            F.explode(F.array_distinct(ngrams(F.col("toks"), n))).alias("s"),
         )
-    else:
-        shingled = (
-            base
-            # project toks first — inlined, the split+filter subtree is
-            # re-evaluated per n-gram lambda reference (5× slower)
-            .select("doc_id", tokens("text").alias("toks"))
-            .select(
-                "doc_id",
-                F.explode(F.array_distinct(ngrams(F.col("toks"), n))).alias("s"),
-            )
-        )
+    )
     return _df_capped(shingled, max_df)
 
 

@@ -33,7 +33,6 @@ from eventsgateway_spark.functions.vectors import (
     as_double,
     cosine,
     dot,
-    dot_arrow,
     lsh_bucket,
     lsh_buckets_arrow,
     lsh_probe_buckets_arrow,
@@ -42,7 +41,6 @@ from eventsgateway_spark.functions.vectors import (
 )
 from eventsgateway_spark.queries import query
 from eventsgateway_spark.queries._util import (
-    arrow_scorer,
     pin,
     spread,
     table,
@@ -341,7 +339,6 @@ def ann_topk_bucketed(
     k: int = 3,
     n_planes: int | None = None,
     n_tables: int | None = None,
-    scorer: str = "fold",
     n_flips: int = 0,
 ) -> DataFrame:
     """ANN top-k restricted to same-LSH-bucket candidates (the scale
@@ -362,14 +359,9 @@ def ann_topk_bucketed(
     break the T·N²/2^p candidate-volume invariance the coupled
     ladder exists to hold.
     Norms are precomputed once per VECTOR (not per pair), so per-pair
-    work is one dot product. ``scorer='fold'`` (default) keeps the
-    sequential JVM fold — bit-reproducible, and MEASURED faster at
-    dim=64 (Arrow transfer of both vectors per pair cancels numpy's
-    compute win; see functions/vectors.py). ``scorer='arrow'`` swaps
-    in the einsum batch scorer for workloads where per-pair compute
-    outgrows transfer (high dims, heavier kernels). Returns
-    (qid, rn, neighbor_id, cos_sim). Recall and fold/arrow agreement
-    are tested in tests/test_ext.py.
+    work is one sequential JVM fold dot product (bit-reproducible).
+    Returns (qid, rn, neighbor_id, cos_sim). Recall is tested in
+    tests/test_ext.py.
 
     ``n_flips`` (round 12) is query-directed MULTIPROBE — the recall
     knob that costs no extra index: per table the QUERY also probes
@@ -437,7 +429,6 @@ def ann_topk_bucketed(
         .distinct()
         .filter(F.col("neighbor_id") != F.col("qid"))
     )
-    pair_dot = dot_arrow if scorer == "arrow" else dot
     scored = (
         cand.join(c_base.select("neighbor_id", "ce", "cn"), "neighbor_id")
         .join(F.broadcast(q_base.select("qid", "qe", "qn")), "qid")
@@ -445,7 +436,7 @@ def ann_topk_bucketed(
             "qid",
             "neighbor_id",
             F.round(
-                pair_dot(F.col("qe"), F.col("ce")) / (F.col("qn") * F.col("cn")), 6
+                dot(F.col("qe"), F.col("ce")) / (F.col("qn") * F.col("cn")), 6
             ).alias("cos_sim"),
         )
     )
@@ -733,18 +724,13 @@ def q38_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # table, which at corpus scale cannot ship to every executor. These
     # are plain equi-joins on vec_id; AQE still picks broadcast when the
     # table is genuinely small (fixtures), and shuffles when it isn't.
-    # verify-step scorer: JVM fold by default (bit-reproducible vs the
-    # oracle); SPARK_GRAFT_ARROW_SCORER=1 swaps in the einsum batch
-    # scorer for high-dim corpora (identical at the 1e-6 output
-    # quantization — tests/test_ext.py pins flag-on/off equality).
-    pair_dot = dot_arrow if arrow_scorer() else dot
     return (
         cand.join(a, "id1")
         .join(z, "id2")
         .select(
             "id1",
             "id2",
-            F.round(pair_dot(F.col("e1"), F.col("e2")) / (F.col("n1") * F.col("n2")) * 1e6)
+            F.round(dot(F.col("e1"), F.col("e2")) / (F.col("n1") * F.col("n2")) * 1e6)
             .cast("bigint")
             .alias("cos_sim_u"),
         )
@@ -837,13 +823,14 @@ def _dist_structs():
     )
 
 
-# Above this cell count the interpreted-fold assignment is auto-routed
-# to the Arrow kernel even without the env flag (round 12): the JVM
-# path's O(k·dim) lambda evaluations per row are CPU-infeasible at the
+# Above this cell count the interpreted-fold assignment is routed to
+# the Arrow kernel (round 12): the JVM path's O(k·dim) lambda
+# evaluations per row are CPU-infeasible at the
 # k ≈ corpus/occupancy a real deployment derives (measured: k=250 ×
 # 50k vectors did not finish in 120 s; Arrow does it in seconds), and
 # the Arrow kernel computes IDENTICAL assignments (HALF_UP-at-6dp
-# distance, cid tie-break — parity pinned by the flag-parity test), so
+# distance, cid tie-break — parity pinned by
+# tests/test_ext.py::test_ivf_assign_arrow_matches_fold), so
 # the route is a physical choice, never semantic. The fixture regime
 # (k = IVF_K = 8) stays on the JVM fold — the bit-level oracle path.
 _IVF_ARROW_K = 32
@@ -859,10 +846,9 @@ def ivf_assign_with(
     that makes IVF viable at 100 TB.
 
     ``k`` is a routing HINT (the caller usually knows its cell count):
-    above ``_IVF_ARROW_K`` the Arrow kernel is auto-picked — see the
-    constant's comment. ``SPARK_GRAFT_ARROW_SCORER=1`` still forces
-    Arrow at any k (the parity-test hook)."""
-    if arrow_scorer() or (k is not None and k > _IVF_ARROW_K):
+    above ``_IVF_ARROW_K`` the Arrow kernel is picked — see the
+    constant's comment."""
+    if k is not None and k > _IVF_ARROW_K:
         return ivf_assign_arrow(v, cents)
     return v.crossJoin(F.broadcast(cents)).select(
         "vec_id", "e", "nrm", F.array_min(_dist_structs())["cid"].alias("cell_id")
@@ -937,13 +923,13 @@ def ivf_assign_arrow(v: DataFrame, cents: DataFrame) -> DataFrame:
     from eventsgateway_spark.shipping import ship_package
 
     # the closure references module-level _rounded_d2 (pickled by
-    # REFERENCE — the dot_arrow precedent): ship the package so
-    # executors spawned without this repo on PYTHONPATH can resolve it
+    # REFERENCE): ship the package so executors spawned without this
+    # repo on PYTHONPATH can resolve it
     ship_package(v.sparkSession)
     cids, C, c_sq = _collect_centroids(cents)
 
     # no type annotations: pandas_udf's hint inference can't resolve
-    # the lazily-imported pd module (same pattern as shingles_arrow)
+    # the lazily-imported pd module
     def _cell_of(es):
         import numpy as np
 
@@ -977,13 +963,13 @@ def ivf_probe_with(
     replicates the fold's semantics exactly: HALF_UP-at-6dp squared-L2,
     (dist, cid) ordering, first ``nprobe`` cells.
 
-    Routing (ADVICE r12): the env flag forces Arrow only at call
-    sites that pass a ``k`` hint (the serving paths). The hintless
-    call is q43's oracle path — it stays on the sequential fold
+    Routing (ADVICE r12): only a call that passes a ``k`` hint (the
+    serving paths) can reach the Arrow probe. The hintless call is
+    q43's oracle path — it stays on the sequential fold
     unconditionally, so a hash-declared plan can never depend on
     ``_rounded_d2``'s expanded-form rounding (see its docstring's
     .5-ulp caveat)."""
-    if k is not None and (arrow_scorer() or k > _IVF_ARROW_K):
+    if k is not None and k > _IVF_ARROW_K:
         return ivf_probe_arrow(v, cents, nprobe)
     return v.crossJoin(F.broadcast(cents)).select(
         F.col("vec_id").alias("qid"),
@@ -1358,9 +1344,10 @@ def semd_cell_count(emb: DataFrame) -> int:
 # result; the parity test checks the actual fixtures observe none.
 #
 # Routing: fixture scale keeps the fold path (the oracle-declared
-# plan, byte-identical for the driver's sf0.01 runs);
-# SPARK_GRAFT_ARROW_SCORER=1 forces the kernel (the parity-test hook)
-# — the ivf_assign_with convention.
+# plan, byte-identical for the driver's sf0.01 runs); above
+# FIXTURE_INPUT_BYTES the kernel runs. Tests reach the kernel at
+# fixture scale by setting _util.FIXTURE_INPUT_BYTES to 0, which
+# selects the whole bench plan (pin/spread included).
 
 _CELL_GEMM_BLOCK = 2048
 
@@ -1555,7 +1542,7 @@ def q70_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     assign = ivf_assign(emb, semd_cell_count(emb))
     from eventsgateway_spark.queries._util import is_fixture_scale
 
-    if arrow_scorer() or not is_fixture_scale(emb):
+    if not is_fixture_scale(emb):
         # r15 within-cell GEMM kernel (comment block above the kernel):
         # each vector crosses the shuffle once, the occ² dots run as
         # BLAS blocks. Measured q70 floor 3.6 → 1.6 s at sf0.1
@@ -1844,7 +1831,7 @@ def q94_knn_label_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels = table(spark, sf_dir, "embeddings").select("vec_id", "label")
     from eventsgateway_spark.queries._util import is_fixture_scale
 
-    if arrow_scorer() or not is_fixture_scale(emb):
+    if not is_fixture_scale(emb):
         # r15 within-cell GEMM kernel (comment block above the
         # kernel): replaces pair join + mirror union + two windows +
         # votes aggregate with ONE applyInPandas over cell_id — each
@@ -1898,7 +1885,6 @@ def q94_knn_label_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("nid"), F.col("e").alias("e2"),
         F.col("nrm").alias("n2"), "cell_id",
     )
-    pair_dot = dot
     # UNDIRECTED pair join (nid < qid) + projection mirror: the dot
     # fold — the dominant CPU here — runs once per unordered pair and
     # both direction branches share the one canonical join subtree
@@ -1913,7 +1899,7 @@ def q94_knn_label_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
             "qid",
             "nid",
             F.round(
-                pair_dot(F.col("e1"), F.col("e2"))
+                dot(F.col("e1"), F.col("e2"))
                 / (F.col("n1") * F.col("n2")) * 1e6
             )
             .cast("bigint")

@@ -28,11 +28,9 @@ from pyspark.sql.window import Window
 
 from eventsgateway_spark.functions.vectors import (
     dot,
-    dot_arrow,
     dot_codes,
     sq8_codes,
 )
-from eventsgateway_spark.queries._util import arrow_scorer
 from eventsgateway_spark.queries.ext_similarity import (
     ivf_assign_with,
     ivf_centroids,
@@ -506,7 +504,7 @@ def ann_lookup_batch(
             "qid",
             F.col("vec_id").alias("neighbor_id"),
             F.round(
-                (dot_arrow if arrow_scorer() else dot)(F.col("qe"), F.col("e"))
+                dot(F.col("qe"), F.col("e"))
                 / (F.col("qn") * F.col("nrm")),
                 6,
             ).alias("cos_sim"),
@@ -754,7 +752,7 @@ def semantic_dedup_batch(
         .select(
             "qid",
             F.round(
-                (dot_arrow if arrow_scorer() else dot)(F.col("qe"), F.col("e"))
+                dot(F.col("qe"), F.col("e"))
                 / (F.col("qn") * F.col("nrm"))
                 * 1e6
             )

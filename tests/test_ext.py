@@ -512,44 +512,30 @@ def test_simhash_hamming_banding_semantics(spark):
     assert pairs == expect and (1, 2) in pairs
 
 
-def test_ann_arrow_scorer_agrees_with_fold(spark):
-    """The Arrow einsum scorer must produce the same ranked output as
-    the JVM fold at 6dp rounding (summation order differs only in the
-    last float bits)."""
-    emb = spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet")
-    queries = emb.filter(F.col("vec_id") < 10)
-    fold = {
-        (r["qid"], r["rn"]): (r["neighbor_id"], r["cos_sim"])
-        for r in ann_topk_bucketed(emb, queries, k=3, scorer="fold").collect()
-    }
-    arrow = {
-        (r["qid"], r["rn"]): (r["neighbor_id"], r["cos_sim"])
-        for r in ann_topk_bucketed(emb, queries, k=3, scorer="arrow").collect()
-    }
-    assert fold == arrow and len(fold) > 0
-
-
-def test_arrow_scorer_flag_parity(spark, monkeypatch):
-    """SPARK_GRAFT_ARROW_SCORER=1 must leave q30 (Arrow shingles) and
-    q38 (Arrow pair-dot) results byte-identical to the default JVM
-    folds — the flag is a physical fast path, never a semantic knob."""
-    from eventsgateway_spark.queries import QUERIES
+def test_bench_plan_parity(spark, monkeypatch):
+    """The plan the bench times must return the rows the oracle checks.
+    With ``FIXTURE_INPUT_BYTES`` at 0 every input counts as bench scale,
+    so q30/q38/q43/q70/q94 run their bench plans (pin/spread, the q38
+    bucket GEMM kernel, the q70/q94 GEMM cell kernels) on the sf0.01
+    fixture and must match the default fixture-scale plans row for
+    row."""
+    from eventsgateway_spark.queries import QUERIES, _util
 
     def rows(name):
-        return [tuple(r) for r in QUERIES[name](spark, SF_ORACLE).collect()]
+        try:
+            return [tuple(r) for r in QUERIES[name](spark, SF_ORACLE).collect()]
+        finally:
+            _util.unpin_all()
 
-    monkeypatch.delenv("SPARK_GRAFT_ARROW_SCORER", raising=False)
-    base = {
-        n: rows(n)
-        for n in (
-            "q30_jaccard_pairs",
-            "q38_embedding_near_dup",
-            "q43_ivf_ann",  # Arrow IVF assignment path
-            "q70_semantic_dedup",  # Arrow assignment + GEMM cell kernel
-            "q94_knn_label_consistency",  # GEMM cell kernel (r15)
-        )
-    }
-    monkeypatch.setenv("SPARK_GRAFT_ARROW_SCORER", "1")
+    names = (
+        "q30_jaccard_pairs",
+        "q38_embedding_near_dup",
+        "q43_ivf_ann",
+        "q70_semantic_dedup",  # GEMM cell kernel (r15)
+        "q94_knn_label_consistency",  # GEMM cell kernel (r15)
+    )
+    base = {n: rows(n) for n in names}
+    monkeypatch.setattr(_util, "FIXTURE_INPUT_BYTES", 0)
     for n, expected in base.items():
         assert rows(n) == expected and len(expected) > 0, n
 
@@ -562,10 +548,10 @@ def test_semd_knn_gemm_kernel_parity(spark, monkeypatch, tmp_path):
     path's missing-top3 case). A tiny parquet fixture (10 vectors,
     8 derived cells => several single-member cells) forces that edge;
     the shipped sf fixtures cover the dense case via
-    test_arrow_scorer_flag_parity."""
+    test_bench_plan_parity."""
     from pyspark.sql import types as T
 
-    from eventsgateway_spark.queries import QUERIES
+    from eventsgateway_spark.queries import QUERIES, _util
 
     rows_in = [
         (i, [float((i * 7 + j * 3) % 11 - 5) or 1.0 for j in range(4)], i % 3)
@@ -583,48 +569,18 @@ def test_semd_knn_gemm_kernel_parity(spark, monkeypatch, tmp_path):
     ).parquet(str(tmp_path / "embeddings.parquet"))
 
     def run(name):
-        return [tuple(r) for r in QUERIES[name](spark, str(tmp_path)).collect()]
+        try:
+            return [tuple(r) for r in QUERIES[name](spark, str(tmp_path)).collect()]
+        finally:
+            _util.unpin_all()
 
-    monkeypatch.delenv("SPARK_GRAFT_ARROW_SCORER", raising=False)
     fold = {n: run(n) for n in ("q70_semantic_dedup", "q94_knn_label_consistency")}
-    monkeypatch.setenv("SPARK_GRAFT_ARROW_SCORER", "1")
+    monkeypatch.setattr(_util, "FIXTURE_INPUT_BYTES", 0)
     for n, expected in fold.items():
         assert run(n) == expected and len(expected) == 10, n
     # the edge actually fired: at 10 vectors / 8 seeded cells some
     # vector is alone in its cell => sentinel row present in both paths
     assert any(r[2] == -1 for r in fold["q94_knn_label_consistency"])
-
-
-def test_shingles_arrow_matches_jvm(spark):
-    """shingles_arrow must emit exactly array_distinct(ngrams(tokens))."""
-    from eventsgateway_spark.functions.text import ngrams, shingles_arrow, tokens
-
-    df = spark.createDataFrame(
-        [("a b c d e",), ("x x x",), ("one two",), ("",), ("  padded   toks  a b c",)],
-        "text string",
-    )
-    jvm = df.select(
-        F.array_distinct(ngrams(tokens("text"), 3)).alias("s")
-    ).collect()
-    arw = df.select(shingles_arrow(F.col("text"), 3).alias("s")).collect()
-    assert [r["s"] for r in jvm] == [r["s"] for r in arw]
-
-
-def test_shingles_arrow_null_text(spark):
-    """A NULL text row must not crash the Arrow path and must emit the
-    same downstream rows as the JVM path after explode: none (the JVM
-    path's ngrams(null-toks) is the empty array). ADVICE r5 — the
-    fixtures carry no null text, so the parity test above can't see
-    this divergence."""
-    from eventsgateway_spark.functions.text import ngrams, shingles_arrow, tokens
-
-    df = spark.createDataFrame([("a b c d",), (None,)], "text string")
-    jvm = df.select(
-        F.explode(F.array_distinct(ngrams(tokens("text"), 3))).alias("s")
-    ).collect()
-    arw = df.select(F.explode(shingles_arrow(F.col("text"), 3)).alias("s")).collect()
-    assert sorted(r["s"] for r in jvm) == sorted(r["s"] for r in arw)
-    assert len(arw) == 2  # only the non-null doc's two shingles
 
 
 def test_semantic_dedup_keep_first_invariants(spark):
@@ -1464,14 +1420,15 @@ def test_ann_topk_bucketed_rejects_single_pinned_knob(spark):
     assert ann_topk_bucketed(emb, q, k=1).count() > 0
 
 
-def test_oracle_probe_path_ignores_arrow_flag(spark, monkeypatch):
-    """ADVICE r12: the env flag must never reroute a HINTLESS
-    ivf_probe_with call (q43's oracle path) through the Arrow kernel —
-    _rounded_d2's expanded-form distance can in principle round
-    differently from the sequential fold at a .5-ulp boundary, so
-    hash-declared plans stay on the fold unconditionally. With a k
-    hint (the serving paths) the flag still forces Arrow."""
+def test_ivf_probe_routes_on_k_hint(spark):
+    """ADVICE r12: a HINTLESS ivf_probe_with call (q43's oracle path)
+    stays on the sequential fold — _rounded_d2's expanded-form distance
+    can in principle round differently at a .5-ulp boundary, so
+    hash-declared plans never reach the Arrow kernel. A ``k`` hint past
+    ``_IVF_ARROW_K`` (the serving paths) routes to it, with the same
+    rows."""
     from eventsgateway_spark.queries.ext_similarity import (
+        _IVF_ARROW_K,
         IVF_K,
         ivf_centroids,
         ivf_probe_with,
@@ -1481,18 +1438,36 @@ def test_oracle_probe_path_ignores_arrow_flag(spark, monkeypatch):
     emb = spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet")
     v = norm_view(emb).filter(F.col("vec_id") < 5)
     cents = ivf_centroids(emb, IVF_K).localCheckpoint()
-    monkeypatch.setenv("SPARK_GRAFT_ARROW_SCORER", "1")
 
     def plan(df):
         return df._jdf.queryExecution().executedPlan().toString()
 
     hintless = ivf_probe_with(v, cents, 2)
     assert "EvalPython" not in plan(hintless)  # fold: no Python stage
-    hinted = ivf_probe_with(v, cents, 2, k=IVF_K)
-    assert "EvalPython" in plan(hinted)  # flag + hint: Arrow kernel
-    # same rows either way (the kernel parity the flag exists to test)
+    hinted = ivf_probe_with(v, cents, 2, k=_IVF_ARROW_K + 1)
+    assert "EvalPython" in plan(hinted)  # past the size rule: Arrow kernel
     rows = lambda df: {(r["qid"], r["cell_id"]) for r in df.collect()}
     assert rows(hintless) == rows(hinted) and len(rows(hintless)) > 0
+
+
+def test_ivf_assign_arrow_matches_fold(spark):
+    """ivf_assign_arrow (the kernel ivf_assign_with routes to past
+    ``_IVF_ARROW_K``) must assign every sf0.01 vector to the same cell
+    as the fold path at the oracle cell count."""
+    from eventsgateway_spark.queries.ext_similarity import (
+        IVF_K,
+        ivf_assign_arrow,
+        ivf_assign_with,
+        ivf_centroids,
+        norm_view,
+    )
+
+    emb = spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet")
+    v = norm_view(emb)
+    cents = ivf_centroids(emb, IVF_K).localCheckpoint()
+    rows = lambda df: sorted((r["vec_id"], r["cell_id"]) for r in df.collect())
+    fold = rows(ivf_assign_with(v, cents, k=IVF_K))
+    assert rows(ivf_assign_arrow(v, cents)) == fold and len(fold) > 0
 
 
 def test_dhash_invariant_to_upscale_and_reencode(spark):

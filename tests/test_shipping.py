@@ -20,13 +20,19 @@ from pyspark.sql import SparkSession
 spark = (SparkSession.builder.master("local[2]")
          .config("spark.ui.enabled", "false").getOrCreate())
 
-# 1) Arrow scorer (functions/vectors._dot_arrow_batch — by-reference)
-from pyspark.sql import functions as F
-from eventsgateway_spark.functions.vectors import dot_arrow
-df = spark.createDataFrame(
-    [([1.0, 2.0], [3.0, 4.0])], "a array<double>, b array<double>"
+# 1) IVF Arrow assignment (queries/ext_similarity.ivf_assign_arrow — its
+#    pandas_udf closure calls module-level _rounded_d2, pickled by reference)
+from eventsgateway_spark.queries.ext_similarity import ivf_assign_arrow
+v = spark.createDataFrame(
+    [(1, [1.0, 0.0], 1.0), (2, [0.0, 2.0], 2.0)],
+    "vec_id long, e array<double>, nrm double",
 )
-assert df.select(dot_arrow(F.col("a"), F.col("b")).alias("d")).first()["d"] == 11.0
+cents = spark.createDataFrame(
+    [([(0, [1.0, 0.0]), (1, [0.0, 1.0])],)],
+    "cents array<struct<cid:bigint, ce:array<double>>>",
+)
+cells = {{r["vec_id"]: r["cell_id"] for r in ivf_assign_arrow(v, cents).collect()}}
+assert cells == {{1: 0, 2: 1}}, cells
 
 # 2) Avro codec (JVM UDFs from eventsgateway_spark/jvm: needs the jar the
 #    package compiles and adds with ADD JAR, not the shipped zip)

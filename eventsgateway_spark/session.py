@@ -7,8 +7,8 @@ greatest()-guarded integer divisions in ext_sampling) and scale (AQE,
 shuffle partitions, Arrow).
 
 Local-mode notes: tests run on ``local[N]`` (single JVM). On a real
-cluster the same confs apply; the only local-specific knob is
-``spark.driver.memory``.
+cluster the same confs apply; the local-specific knobs are
+``spark.driver.memory`` and the Python worker daemon (see ``get_spark``).
 """
 
 from __future__ import annotations
@@ -54,6 +54,13 @@ def get_spark(app_name: str = "eventsgateway_spark", **extra_confs: str) -> Spar
     ``spark.driver.memory`` only takes effect on a fresh JVM; callers that
     need a specific memory size must call this before any other session
     exists.
+
+    On a local master the session's Python workers run under
+    ``eventsgateway_spark.worker_daemon``, which re-reads a zip's
+    directory only when the archive changed. That holds only for a local
+    master, whose workers inherit the ``PYTHONPATH`` set here and so can
+    import the package before any ``addPyFile``; a cluster master keeps
+    pyspark's own daemon.
     """
     # Python workers inherit PYTHONPATH from their parent process env,
     # not the driver's sys.path — without this, any pickled function
@@ -74,10 +81,19 @@ def get_spark(app_name: str = "eventsgateway_spark", **extra_confs: str) -> Spar
         "spark.executorEnv.PYTHONPATH", os.environ.get("PYTHONPATH", pkg_root)
     )
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
-    master = f"local[{cpus}]" if cpus else "local[*]"
-    builder = SparkSession.builder.master(
-        os.environ.get("SPARK_GRAFT_MASTER", master)
-    ).appName(app_name)
+    master = os.environ.get(
+        "SPARK_GRAFT_MASTER", f"local[{cpus}]" if cpus else "local[*]"
+    )
+    if master == "local" or master.startswith("local["):
+        # The stat-checked worker daemon (worker_daemon.py) saves each
+        # Python task about 200 ms of zip directory re-reads. The daemon
+        # starts before any addPyFile and must import the package on its
+        # own; only a local master's workers inherit the PYTHONPATH
+        # exported above, so a cluster master keeps pyspark's own daemon.
+        extra_confs.setdefault(
+            "spark.python.daemon.module", "eventsgateway_spark.worker_daemon"
+        )
+    builder = SparkSession.builder.master(master).appName(app_name)
     for k, v in {**_DEFAULT_CONFS, **extra_confs}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

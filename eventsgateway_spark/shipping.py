@@ -16,6 +16,11 @@ deployment does: zip the package once per session and
 every code path that creates a by-reference Python UDF (multimodal
 decode, Arrow scorers, UDTFs). The Avro codec is JVM code and needs no
 shipping.
+
+In a ``session.get_spark`` session the workers need no zip: their
+daemon (``worker_daemon``) already imports the package from the
+``PYTHONPATH`` that ``get_spark`` exports. The zip serves sessions the
+package did not build, such as a vanilla ``SparkSession.builder`` one.
 """
 
 from __future__ import annotations

@@ -19,7 +19,7 @@ pandas UDF probing the broadcast bitset with numpy — no explode, no
 join, no shuffle. The eval side is one distinct-hash aggregation
 (small by definition: benchmarks are KBs-to-MBs against a TB corpus)
 collected to the driver to set bits; the bitset ships to executors via
-``SparkContext.broadcast`` exactly once.
+``SparkContext.broadcast`` once per probe UDF.
 
 Bit layout is deterministic (no RNG): k probe positions per element by
 Kirsch-Mitzenmacher double hashing ``h_i = h1 + i*h2 (mod m)`` with
@@ -164,59 +164,19 @@ def build_bloom(df: DataFrame, col: str | Column, fpp: float = 1e-3) -> BloomFil
     return bloom_from_hashes(rows, fpp=fpp)
 
 
-# (applicationId, sha1(words), m, k) -> Broadcast. Rebuilding the same
-# filter in one session (bench warm-up + timed runs, notebook re-runs,
-# re-created streams) must NOT stack bitset copies in the driver and
-# executor BlockManagers — at the module's own advertised scale a
-# bitset is hundreds of MB. Identical filters reuse one broadcast;
-# when more than _BCAST_KEEP distinct filters are live the oldest is
-# unpersist()ed (NOT destroy()ed: a still-pinned frame referencing it
-# can lazily re-fetch from the driver, so eviction is safe).
-_BCAST_CACHE: dict[tuple, object] = {}
-_BCAST_KEEP = 4
-
-
-def _broadcast_words(spark: SparkSession, bf: BloomFilter):
-    import hashlib
-
-    key = (
-        spark.sparkContext.applicationId,
-        hashlib.sha1(bf.words.tobytes()).hexdigest(),
-        bf.m_bits,
-        bf.k,
-    )
-    bc = _BCAST_CACHE.get(key)
-    if bc is not None:
-        # refresh recency so eviction approximates LRU — without this
-        # a hot filter inserted first is evicted (and must re-ship its
-        # multi-hundred-MB bitset) as soon as _BCAST_KEEP newer ones
-        # appear, even while it is the most-used (ADVICE r8)
-        _BCAST_CACHE[key] = _BCAST_CACHE.pop(key)
-    else:
-        bc = spark.sparkContext.broadcast(bf.words)
-        _BCAST_CACHE[key] = bc
-        stale = [k for k in _BCAST_CACHE if k[0] != key[0]]
-        while stale or len(_BCAST_CACHE) > _BCAST_KEEP:
-            old = stale.pop(0) if stale else next(iter(_BCAST_CACHE))
-            evicted = _BCAST_CACHE.pop(old)
-            try:
-                evicted.unpersist()
-            except Exception:
-                pass  # stopped context — nothing to release
-    return bc
-
-
 def bloom_probe_count_udf(spark: SparkSession, bf: BloomFilter):
     """Arrow-batched pandas UDF ``array<bigint> -> bigint``: how many of
     a row's element hashes probe positive. The bitset rides one
-    ``SparkContext.broadcast`` (not a per-row closure copy) shared
-    across repeated builds of the same filter; the probe is numpy over
-    the CONCATENATION of a whole Arrow batch's arrays, then a per-row
-    segmented sum — no Python-per-element work."""
+    ``SparkContext.broadcast`` per call (not a per-row closure copy),
+    owned by the returned UDF: it is released with the frames that use
+    the UDF, and a caller that probes many frames with one filter
+    (``streaming.corpus_prep``, once per stream) builds the UDF once.
+    The probe is numpy over the CONCATENATION of a whole Arrow batch's
+    arrays, then a per-row segmented sum — no Python-per-element work."""
     from eventsgateway_spark.shipping import ship_package
 
     ship_package(spark)  # probe_count references _member_mask by module
-    b_words = _broadcast_words(spark, bf)
+    b_words = spark.sparkContext.broadcast(bf.words)
     m_bits, k = bf.m_bits, bf.k
 
     # Marked nondeterministic below NOT because it is (the probe is a

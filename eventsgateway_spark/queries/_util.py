@@ -151,23 +151,24 @@ def pin(df: DataFrame, mode: str = "checkpoint") -> DataFrame:
       checkpoint. Right for one-action DAGs whose pinned frame feeds
       several downstream joins (measured 2.3× faster than checkpoint
       on q60 at sf0.1).
-    - ``off`` — identity: rely on Catalyst ReusedExchange within the
-      single action. Right when every consumer sits under ONE action
-      and the consumers' exchanges are canonically identical (measured
-      3.7× faster than checkpoint on q31's band self-join at sf0.1).
+
+    A frame whose consumers all sit under ONE action, with canonically
+    identical exchanges, is not pinned at all: Catalyst ReusedExchange
+    runs the shared exchange once (measured 3.7× faster than
+    checkpoint on q31's band self-join at sf0.1).
 
     At fixture scale any materialization job costs more than the
     recompute it saves, so the frame is returned untouched. A pin of
-    either materializing mode lives until ``unpin_all()`` or the next
+    either mode lives until ``unpin_all()`` or the next
     registry query's ``unpin_others`` releases it (``release_frame``
     frees persisted and checkpointed blocks alike). 100 TB posture: a
     long-lived pinned frame should graduate to a persisted/bucketed
     table (SCALE.md)."""
-    if mode not in ("off", "persist", "checkpoint"):
+    if mode not in ("persist", "checkpoint"):
         # checked at every scale: a typo'd mode must fail in the
         # fixture-scale tests, not first in a bench run
-        raise ValueError(f"unknown pin mode {mode!r} (off|persist|checkpoint)")
-    if mode == "off" or is_fixture_scale(df):
+        raise ValueError(f"unknown pin mode {mode!r} (persist|checkpoint)")
+    if is_fixture_scale(df):
         return df
     if mode == "persist":
         # LAZY persist (r15, guide §1.2/§5): the old eager `df.count()`

@@ -76,11 +76,9 @@ def doc_shingles(
     frequent shingles pruned by document frequency (bounds the fan-out
     of any later equi-join on s).
 
-    The raw shingle table is ``pin``-materialized once at real scale
-    (every consumer — hot-list aggregation, pair join sides, size
-    table, minhash — would otherwise re-run the explode lineage from
-    the parquet scan; at fixture scale the recompute is cheaper than
-    the checkpoint job). The df-cap is then a broadcast ANTI join
+    The raw shingle table is not pinned here (see ``_df_capped``); a
+    caller that reads the result from several actions pins the result.
+    The df-cap is a broadcast ANTI join
     against the hot-shingle list: the list of shingles with df > cap
     is tiny by construction, so the prune costs no shuffle and no sort
     (a window count would sort every partition by s).
@@ -119,8 +117,8 @@ def _df_capped(shingled: DataFrame, max_df: int) -> DataFrame:
     """Df-cap the shingle table via a broadcast anti join against the
     (tiny-by-construction) hot-shingle list.
 
-    Pin mode ``off`` (round-6 A/B, BASELINE.md): every consumer of the
-    shingle table in q30/q31/q60 sits under ONE action, where the
+    The shingle table is not pinned (round-6 A/B, BASELINE.md): every
+    consumer of it in q30/q31/q60 sits under ONE action, where the
     self-join sides canonicalize to the same exchange (ReusedExchange
     runs it once) and the residual recompute (tokenize+explode for the
     hot list / sizes branches) is cheaper than any materialization —
@@ -128,14 +126,13 @@ def _df_capped(shingled: DataFrame, max_df: int) -> DataFrame:
     slower on q30/q31 at sf0.1. Multi-action composers that reuse the
     shingle table across actions should pin the RESULT frame they
     build from it, not this one."""
-    sh = pin(shingled, mode="off")
     hot = (
-        sh.groupBy("s")
+        shingled.groupBy("s")
         .agg(F.count(F.lit(1)).alias("_df"))
         .filter(F.col("_df") > max_df)
         .select("s")
     )
-    return sh.join(F.broadcast(hot), "s", "left_anti")
+    return shingled.join(F.broadcast(hot), "s", "left_anti")
 
 
 def _with_jaccard(inter: DataFrame, sizes: DataFrame, threshold: float) -> DataFrame:
@@ -463,11 +460,11 @@ def minhash_band_candidates(mins: DataFrame) -> DataFrame:
     (round 14) so q93's calibration audit runs over EXACTLY the pair
     universe q31 verifies. One explode instead of a band-count union
     (which would recompute the signature aggregation once per band);
-    pin mode "off": both self-join sides canonicalize to the SAME
+    not pinned: both self-join sides canonicalize to the SAME
     aggregation exchange, so ReusedExchange runs the signature shuffle
     once within the action (round-6 A/B — a localCheckpoint here cost
     3.7x at sf0.1)."""
-    bands = pin(mins.select(
+    bands = mins.select(
         "doc_id",
         F.explode(
             F.array(
@@ -484,7 +481,7 @@ def minhash_band_candidates(mins: DataFrame) -> DataFrame:
                 ]
             )
         ).alias("bk"),
-    ).select("doc_id", "bk.band", "bk.bkey"), mode="off")
+    ).select("doc_id", "bk.band", "bk.bkey")
     a = bands.alias("a")
     bb = bands.alias("b")
     return (

@@ -223,12 +223,12 @@ def lsh_plane_count(emb: DataFrame, floor_planes: int) -> int:
 # FIXED table count caps the OR over tables. The trade that buys
 # recall without buying candidates: each table-DOUBLING adds ONE
 # plane per table, leaving the uniform-ideal candidate volume
-# T·N²/2^p invariant. Measured (tools/lsh_ladder_probe.py, 100k
-# gaussian 64-d vectors + 30 planted pairs per similarity band,
-# SCALE.md round-12 table): 2×11 → 8×13 lifts banded recall
-# cos0.90 10/30 → 21/30, cos0.95 19/30 → 28/30, cos0.99 26/30 →
-# 28/30, with Σocc² at 1.61× the uniform ideal (vs 1.33× — both
-# within the 2× skew bound) and the ideal itself unchanged. Cost is
+# T·N²/2^p invariant. Measured (SCALE.md round-12 tables, 100k
+# gaussian 64-d vectors + 30 planted pairs per similarity band):
+# 2×11 → 8×13 lifts banded recall cos0.90 10/30 → 21/30, cos0.95
+# 19/30 → 28/30, cos0.99 26/30 → 28/30, with Σocc² at 1.61× the
+# uniform ideal (vs 1.33× — both within the 2× skew bound) and the
+# ideal itself unchanged. Cost is
 # bucket-computation CPU only (T·p folds per vector: 22 → 104 at the
 # top rung — still O(dim) per row, map-side, no shuffle).
 #
@@ -241,8 +241,7 @@ def lsh_plane_count(emb: DataFrame, floor_planes: int) -> int:
 #
 # Cap history: round 12 set 4× from 100k-vector evidence (where the
 # cap never binds — the 100k rung is 8 tables either way); round 13
-# measured the binding regime at 1M vectors (lsh_ladder_probe,
-# SCALE.md round-13): the 4×-capped rung (8 tables × 16 eff planes)
+# measured the binding regime at 1M vectors (SCALE.md round-13): the 4×-capped rung (8 tables × 16 eff planes)
 # sagged to cos-0.95 recall 24/30 / cos-0.90 16/30, the 8× rung
 # (16×17) restores 28/30 / 18/30 at the invariant ideal volume
 # (realized Σocc² 2.27× ideal — gaussian-bucket skew at 1M, 2.03× even
@@ -1627,8 +1626,8 @@ def q85_lsh_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the candidate-volume CONTRACT as a driver-checked number: per
     table, ``occ_sq`` (Σ count² over buckets) IS the table's bucket-
     join pair volume, the quantity the round-12 coupled ladder holds
-    ~linear in N (SCALE.md round-12 table; tools/lsh_ladder_probe.py
-    measures the same statistic at 100k vectors). Planes and tables
+    ~linear in N (SCALE.md round-12 tables record the same statistic
+    at 100k vectors). Planes and tables
     come from the same ``lsh_family`` call q38 uses, flooring to
     (6, 2) at every oracle scale so the static two-table mirror is
     exact. Physical shape: one scan computing T×p projections per

@@ -17,6 +17,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from eventsgateway_spark.shipping import WORKER_DAEMON
+
 # Tuned for the driver's bench box (local[32], 128 GiB). On a cluster,
 # spark.sql.shuffle.partitions should scale with executor cores (AQE
 # coalesces the excess), so a high-but-not-huge default is safe.
@@ -58,8 +60,8 @@ def get_spark(app_name: str = "eventsgateway_spark", **extra_confs: str) -> Spar
     On a local master the session's Python workers run under
     ``eventsgateway_spark.worker_daemon``, which re-reads a zip's
     directory only when the archive changed. That holds only for a local
-    master, whose workers inherit the ``PYTHONPATH`` set here and so can
-    import the package before any ``addPyFile``; a cluster master keeps
+    master, whose workers inherit the ``PYTHONPATH`` set here and so
+    import the package without a shipped zip; a cluster master keeps
     pyspark's own daemon.
     """
     # Python workers inherit PYTHONPATH from their parent process env,
@@ -67,10 +69,12 @@ def get_spark(app_name: str = "eventsgateway_spark", **extra_confs: str) -> Spar
     # referencing the package (multimodal decode, UDTFs) fails
     # with ModuleNotFoundError when the caller runs outside the repo
     # root. Local mode: the driver env var reaches the workers (must be
-    # set before the first JVM starts). Cluster mode: executors spawn
-    # from the executor JVM's env, so spark.executorEnv.PYTHONPATH is
-    # set too — on a real deployment prefer shipping the package
-    # (pip install / --py-files), which needs neither.
+    # set before the first JVM starts), and it is how they import the
+    # package: shipping.ship_package adds no zip to a session whose
+    # daemon is worker_daemon. Cluster mode: executors spawn from the
+    # executor JVM's env, so spark.executorEnv.PYTHONPATH is set too,
+    # and ship_package still adds the zip there — on a real deployment
+    # prefer installing the package (pip install / --py-files).
     pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     existing = os.environ.get("PYTHONPATH", "")
     if pkg_root not in existing.split(os.pathsep):
@@ -87,12 +91,10 @@ def get_spark(app_name: str = "eventsgateway_spark", **extra_confs: str) -> Spar
     if master == "local" or master.startswith("local["):
         # The stat-checked worker daemon (worker_daemon.py) saves each
         # Python task about 200 ms of zip directory re-reads. The daemon
-        # starts before any addPyFile and must import the package on its
+        # starts before any task and must import the package on its
         # own; only a local master's workers inherit the PYTHONPATH
         # exported above, so a cluster master keeps pyspark's own daemon.
-        extra_confs.setdefault(
-            "spark.python.daemon.module", "eventsgateway_spark.worker_daemon"
-        )
+        extra_confs.setdefault("spark.python.daemon.module", WORKER_DAEMON)
     builder = SparkSession.builder.master(master).appName(app_name)
     for k, v in {**_DEFAULT_CONFS, **extra_confs}.items():
         builder = builder.config(k, v)

@@ -4,12 +4,11 @@ their archive changed.
 pyspark's worker calls ``importlib.invalidate_caches()`` before every task
 (``pyspark.worker_util.setup_spark_files``). Before Python 3.13 that makes
 every ``zipimporter`` in ``sys.path_importer_cache`` re-read its whole
-archive directory: 16-20 importers over ``pyspark.zip``, the py4j zip,
-the spark-core jar and the shipped package zip, 130-230 ms of CPU per
-task on a 4-core host, whatever the task's row count. Here an importer
-re-reads only when its archive's ``(st_mtime_ns, st_size)`` differs from
-its last read or cannot be taken, so an archive rewritten on disk is
-still picked up. ``session.get_spark`` names this module as
+archive directory: 16 importers over ``pyspark.zip``, the py4j zip and
+the spark-core jar, 130-230 ms of CPU per task on a 4-core host,
+whatever the task's row count. Here an importer re-reads only when its
+archive's ``(st_mtime_ns, st_size)`` differs from its last read or
+cannot be taken, so an archive rewritten on disk is still picked up. ``session.get_spark`` names this module as
 ``spark.python.daemon.module``; the workers the daemon forks inherit the
 patch and the stamps it recorded.
 """

@@ -97,50 +97,6 @@ def test_probe_udf_matches_driver_probe(spark):
         assert got[rid] == want, rid
 
 
-def test_probe_udf_reuses_broadcast_for_identical_filters(spark):
-    """Rebuilding the same filter (bench warm-up/timed runs, notebook
-    re-runs) must reuse ONE broadcast, not stack bitset copies."""
-    from eventsgateway_spark.operators import bloom as B
-
-    items = np.arange(1000, dtype=np.int64)
-    bf1 = B.bloom_from_hashes(items, fpp=1e-3)
-    bf2 = B.bloom_from_hashes(items, fpp=1e-3)  # equal content, new object
-    bc1 = B._broadcast_words(spark, bf1)
-    bc2 = B._broadcast_words(spark, bf2)
-    assert bc1 is bc2
-    # a different filter gets its own broadcast
-    bf3 = B.bloom_from_hashes(items[:500], fpp=1e-3)
-    assert B._broadcast_words(spark, bf3) is not bc1
-    # and the cache stays bounded
-    assert len(B._BCAST_CACHE) <= B._BCAST_KEEP
-
-
-def test_broadcast_cache_eviction_is_lru(spark):
-    """A cache HIT refreshes recency (ADVICE r8): with insertion-order
-    eviction a hot filter inserted first would be evicted — and its
-    multi-hundred-MB bitset re-broadcast — as soon as _BCAST_KEEP
-    newer distinct filters appear, even while it is the most-used."""
-    from eventsgateway_spark.operators import bloom as B
-
-    hot = B.bloom_from_hashes(np.arange(100, dtype=np.int64), fpp=1e-3)
-    bc_hot = B._broadcast_words(spark, hot)
-    # fill the cache with _BCAST_KEEP - 1 other filters, touching the
-    # hot one between each insert so it keeps refreshing
-    for i in range(B._BCAST_KEEP - 1):
-        B._broadcast_words(
-            spark,
-            B.bloom_from_hashes(np.arange(200 + i * 7, dtype=np.int64), fpp=1e-3),
-        )
-        assert B._broadcast_words(spark, hot) is bc_hot
-    # one more distinct filter evicts SOMETHING — but not the hot one
-    B._broadcast_words(
-        spark, B.bloom_from_hashes(np.arange(999, dtype=np.int64), fpp=1e-3)
-    )
-    assert B._broadcast_words(spark, hot) is bc_hot, (
-        "hot filter evicted despite being the most recently used"
-    )
-
-
 def test_q79_flags_superset_of_exact_q53(spark):
     """The load-bearing invariant: zero false negatives vs the exact
     broadcast-join decontamination, and per-doc flagged-gram counts

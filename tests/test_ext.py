@@ -1782,12 +1782,13 @@ def test_perceptual_hash_null_payload_excluded(spark):
 def test_queries_leave_no_module_state(spark):
     """Queries keep no state between executions: after q79 (Bloom
     filter), q92 (media signatures) and q31 (MinHash family) run over
-    sf0.1 and ``unpin_all()`` returns, no module-level dict, list or
-    tuple anywhere in ``eventsgateway_spark.queries`` holds a
-    DataFrame or a BloomFilter."""
+    sf0.1 and ``unpin_all()`` returns, no module global anywhere in
+    ``eventsgateway_spark`` holds a DataFrame, a BloomFilter or a
+    Broadcast, directly or inside a dict, list, tuple or set."""
     import os
     import sys
 
+    from pyspark import Broadcast
     from pyspark.sql import DataFrame
 
     from eventsgateway_spark.operators.bloom import BloomFilter
@@ -1806,22 +1807,23 @@ def test_queries_leave_no_module_state(spark):
     unpin_all()
 
     def held(obj, depth=0):
-        if isinstance(obj, (DataFrame, BloomFilter)):
+        if isinstance(obj, (DataFrame, BloomFilter, Broadcast)):
             return True
         if depth > 3:
             return False
         if isinstance(obj, dict):
             obj = list(obj.keys()) + list(obj.values())
-        if isinstance(obj, (list, tuple)):
+        if isinstance(obj, (list, tuple, set, frozenset)):
             return any(held(x, depth + 1) for x in obj)
         return False
 
     leaks = [
         f"{mod_name}.{attr}"
         for mod_name, mod in list(sys.modules.items())
-        if mod_name.startswith("eventsgateway_spark.queries")
-        for attr, val in vars(mod).items()
-        if isinstance(val, (dict, list, tuple)) and held(val)
+        if mod_name == "eventsgateway_spark"
+        or mod_name.startswith("eventsgateway_spark.")
+        for attr, val in list(vars(mod).items())
+        if held(val)
     ]
     assert not leaks, f"module state survives unpin_all: {leaks}"
 

@@ -2,7 +2,9 @@
 pickle BY REFERENCE, so a vanilla session launched outside the repo
 (driver adds the repo to sys.path at runtime; workers never see it)
 died with ModuleNotFoundError on every pandas_udf/mapInPandas path.
-ship_package() closes this by addPyFile-ing the package zip."""
+ship_package() closes this by addPyFile-ing the package zip in such a
+session; a get_spark session's workers import the package from
+PYTHONPATH and get no zip."""
 
 from __future__ import annotations
 
@@ -75,3 +77,87 @@ def test_vanilla_session_outside_repo_can_run_python_udfs(tmp_path):
     assert "SHIPPING_OK" in proc.stdout, (
         f"stdout={proc.stdout[-2000:]}\nstderr={proc.stderr[-3000:]}"
     )
+
+
+def test_get_spark_session_ships_no_zip(spark):
+    """A get_spark session's workers import the package from the
+    exported PYTHONPATH, so ship_package adds no file and a worker
+    holds no package zip on sys.path or in its importer cache."""
+    from eventsgateway_spark.shipping import ship_package
+
+    ship_package(spark)
+    files = spark.sparkContext.listFiles
+    shipped = [f for f in files if "eventsgateway_spark_pkg" in f]
+    assert not shipped, shipped
+
+    def probe(batches):
+        import sys
+
+        import pandas as pd
+
+        import eventsgateway_spark
+
+        for _ in batches:
+            pass
+        zips = [
+            p
+            for p in list(sys.path) + list(sys.path_importer_cache)
+            if "eventsgateway_spark_pkg" in p
+        ]
+        yield pd.DataFrame(
+            {"zips": [repr(zips)], "pkg": [eventsgateway_spark.__file__]}
+        )
+
+    row = (
+        spark.range(1, numPartitions=1)
+        .mapInPandas(probe, "zips string, pkg string")
+        .collect()[0]
+    )
+    assert row["zips"] == "[]", row
+    assert row["pkg"] == os.path.join(REPO, "eventsgateway_spark", "__init__.py")
+
+
+TMP_PROBE = """
+import glob, os, sys
+sys.path.insert(0, {repo!r})
+from pyspark.sql import SparkSession
+
+spark = (SparkSession.builder.master("local[1]")
+         .config("spark.ui.enabled", "false").getOrCreate())
+from eventsgateway_spark.shipping import ship_package
+ship_package(spark)
+
+def where(batches):
+    import pandas as pd
+    import eventsgateway_spark.shipping as m
+    for _ in batches:
+        pass
+    yield pd.DataFrame({{"f": [m.__file__]}})
+
+f = spark.range(1, numPartitions=1).mapInPandas(where, "f string").first().f
+assert "eventsgateway_spark_pkg" in f, f  # the worker imported the zip
+pattern = os.path.join({tmp!r}, "**", "eventsgateway_spark_pkg*.zip")
+assert glob.glob(pattern, recursive=True), "zip not under the local dir"
+spark.stop()
+print("LEFT", glob.glob(pattern, recursive=True))
+"""
+
+
+def test_vanilla_session_zip_is_removed_on_stop(tmp_path):
+    """A vanilla session's package zip lives under the SparkContext's
+    own files root, so stop() removes it: nothing is left in the temp
+    or local directory."""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["TMPDIR"] = env["SPARK_LOCAL_DIRS"] = str(tmp_path)
+    proc = subprocess.run(
+        [sys.executable, "-c", TMP_PROBE.format(repo=REPO, tmp=str(tmp_path))],
+        cwd=str(tmp_path),
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert "LEFT []" in proc.stdout, (
+        f"stdout={proc.stdout[-2000:]}\nstderr={proc.stderr[-3000:]}"
+    )
+    assert not list(tmp_path.rglob("eventsgateway_spark_pkg*.zip"))

@@ -59,7 +59,7 @@ Two layers, gated differently:
 
 Both RPCs run the REAL ingest pipeline via
 ``ingest_http.ingest_events`` (validate → enrich → route → Avro →
-size verdict as one micro-batch; failure indexes read back from the
+size verdict, evaluated once per request; failure indexes read from the
 plan's own outcome rows), so HTTP and gRPC can never drift
 semantically — they share everything below request framing.
 """
@@ -381,7 +381,7 @@ def serve_ingest_grpc(
         events = req["events"]
         if len(events) > MAX_REQUEST_EVENTS:
             # same backfill boundary the HTTP endpoint enforces: one RPC
-            # is one driver-side micro-batch, not a bulk-load path
+            # is one driver-side batch of rows, not a bulk-load path
             context.abort(
                 grpc.StatusCode.RESOURCE_EXHAUSTED,
                 f"more than {MAX_REQUEST_EVENTS} events in one request; "

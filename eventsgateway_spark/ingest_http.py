@@ -8,8 +8,10 @@ This module closes that last behavioral seam with a dependency-free
 stdlib HTTP server (the same pattern as the Prometheus endpoint,
 streaming/metrics_http.py): a game client — or curl — gets a socket to
 point at, and each request body runs through the REAL ingest pipeline
-(`gateway.ingest`: validate → enrich → route → Avro → size verdict) as
-one transactional micro-batch, then lands on the configured sink.
+(`gateway.ingest`: validate → enrich → route → Avro → size verdict),
+which the optimizer evaluates in the driver JVM over the request's
+local relation, and its accepted payloads land on the configured sink
+as one bus batch.
 
 Wire protocol (JSON over HTTP; grpc/protobuf are not installed in this
 container, and the RPC *semantics* — not the framing — are the surface
@@ -31,7 +33,7 @@ event with its reject reason — so the verdict and the published
 payloads come from the SAME evaluation of the plan, never from
 re-implemented driver-side validation.
 
-Scale posture: one request = one micro-batch = a handful of driver-side
+Scale posture: one request = one bus batch = a handful of driver-side
 rows, exactly the reference's per-RPC granularity; bulk backfill goes
 through the file/Kafka source path (gateway.Gateway.flush docstring),
 not this endpoint.
@@ -61,7 +63,7 @@ _HTTP_WIRE_SCHEMA = T.StructType(
     + [T.StructField(f.name, f.dataType, True) for f in WIRE_EVENT_SCHEMA.fields]
 )
 
-#: Per-request ceiling: one HTTP request = one micro-batch of
+#: Per-request ceiling: one HTTP request = one bus batch of
 #: driver-side rows (the reference's per-RPC granularity). Bulk
 #: backfill must use the file/Kafka source path — the same boundary
 #: Gateway.MAX_FLUSH_ROWS enforces on the buffer facade, enforced
@@ -123,12 +125,13 @@ def ingest_events(
     The index list is sorted and unique, matching the semantics (not
     the goroutine-append ordering) of the reference's FailureIndexes.
 
-    Per-request shape: two Spark jobs of one task each, and no
-    Python-worker task. The verdict job collects ``gateway.ingest``'s
-    outcome frame — one projection chain over the request rows, with
-    no union — so the Avro encode (a JVM expression) runs once, and
-    only for valid rows. The sink job publishes the collected bytes of
-    the accepted rows, in request order, from a local relation: the
+    Per-request shape: one Spark job of one task, and no Python-worker
+    task. The verdict runs no job: ``gateway.ingest``'s outcome frame
+    is one projection chain over the request's local relation, with no
+    union, so the optimizer folds it into a local relation, evaluating
+    the Avro encode (a JVM expression) once in the driver JVM, and only
+    for valid rows. The sink job publishes the collected bytes of the
+    accepted rows, in request order, from a local relation: the
     published payloads are the bytes the size check saw, and no encode
     or ``current_timestamp()`` is re-run for them."""
     if not events:
@@ -136,12 +139,7 @@ def ingest_events(
     rows, reasons = _wire_rows(events)
     if not rows:
         return sorted(reasons), reasons
-    # one partition per request: the verdict is ONE task, and the bus
-    # write commits one part file; both frames are local relations
-    # with no locality preference to wait on. The coalesce also keeps
-    # the projections off the local relation, which the optimizer
-    # would otherwise evaluate on the driver, encode included.
-    wire = local_frame(spark, rows, _HTTP_WIRE_SCHEMA).coalesce(1)
+    wire = local_frame(spark, rows, _HTTP_WIRE_SCHEMA)
     outcome = ingest(spark, wire, max_message_bytes).outcome.selectExpr(
         "_idx", "reject_reason", "sink_topic AS topic", "value"
     )
@@ -154,6 +152,7 @@ def ingest_events(
     if sink is not None:
         accepted.sort()
         payloads = [(topic, None, value) for _, topic, value in accepted]
+        # one partition: the bus write is one task and one part file
         sink(local_frame(spark, payloads, PAYLOAD_SCHEMA).coalesce(1))
     return sorted(reasons), reasons
 

@@ -308,18 +308,19 @@ def _group_counts(spark, group: str) -> tuple[int, int]:
     return len(jobs), tasks
 
 
-def _executed_plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
+def _plan(df, phase: str) -> str:
+    return getattr(df._jdf.queryExecution(), phase)().toString()
 
 
 def test_ingest_events_request_shape(spark, tmp_path, monkeypatch):
-    """One 50-event request is two Spark jobs and no Python-worker
-    task: a verdict job of one task, whose plan is one projection chain
-    over the request rows (no union) with no Python eval node and
-    exactly one call of the Avro encode (a JVM expression), and a
-    publish job of one task and one part file that reads a local
-    relation (no RDD scan, no Python UDF). Counts, not timings, so the
-    shape holds on any host."""
+    """One 50-event request is one Spark job and no Python-worker task.
+    The verdict runs no job: its plan is one projection chain over the
+    request rows (no union, no Python eval node, exactly one call of
+    the Avro encode, a JVM expression) on a local relation, which the
+    optimizer folds into a local relation. The publish is one job of
+    one task and one part file that reads a local relation (no RDD
+    scan, no Python UDF). Counts, not timings, so the shape holds on
+    any host."""
     import os
 
     sc = spark.sparkContext
@@ -353,7 +354,7 @@ def test_ingest_events_request_shape(spark, tmp_path, monkeypatch):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert fail == [7]
 
-    assert _group_counts(spark, "shape-verdict") == (1, 1)
+    assert _group_counts(spark, "shape-verdict") == (0, 0)
     assert _group_counts(spark, "shape-publish") == (1, 1)
     (new_batch,) = set(os.listdir(bus.root)) - before
     parts = [f for f in os.listdir(os.path.join(bus.root, new_batch))
@@ -361,14 +362,67 @@ def test_ingest_events_request_shape(spark, tmp_path, monkeypatch):
     assert len(parts) == 1
 
     (outcome,) = collected
-    outcome_plan = _executed_plan(outcome)
-    assert outcome_plan.count("EvalPython") == 0, outcome_plan
-    assert "Union" not in outcome_plan, outcome_plan
-    assert outcome_plan.count("egw_avro_encode(") == 1, outcome_plan
+    optimized = _plan(outcome, "optimizedPlan")
+    assert optimized.startswith("LocalRelation "), optimized
+    analyzed = _plan(outcome, "analyzed")
+    assert analyzed.count("egw_avro_encode(") == 1, analyzed
+    assert "Union" not in analyzed, analyzed
+    assert "EvalPython" not in _plan(outcome, "executedPlan")
     (payloads,) = published
-    sink_plan = _executed_plan(payloads)
+    sink_plan = _plan(payloads, "executedPlan")
     for marker in ("ExistingRDD", "PythonRDD", "EvalPython", "PythonUDF"):
         assert marker not in sink_plan, sink_plan
+
+
+def test_ingest_events_at_request_ceiling(spark, tmp_path):
+    """One request of ``MAX_REQUEST_EVENTS`` events, the largest this
+    endpoint accepts, through the driver-evaluated verdict: exact
+    failure indexes and reasons, the bus holds exactly the accepted
+    rows in request order, each payload decodes back to its event,
+    and every accepted row carries the one ``serverTimestamp`` of the
+    request's single evaluation. A JSON null prop value is kept in its
+    JSON form ("null"), so this endpoint cannot send a null_prop_value
+    reject; the Gateway path covers that reason."""
+    from eventsgateway_spark.ingest_http import MAX_REQUEST_EVENTS
+
+    bus = FileBus(spark, str(tmp_path / "bus"))
+    events = [
+        {**GOOD, "id": f"c-{i:05d}", "props": {"n": str(i)},
+         "timestamp": GOOD["timestamp"] + i}
+        for i in range(MAX_REQUEST_EVENTS)
+    ]
+    want = {}
+    for i in (0, 1234, MAX_REQUEST_EVENTS - 1):
+        events[i] = {**events[i], "id": ""}
+        want[i] = "missing_id"
+    for i in (17, 5000):
+        events[i] = {**events[i], "timestamp": 0}
+        want[i] = "missing_timestamp"
+    for i in (99, 7777):
+        events[i] = {**events[i], "name": ""}
+        want[i] = "missing_name"
+    events[2500] = {**events[2500], "topic": None}
+    want[2500] = "missing_topic"
+    events[3333] = {**events[3333], "props": {"big": "x" * 600}}
+    want[3333] = "too_large"
+    events[4444] = {**events[4444], "props": {"k": None}}  # accepted as "null"
+
+    fail, reasons = ingest_events(spark, events, bus.produce, 500)
+    assert fail == sorted(want)
+    assert reasons == want
+
+    rows = bus.consume_batch().collect()
+    accepted = [ev for i, ev in enumerate(events) if i not in want]
+    assert len(rows) == len(accepted) == MAX_REQUEST_EVENTS - len(want)
+    recs = [decode_event(bytes(r["value"])) for r in rows]
+    assert [r["id"] for r in recs] == [ev["id"] for ev in accepted]
+    for rec, ev in zip(recs, accepted):
+        props = {k: "null" if v is None else v for k, v in ev["props"].items()}
+        assert (rec["name"], rec["props"], rec["clientTimestamp"]) == (
+            ev["name"], props, ev["timestamp"])
+    assert {r["topic"] for r in rows} == {"sv-uploads-sometopic"}
+    (server_ts,) = {r["serverTimestamp"] for r in recs}
+    assert server_ts > 0
 
 
 def test_verdict_and_publish_from_one_evaluation(spark, tmp_path):

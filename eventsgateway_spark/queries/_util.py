@@ -23,7 +23,7 @@ DuckDB oracle):
 from __future__ import annotations
 
 import os
-from urllib.parse import urlparse
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -109,7 +109,7 @@ def input_bytes(df: DataFrame) -> int:
         return 1 << 60
     total = 0
     for uri in files:
-        path = urlparse(uri).path or uri
+        path = unquote(urlparse(uri).path) or uri
         try:
             total += os.path.getsize(path)
         except OSError:

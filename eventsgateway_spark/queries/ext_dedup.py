@@ -242,57 +242,21 @@ _SH_CTES = f"""
 # ---------------------------------------------------------------------------
 
 
-# Above this input size the keep-first key table stops being reliably
-# broadcastable (it is corpus-sized: one row per distinct key) and the
-# join-back form starts paying a second computation of the input
-# lineage; the window form is the scale answer. Below it, AQE
-# broadcasts the slim key->min table and the full-width frame never
-# shuffles at all — measured 1.9x faster on q60 at sf0.1.
-KEEP_FIRST_WINDOW_BYTES = 256 << 20
-
-
-def with_keep_first(
-    df: DataFrame, key: str, id_col: str = "doc_id", force: str | None = None
-) -> DataFrame:
+def with_keep_first(df: DataFrame, key: str, id_col: str = "doc_id") -> DataFrame:
     """Annotate every row with ``keep_id`` = min(``id_col``) within its
     ``key`` group — the keep-first primitive under q60's exact-dedup
-    stage and the streaming corpus-prep screen. Two row-identical
-    plans, chosen by input size (tests pin their equality):
-
-    - small inputs: groupBy-min + equi-join back. AQE broadcasts the
-      slim (key, keep_id) table, so the full-width frame is never
-      shuffled; the input lineage is computed twice, which is cheap
-      exactly when the input is small.
-    - at scale (or unknown size — huge-counts-as-safe, same direction
-      as spread/pin): ``min(id) over (partition by key)`` — ONE
-      computation of the input and ONE full-width shuffle, where the
-      join form's broadcast dies (the key table is corpus-sized) and
-      its double lineage computation is a second full corpus scan.
-      Keys are near-unique (exact duplicates only), so per-key window
-      partitions stay tiny.
-
-    ``force`` overrides the size heuristic (``"join"``/``"window"``)
-    for callers that know their input better than ``inputFiles`` does
-    — e.g. streaming micro-batches arrive as checkpointed RDDs with no
-    measurable leaf files (would default to the window branch) but are
-    bounded by the trigger, so their key table always broadcasts."""
-    from eventsgateway_spark.queries._util import input_bytes
-
-    mode = force
-    if mode is None:
-        mode = (
-            "window" if input_bytes(df) > KEEP_FIRST_WINDOW_BYTES else "join"
-        )
-    if mode == "window":
-        return df.withColumn(
-            "keep_id", F.min(id_col).over(Window.partitionBy(key))
-        )
-    if mode != "join":
-        raise ValueError(f"unknown keep-first mode {mode!r} (join|window)")
-    # Null-safe equi-join (<=>) so a null key behaves exactly like the
-    # window branch (nulls form one group) instead of silently dropping
-    # rows — Catalyst still extracts EqualNullSafe as an equi-join key,
-    # so the slim table broadcasts the same as plain equality.
+    stage and the streaming corpus-prep screen. groupBy-min + equi-join
+    back: AQE broadcasts the slim (key, keep_id) table, so the
+    full-width frame is never shuffled, and AQE falls back to a
+    shuffle join if the key table outgrows the broadcast threshold.
+    The input lineage is evaluated by both join sides, so a caller
+    that reads an expensive frame pins it first (q60 does; with that
+    pin, q60 at sf0.1 times the same as with a ``min(id) over
+    (partition by key)`` window: 2.62 vs 2.67 s median, local[4])."""
+    # Null-safe equi-join (<=>) so null keys form one group, as a
+    # window partition would, instead of silently dropping rows —
+    # Catalyst still extracts EqualNullSafe as an equi-join key, so the
+    # slim table broadcasts the same as plain equality.
     if "_kf_key" in df.columns:
         raise ValueError("with_keep_first reserves column name '_kf_key'")
     keep1 = (
@@ -302,55 +266,6 @@ def with_keep_first(
     )
     joined = df.join(keep1, F.col(key).eqNullSafe(F.col("_kf_key")))
     return joined.select(*df.columns, "keep_id")
-
-
-def with_owner_min(
-    w: DataFrame,
-    key: str = "h",
-    id_col: str = "doc_id",
-    mode: str | None = None,
-) -> DataFrame:
-    """Annotate every row with ``owner_id`` = min(``id_col``) within
-    its ``key`` group — q72's substring-window ownership step. Two
-    row-identical plans (tests pin their equality):
-
-    - ``window`` (default): ``min(id) over (partition by key)`` — ONE
-      evaluation of the input and ONE shuffle (measured 2.2x faster at
-      the x100 probe, SCALE.md round 9). Caveat: a window function
-      gets no map-side partial aggregation and AQE cannot split a
-      window partition, so ONE boilerplate window shared by millions
-      of documents (license headers, templated pages — exactly the
-      repeated-substring content q72 hunts) lands one row per
-      containing doc in a single task.
-    - ``agg``: groupBy-min + join back. The groupBy collapses a hot
-      key MAP-SIDE (partial aggregation — min is algebraic, so no
-      salting is needed on top), and the join-back skew is AQE-
-      splittable; the price is the second shuffle and a second
-      evaluation of the input lineage the round-9 rewrite removed.
-      The hot-key fallback for corpora where the window form
-      straggles.
-
-    ``mode=None`` (or "") resolves to ``window``."""
-    mode = mode or "window"
-    if mode == "window":
-        return w.withColumn(
-            "owner_id", F.min(id_col).over(Window.partitionBy(key))
-        )
-    if mode != "agg":
-        raise ValueError(f"unknown ownership mode {mode!r} (window|agg)")
-    # null-safe join for the same reason as with_keep_first: q72's md5
-    # key is never null, but a generic caller's null keys must form one
-    # group in BOTH modes (window partitionBy groups nulls together)
-    if "_om_key" in w.columns:
-        raise ValueError("with_owner_min reserves column name '_om_key'")
-    owners = (
-        w.groupBy(key)
-        .agg(F.min(id_col).alias("owner_id"))
-        .withColumnRenamed(key, "_om_key")
-    )
-    joined = w.join(owners, F.col(key).eqNullSafe(F.col("_om_key")))
-    return joined.select(*w.columns, "owner_id")
-
 
 
 @query(
@@ -944,20 +859,6 @@ def hamming_band_pairs(
 
 SUBSTR_W = 8  # window width in tokens (fixture docs are ~30 tokens)
 
-# Auto-switch bound for q72's ownership mode. Window-function
-# ownership wins every measured probe (2.2× at the ×100 synthetic
-# corpus, still 1.7× at 270k rows on one hot key — SCALE.md rounds
-# 9-10), so it holds well past fixture scale; the hazard it cannot
-# escape is a single boilerplate window (license header, templated
-# page) owned by MILLIONS of docs — one indivisible window task. The
-# probes bound the safe region to "hot keys in the 10^5 class", which
-# a few GiB of documents cannot exceed; past 4 GiB the corpus can hold
-# 10^6+ copies of one window and the agg form's map-side partial min +
-# AQE-splittable join-back is the safe shape. Unknown input size
-# counts as huge (input_bytes sentinel) — the safe direction.
-Q72_AGG_BYTES = 4 << 30
-
-
 @query(
     "q72_substring_dedup",
     declared=False,  # rotation-pool member (see queries/__init__.py ROTATION)
@@ -993,20 +894,14 @@ def q72_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (keep-first ownership), and a drop verdict when >=50% of the doc's
     windows are borrowed — the distributed analog of suffix-array
     substring dedup. Shape: window explode (md5 of the joined slice) →
-    ownership via ``with_owner_min`` → one (doc) aggregate. All
-    equi-keyed; linear in corpus tokens.
+    ownership as ``min(doc_id) over (partition by h)`` → one (doc)
+    aggregate. All equi-keyed; linear in corpus tokens. The window
+    ownership is ONE evaluation of the input and ONE shuffle; a window
+    partition is one indivisible task, and SCALE.md bounds it at 270k
+    rows per hot ``h`` (still 1.7x faster than a groupBy-min join-back
+    there)."""
+    from eventsgateway_spark.queries._util import doc_tokens_frame
 
-    Ownership mode is SIZE-AWARE since round 11 (VERDICT r10 #3):
-    ``window`` (one shuffle, 1.7-2.2× faster in every probe up to the
-    270k-rows-per-hot-key round-10 measurement) while the corpus is
-    under Q72_AGG_BYTES; above it the ``agg`` form takes over — its
-    map-side partial min collapses a boilerplate window shared by
-    millions of docs BEFORE the shuffle and its join-back skew is
-    AQE-splittable, where a window partition is one indivisible task."""
-    from eventsgateway_spark.queries._util import doc_tokens_frame, input_bytes
-
-    docs = table(spark, sf_dir, "documents")
-    mode = "agg" if input_bytes(docs) > Q72_AGG_BYTES else "window"
     toks = doc_tokens_frame(spark, sf_dir).select("doc_id", "toks")
     # The short-doc guard lives INSIDE the generator (null -> no rows)
     # instead of a filter: `filter(size(toks) >= W)` gets predicate-
@@ -1030,7 +925,7 @@ def q72_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("h"),
     )
-    owned = with_owner_min(w, mode=mode)
+    owned = w.withColumn("owner_id", F.min("doc_id").over(Window.partitionBy("h")))
     per_doc = (
         owned.groupBy("doc_id")
         .agg(

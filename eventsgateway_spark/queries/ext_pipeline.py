@@ -112,32 +112,20 @@ def q60_corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     previous shape paid it 4x (once per stage)."""
     from eventsgateway_spark.queries._util import doc_tokens_frame
 
-    docs = table(spark, sf_dir, "documents").select("doc_id", "source", "text")
     with_toks = doc_tokens_frame(spark, sf_dir).select("doc_id", "source", "toks")
 
-    # r15 (guide §1/§5): when keep-first takes its JOIN branch (input
-    # below KEEP_FIRST_WINDOW_BYTES), the tokenized frame is computed
-    # by BOTH join sides plus the eval-gram branch — persist it so the
-    # tokenizer runs once per corpus, not three times. Above the
-    # window threshold the window branch already evaluates with_toks
-    # ONCE and the eval-gram branch is better served by the raw scan's
-    # source= pushdown than by materializing a corpus-scale tokenized
-    # cache, so the pin is deliberately conditioned on the same size
-    # gate (identity at fixture scale either way — driver plan/hash
-    # untouched). Measured with the shingle pin below: q60 floor
-    # 8.6 → 5.3 s at sf0.1 (interleaved A/B, round-15). Mode for ALL
-    # FOUR q60 pins re-measured round-15 after pin(persist) went lazy:
-    # interleaved env-forced A/B reads checkpoint 4.00 / persist 5.62 /
-    # off 4.80 s (q60 min-of-3) — the persist write of wide
-    # array<string> toks columns into the block store costs more than
-    # the checkpoint's extra job, so checkpoint everywhere.
-    from eventsgateway_spark.queries._util import input_bytes
-    from eventsgateway_spark.queries.ext_dedup import (
-        KEEP_FIRST_WINDOW_BYTES,
-    )
-
-    if input_bytes(docs) <= KEEP_FIRST_WINDOW_BYTES:
-        with_toks = pin(with_toks, mode="checkpoint")
+    # r15: keep-first's join-back evaluates the
+    # tokenized frame on BOTH join sides, plus the eval-gram branch —
+    # pin it so the tokenizer runs once per corpus, not three times
+    # (identity at fixture scale, so the oracle-checked plan is unchanged).
+    # Measured with the shingle pin below: q60 floor 8.6 → 5.3 s at
+    # sf0.1 (interleaved A/B, round-15). Mode for ALL FOUR q60 pins
+    # re-measured round-15 after pin(persist) went lazy: interleaved
+    # env-forced A/B reads checkpoint 4.00 / persist 5.62 / off 4.80 s
+    # (q60 min-of-3) — the persist write of wide array<string> toks
+    # columns into the block store costs more than the checkpoint's
+    # extra job, so checkpoint everywhere.
+    with_toks = pin(with_toks, mode="checkpoint")
 
     # quality floor
     q = with_toks.filter(F.size("toks") >= MIN_TOKENS)
@@ -146,8 +134,7 @@ def q60_corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     canon = q.withColumn(
         "k", F.array_join(F.sort_array(F.array_distinct("toks")), " ")
     )
-    # keep-first via the size-aware primitive (round-9): broadcast
-    # join-back below 256 MB input, one window shuffle above — see
+    # keep-first via the broadcast join-back primitive — see
     # ext_dedup.with_keep_first. pin: s1 fans out to the shingle path
     # AND the survivor join — the exact-dedup lineage would otherwise
     # re-execute per consumer (identity at fixture scale). Checkpoint

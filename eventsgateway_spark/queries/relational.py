@@ -631,14 +631,9 @@ def q57_spend_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the ordering carries a custkey tiebreak so every rank function
     is deterministic. The global window is the scale bound here, and
     it is a SINGLE-partition sort (Spark moves an unpartitioned
-    window's whole input to one task — WindowExec warns; corrected
-    round 10: this is NOT a range-partitioned exchange). Mode is
-    SIZE-AWARE since round 11 (the with_keep_first pattern, VERDICT
-    r10 #3): the single-task window is kept while the customer table —
-    the upper bound on the window's input rows — is under
-    Q57_PREFIX_BYTES; past that (or when the size is unknowable:
-    huge-counts-as-safe) the bit-identical distributed ``prefix`` twin
-    takes over automatically."""
+    window's whole input to one task — WindowExec warns; this is NOT
+    a range-partitioned exchange); SCALE.md puts that one task's
+    measured bound at ~1e8 customers."""
     o = table(spark, sf_dir, "orders")
     c = table(spark, sf_dir, "customer")
     s = (
@@ -646,97 +641,14 @@ def q57_spend_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_custkey")
         .agg(as_double(F.sum(money("o_totalprice"))).alias("spend"))
     )
-    from eventsgateway_spark.queries._util import input_bytes
-
-    mode = "prefix" if input_bytes(c) > Q57_PREFIX_BYTES else "window"
-    return with_global_rank_battery(s, mode=mode)
-
-
-# Auto-switch bound for q57's rank mode: the window input is one row
-# per customer, so the CUSTOMER table's on-disk size bounds it. 256 MiB
-# of customer parquet ≈ 1.3M customers ≈ ~20 MB of (custkey, spend)
-# rows in the single window task — comfortably one-task territory; the
-# prefix twin is bit-identical and fully distributed, so switching
-# early costs correctness nothing (same 256 MiB bound as
-# KEEP_FIRST_WINDOW_BYTES, and unknown sizes count as huge — the safe
-# direction).
-Q57_PREFIX_BYTES = 256 << 20
-
-
-def with_global_rank_battery(s: DataFrame, mode: str | None = None) -> DataFrame:
-    """q57's distribution battery with two row-identical plans:
-
-    - ``window`` (default): native ntile/percent_rank/cume_dist over
-      one unpartitioned window — a SINGLE-task sort of the aggregate,
-      fine through ~1e8 rows.
-    - ``prefix``: the 100 TB path named in SCALE.md — exact global
-      row_number from the q61-style two-phase bucketed prefix sum
-      (``operators.skew.skew_safe_running_sum`` with no keys: phase-1
-      windows are per spend-range bucket, phase-2's offset window runs
-      over one row per bucket), then ntile/percent_rank/cume_dist
-      derived ARITHMETICALLY from (rank, N): with the custkey
-      tiebreak there are no order ties, so rank == row_number and
-
-          ntile(n):     first (N mod n) buckets hold ceil(N/n) rows
-          percent_rank: (rank-1)/(N-1)   (0.0 when N == 1)
-          cume_dist:    rank/N
-
-      All integer math in the ntile branch (ceil via (x+d-1) div d);
-      the two ratios are the same two-integer IEEE divisions the
-      native functions perform, so results are bit-identical
-      (equality pinned by tests, incl. an N-mod-10 != 0 case)."""
-    mode = mode or "window"
-    if mode == "window":
-        w = W.orderBy(F.desc("spend"), F.asc("c_custkey"))
-        return (
-            s.select(
-                "c_custkey",
-                "spend",
-                F.ntile(10).over(w).alias("decile"),
-                F.percent_rank().over(w).alias("pct_rank"),
-                F.cume_dist().over(w).alias("cume"),
-            )
-            .orderBy(F.desc("spend"), F.asc("c_custkey"))
-        )
-    if mode != "prefix":
-        raise ValueError(f"unknown rank mode {mode!r} (window|prefix)")
-    from eventsgateway_spark.operators.skew import skew_safe_running_sum
-
-    ranked = skew_safe_running_sum(
-        s,
-        keys=[],
-        order_by=[F.desc("spend"), F.asc("c_custkey")],
-        value=F.lit(1),
-        # order-aligned bucket for DESC spend: higher spend -> smaller
-        # bucket id, equal spends share a bucket (ties stay inside one
-        # phase-1 window, resolved by the custkey tiebreak)
-        bucket=(-F.floor(F.col("spend") / 100.0)).cast("long"),
-        rn_col="_r",
-        sum_col="_unused",
-    ).drop("_unused")
-    tot = s.agg(F.count(F.lit(1)).alias("_N"))
-    nt = F.expr(
-        """CASE WHEN _r <= (_N % 10) * (_N div 10 + 1)
-                THEN (_r + _N div 10) div (_N div 10 + 1)
-                ELSE _N % 10 + (_r - (_N % 10) * (_N div 10 + 1)
-                                + greatest(_N div 10, 1) - 1)
-                     div greatest(_N div 10, 1) END"""
-    )
-    return (
-        ranked.crossJoin(F.broadcast(tot))
-        .select(
-            "c_custkey",
-            "spend",
-            nt.cast("int").alias("decile"),
-            F.when(F.col("_N") == 1, F.lit(0.0))
-            .otherwise(
-                (F.col("_r") - 1).cast("double") / (F.col("_N") - 1).cast("double")
-            )
-            .alias("pct_rank"),
-            (F.col("_r").cast("double") / F.col("_N").cast("double")).alias("cume"),
-        )
-        .orderBy(F.desc("spend"), F.asc("c_custkey"))
-    )
+    w = W.orderBy(F.desc("spend"), F.asc("c_custkey"))
+    return s.select(
+        "c_custkey",
+        "spend",
+        F.ntile(10).over(w).alias("decile"),
+        F.percent_rank().over(w).alias("pct_rank"),
+        F.cume_dist().over(w).alias("cume"),
+    ).orderBy(F.desc("spend"), F.asc("c_custkey"))
 
 
 # ---------------------------------------------------------------------------

@@ -166,12 +166,7 @@ def corpus_prep_stream(
         canon = kept_all.withColumn(
             "k", F.array_join(F.sort_array(F.array_distinct(tokens("text"))), " ")
         )
-        # keep-first via the shared primitive, forced to the broadcast
-        # join-back branch: micro-batches arrive as checkpointed RDDs
-        # (no measurable input files -> the size heuristic would pick
-        # the window branch) but are bounded by the trigger, so the
-        # slim key table always broadcasts — ext_dedup.with_keep_first
-        resolved = _pin(with_keep_first(canon, "k", force="join"))  # 2 consumers
+        resolved = _pin(with_keep_first(canon, "k"))  # 2 consumers
         exact_evid = resolved.filter(F.col("doc_id") != F.col("keep_id")).select(
             "doc_id",
             F.col("keep_id").alias("corpus_id"),

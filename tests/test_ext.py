@@ -540,6 +540,28 @@ def test_bench_plan_parity(spark, monkeypatch):
         assert rows(n) == expected and len(expected) > 0, n
 
 
+def test_input_bytes_decodes_percent_encoded_paths(spark, tmp_path):
+    """inputFiles() returns URIs (a space arrives as %20); input_bytes
+    must size the decoded paths, not fall back to its unknown-size
+    sentinel, so a fixture under such a directory is still
+    fixture-scale."""
+    import os
+
+    from eventsgateway_spark.queries._util import input_bytes, is_fixture_scale
+
+    path = tmp_path / "a dir" / "t.parquet"
+    spark.range(10).coalesce(1).write.parquet(str(path))
+    df = spark.read.parquet(str(path))
+    assert any("%20" in uri for uri in df.inputFiles())
+    want = sum(
+        os.path.getsize(path / f)
+        for f in os.listdir(path)
+        if f.endswith(".parquet")
+    )
+    assert input_bytes(df) == want
+    assert is_fixture_scale(df)
+
+
 def test_semd_knn_gemm_kernel_parity(spark, monkeypatch, tmp_path):
     """The r15 within-cell GEMM kernels (q70 prior / q94 3-NN vote)
     must be row-identical to the fixture-scale fold plans — including
@@ -994,14 +1016,11 @@ def test_dedup_cluster_labels_shared_and_cached(spark):
     assert set(q32_labels) == pair_nodes
 
 
-def test_with_keep_first_branches_agree(spark):
-    """The size-aware keep-first primitive (ext_dedup.with_keep_first)
-    must produce row-identical results from its broadcast-join branch
-    (small inputs) and its window branch (corpus scale / unknown
-    size) — q60's exact-dedup stage and the streaming corpus-prep
-    screen switch between them by input size."""
-    from pyspark.sql import functions as F
-
+def test_with_keep_first_expected_rows(spark):
+    """ext_dedup.with_keep_first (q60's exact-dedup stage and the
+    streaming corpus-prep screen) annotates every row with its key
+    group's minimum doc_id; null keys form ONE group (the join-back is
+    null-safe <=>), so no caller silently drops null-keyed rows."""
     from eventsgateway_spark.queries.ext_dedup import with_keep_first
 
     df = spark.createDataFrame(
@@ -1009,89 +1028,15 @@ def test_with_keep_first_branches_agree(spark):
          (7, None), (6, None)],
         "doc_id long, k string",
     )
-    out = {}
-    for mode in ("join", "window"):
-        rows = sorted(
-            (r["doc_id"], r["k"], r["keep_id"])
-            for r in with_keep_first(df, "k", force=mode).collect()
-        )
-        out[mode] = rows
-    # null keys form ONE group in both branches (join uses <=>), so the
-    # output is input-size-independent for any caller, not only the
-    # null-free q60 path
-    assert out["join"] == out["window"]
-    assert out["join"] == [
+    rows = sorted(
+        (r["doc_id"], r["k"], r["keep_id"])
+        for r in with_keep_first(df, "k").collect()
+    )
+    assert rows == [
         (1, "a", 1), (2, "b", 2), (3, "a", 1),
         (4, "c", 4), (5, "a", 1), (6, None, 6),
         (7, None, 6), (9, "c", 4),
     ]
-
-
-def test_with_owner_min_modes_agree(spark, monkeypatch):
-    """q72's ownership step has two row-identical plans: the default
-    window form (one shuffle) and the groupBy+join 'agg' fallback for
-    hot-key corpora (map-side combinable, AQE-splittable join-back).
-    Equality pinned on data with a deliberately hot key, and q72
-    itself must produce identical rows when its size bound forces the
-    agg form."""
-    import pytest
-
-    from eventsgateway_spark.queries.ext_dedup import with_owner_min
-
-    rows = [(d, "hot") for d in range(1, 51)] + [(7, "rare"), (3, "rare")]
-    w = spark.createDataFrame(rows, "doc_id long, h string")
-    out = {}
-    for mode in ("window", "agg"):
-        out[mode] = sorted(
-            (r["doc_id"], r["h"], r["owner_id"])
-            for r in with_owner_min(w, mode=mode).collect()
-        )
-    assert out["window"] == out["agg"]
-    assert {(d, h, o) for d, h, o in out["agg"] if h == "rare"} == {
-        (7, "rare", 3), (3, "rare", 3)
-    }
-    assert all(o == 1 for _, h, o in out["agg"] if h == "hot")
-    with pytest.raises(ValueError, match="ownership mode"):
-        with_owner_min(w, mode="salted")
-
-    from eventsgateway_spark.queries import QUERIES
-
-    import eventsgateway_spark.queries.ext_dedup as ed
-
-    ref = [tuple(r) for r in QUERIES["q72_substring_dedup"](spark, SF_ORACLE).collect()]
-    monkeypatch.setattr(ed, "Q72_AGG_BYTES", 0)
-    alt = [tuple(r) for r in QUERIES["q72_substring_dedup"](spark, SF_ORACLE).collect()]
-    assert ref == alt
-
-
-def test_q57_rank_modes_agree(spark, monkeypatch):
-    """with_global_rank_battery's prefix mode (distributed exact rank +
-    arithmetic ntile/percent_rank/cume_dist — the 100 TB path) is
-    row-identical to the native unpartitioned-window mode, including
-    the ntile remainder distribution (N mod 10 != 0), the N=1
-    percent_rank edge, and duplicate spends resolved by the custkey
-    tiebreak."""
-    import pytest
-
-    import eventsgateway_spark.queries.relational as rel
-    from eventsgateway_spark.queries import QUERIES
-    from eventsgateway_spark.queries.relational import with_global_rank_battery
-
-    for n in (1, 7, 27, 40):
-        s = spark.createDataFrame(
-            [(i, float(1000 - 3 * (i // 2))) for i in range(n)],  # paired ties
-            "c_custkey long, spend double",
-        )
-        a = [tuple(r) for r in with_global_rank_battery(s, "window").collect()]
-        b = [tuple(r) for r in with_global_rank_battery(s, "prefix").collect()]
-        assert a == b, f"N={n}"
-    with pytest.raises(ValueError, match="rank mode"):
-        with_global_rank_battery(s, "salted")
-
-    ref = [tuple(r) for r in QUERIES["q57_spend_deciles"](spark, SF_ORACLE).collect()]
-    monkeypatch.setattr(rel, "Q57_PREFIX_BYTES", 0)
-    alt = [tuple(r) for r in QUERIES["q57_spend_deciles"](spark, SF_ORACLE).collect()]
-    assert ref == alt
 
 
 def test_quantized_ann_agrees_with_exact(spark):

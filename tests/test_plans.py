@@ -490,22 +490,16 @@ def test_decon_family_tokenizes_once(spark):
         )
 
 
-def test_scale_mode_auto_pick_at_fixture_scale(spark):
-    """q57 (rank battery) and q72 (substring ownership) switch their
-    scale paths on measured input size since round 11 (VERDICT r10 #3
-    — the with_keep_first pattern); at fixture scale both must pick
-    the measured-faster small-scale shape: q57 the native window
-    battery (plan carries ntile), q72 window-function ownership (a
-    partitioned WindowExec on the hash key, no ownership join)."""
+def test_q57_q72_window_plan_shape(spark):
+    """q57's rank battery is native window functions over one
+    unpartitioned window (the plan carries ntile), and q72's substring
+    ownership is a window function partitioned by the hash key (a
+    WindowExec on h, no ownership join). Each has this one plan at
+    every input size; SCALE.md records the measured bounds."""
     q57 = _plan(spark, "q57_spend_deciles")
-    assert "ntile" in q57  # window mode; prefix derives ntile arithmetically
+    assert "ntile" in q57
     q72 = _plan(spark, "q72_substring_dedup")
-    # window-mode ownership: min(doc_id) as a window function over h
     assert "windowspecdefinition(h" in q72
-    # and size-unknowable inputs take the distributed twin (the
-    # huge-counts-as-safe direction): exercised by the mode-equality
-    # tests in test_ext.py (size bound patched to 0) plus
-    # input_bytes' sentinel.
 
 
 def test_q33_norms_precomputed_below_join(spark):
